@@ -3243,15 +3243,7 @@ object SparkEntry {
             unix_millis(col("ts")), col("event_id"), col("event_type")))
         .groupBy(col("from2_state"), col("from1_state"), col("to_state"))
         .agg(count(lit(1)).as("n"))
-      counts
-        .join(counts.groupBy(col("from2_state"), col("from1_state"))
-          .agg(sum(col("n")).as("n_from")),
-          Seq("from2_state", "from1_state"))
-        .withColumn("prob",
-          floor(col("n").cast("double") / col("n_from").cast("double")
-            * 1000000d) / 1000000d)
-        .select(col("from2_state"), col("from1_state"), col("to_state"),
-          col("n"), col("n_from"), col("prob"))
+      CoreOps.withTransitionProbs(counts, Seq("from2_state", "from1_state"))
     }),
     // next-event prediction table: each from_state's top-2 successors by
     // count — the transition matrix composed with a PARTITIONED
@@ -3326,14 +3318,7 @@ object SparkEntry {
             unix_millis(col("ts")), col("event_id"), col("event_type")))
         .groupBy(col("from_state"), col("to_state"))
         .agg(count(lit(1)).as("n"))
-      counts
-        .join(counts.groupBy(col("from_state"))
-          .agg(sum(col("n")).as("n_from")), Seq("from_state"))
-        .withColumn("prob",
-          floor(col("n").cast("double") / col("n_from").cast("double")
-            * 1000000d) / 1000000d)
-        .select(col("from_state"), col("to_state"), col("n"), col("n_from"),
-          col("prob"))
+      CoreOps.withTransitionProbs(counts, Seq("from_state"))
     }),
     // drift report: the one-pass stacked profile on each of two user
     // cohorts, joined on column name — counts exact, deltas single IEEE

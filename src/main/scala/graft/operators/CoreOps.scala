@@ -78,6 +78,16 @@ object CoreOps {
     }
   }
 
+  /** Eager cut of `d` (PlanProbe.cut) plus a timeRangeBucket over the CUT
+    * frame, bucket 0 everywhere when the column has no non-null value. The
+    * bounds aggregate reads the materialized rows, so the upstream runs
+    * once instead of once for the bounds and again for the checkpoint. */
+  private[operators] def cutWithRangeBucket(d: DataFrame, longCol: Column,
+                                            n: Int): (DataFrame, Column) = {
+    val cut = PlanProbe.cut(d)
+    (cut, timeRangeBucket(cut, longCol, n).getOrElse(lit(0)))
+  }
+
   // ─── §2.5 aggregations ────────────────────────────────────────────────────
 
   /** Keyed total: Flink `keyBy(user).reduce(sum)` collapsed to its final value
@@ -414,9 +424,9 @@ object CoreOps {
   /** One-pass numeric column profiler — the Deequ-style table summary a
     * pipeline logs before/after every stage: per column, row count, NULL
     * count, exact distinct count, min and max (as double). ONE aggregate
-    * job computes every metric for every column; the single result row is
-    * localCheckpointed and the per-column output rows are projections of
-    * it — profiling a 100 TB table is exactly one scan, however many
+    * job computes every metric for every column; the per-column output
+    * rows are projections of its single result row, exploded once —
+    * profiling a 100 TB table is exactly one scan, however many
     * columns. The distinct counts compile to one Expand (×columns) hash
     * aggregate — the same plan shape as q_cube, linear in columns, and the
     * only part of the profile that shuffles. Columns must be numeric
@@ -438,7 +448,7 @@ object CoreOps {
         min(col(c)).cast("double").as(s"_mn_$i"),
         max(col(c)).cast("double").as(s"_mx_$i"))
     }
-    val row = df.agg(count(lit(1)).as("_n"), aggs: _*).localCheckpoint(true)
+    val row = df.agg(count(lit(1)).as("_n"), aggs: _*)
     val stacked = cols.zipWithIndex.map { case (c, i) =>
       struct(lit(c).as("column"), col("_n").as("n_rows"),
         col(s"_nn_$i").as("n_nulls"), col(s"_nd_$i").as("n_distinct"),
@@ -466,7 +476,7 @@ object CoreOps {
         // a NULL predicate is a violation too: the check didn't hold
         sum(when(coalesce(pred, lit(false)), 0L).otherwise(1L)).as(s"_v_$i")
       }
-      val row = df.agg(aggs.head, aggs.tail: _*).localCheckpoint(true)
+      val row = df.agg(aggs.head, aggs.tail: _*)
       val stacked = rowChecks.zipWithIndex.map { case ((name, _), i) =>
         struct(lit(name).as("check"), col(s"_v_$i").as("violations"))
       }
@@ -891,8 +901,8 @@ object CoreOps {
   /** Full pairwise correlation matrix over integral columns in ONE
     * aggregate pass — exactCorr generalized to every column pair at once:
     * all C(k,2) pairs' moment sums (each with its OWN pairwise-non-NULL
-    * filter) accumulate in one job over one scan, the single result row is
-    * checkpointed, and the per-pair output rows are projections of it —
+    * filter) accumulate in one job over one scan, and the per-pair output
+    * rows are projections of its single result row —
     * the numericProfile shape. Same determinism contract as exactCorr:
     * decimal moment sums are order-independent, the closing double formula
     * is fixed, results bit-identical on any engine or partitioning. Same
@@ -917,7 +927,7 @@ object CoreOps {
         s(xd * yd, s"_sxy_${i}_$j"), s(xd * xd, s"_sxx_${i}_$j"),
         s(yd * yd, s"_syy_${i}_$j"))
     }
-    val row = df.agg(aggs.head, aggs.tail: _*).localCheckpoint(true)
+    val row = df.agg(aggs.head, aggs.tail: _*)
     val stacked = pairs.map { case (i, j) =>
       val n = col(s"_n_${i}_$j")
       val (sx, sy) = (col(s"_sx_${i}_$j"), col(s"_sy_${i}_$j"))
@@ -1940,13 +1950,13 @@ object CoreOps {
     val spark = df.sparkSession
     import spark.implicits._
     val n = math.max(spark.sessionState.conf.numShufflePartitions, 1)
-    val d = df.withColumn("_ord", ord)
-    val bucket = timeRangeBucket(d, col("_ord"), n).getOrElse(lit(0))
     // eager checkpoint: the bucketed frame feeds the per-bucket totals AND
     // the final window+join, and the upstream can be an expensive map (the
     // token-budget caller scores every document) — materialize once instead
     // of re-deriving it per consumer
-    val b = PlanProbe.cut(d.withColumn("_b", bucket))
+    val (cut, bucket) =
+      cutWithRangeBucket(df.withColumn("_ord", ord), col("_ord"), n)
+    val b = cut.withColumn("_b", bucket)
     // exclusive prefix totals across buckets: O(buckets) rows to the driver
     // (the withLateFlag pattern — an unpartitioned window, even over a tiny
     // frame, is the plan shape we ban), broadcast back
@@ -2013,9 +2023,9 @@ object CoreOps {
       col(value).isNull || abs(col(value).cast("double")) < lit(1e16),
       concat(lit(s"orderedPrefixSumDecimal: |$value| must stay below 10^16 " +
         "(DECIMAL(18,2) ingest bound); got "), col(value).cast("string")))
-    val d = df.filter(overflowGuard.isNull).withColumn("_ord", ord)
-    val bucket = timeRangeBucket(d, col("_ord"), n).getOrElse(lit(0))
-    val b = PlanProbe.cut(d.withColumn("_b", bucket))
+    val (cut, bucket) = cutWithRangeBucket(
+      df.filter(overflowGuard.isNull).withColumn("_ord", ord), col("_ord"), n)
+    val b = cut.withColumn("_b", bucket)
     val dec = col(value).cast("decimal(18,2)")
     // driver-bounded: O(buckets) rows, like every bucket collect here
     val bucketSums = b.groupBy(col("_b")).agg(sum(dec).as("_t"))
@@ -2141,9 +2151,10 @@ object CoreOps {
       .otherwise(greatest(least(ord.cast("double"), lit(4.6e18)),
         lit(-4.6e18)).cast("long"))
     val img = if (floating) img0 else ord.cast("long")
-    val d = df.withColumn("_nk_k", key).withColumn("_nk_o", ord)
-      .withColumn("_nk_g", img)
-    val rangeBucket = timeRangeBucket(d, col("_nk_g"), n).getOrElse(lit(0))
+    // eager checkpoint: the bucketed frame feeds the per-(key, bucket)
+    // totals AND the final window+join — materialize once
+    val (cut, rangeBucket) = cutWithRangeBucket(df.withColumn("_nk_k", key)
+      .withColumn("_nk_o", ord).withColumn("_nk_g", img), col("_nk_g"), n)
     // timeRangeBucket sends NULL ord to bucket 0 (Spark's NULLS FIRST);
     // the nullsLast form sends it to the last bucket instead, and the
     // within-bucket sort below places it after that bucket's non-NULLs.
@@ -2155,9 +2166,7 @@ object CoreOps {
     val bucket = if (nullsLast)
       when(col("_nk_g").isNull, lit(n - 1)).otherwise(nanLast)
     else nanLast
-    // eager checkpoint: the bucketed frame feeds the per-(key, bucket)
-    // totals AND the final window+join — materialize once
-    val b = d.withColumn("_nk_b", bucket).localCheckpoint(true)
+    val b = cut.withColumn("_nk_b", bucket)
     val ordCol = if (nullsLast) col("_nk_o").asc_nulls_last
       else col("_nk_o").asc
     val wLocal = Window.partitionBy(col("_nk_k"), col("_nk_b"))
@@ -2737,8 +2746,9 @@ object CoreOps {
     * pairs come from `lag` over a PARTITIONED window ordered by
     * (epoch-ms, tiebreak) — the tiebreak makes tied timestamps
     * deterministic, so the pair set is engine- and partitioning-exact.
-    * Then two hash aggs: (from,to) counts and per-from totals, joined back
-    * (O(states²) rows — tiny) for a trunc6'd row probability.
+    * Then one hash agg of (from,to) counts and a per-from total over them
+    * (withTransitionProbs, O(states²) rows — tiny) for a trunc6'd row
+    * probability.
     *
     * At 100 TB the only row-count-sized stage is the keyed window — the
     * same single exchange + sort as runningSum, uniform in the key; both
@@ -2758,22 +2768,31 @@ object CoreOps {
       .filter(col("_prev").isNotNull)
       .groupBy(col("_prev").as("from_state"), col(state).as("to_state"))
       .agg(count(lit(1)).as("n"))
+    withTransitionProbs(counts, Seq("from_state"))
+  }
+
+  /** The shared tail of the transition tables: appends `n_from` (the total
+    * count of the row's `from` state(s)) and the trunc6'd row probability
+    * `prob` to a (from..., to_state, n) counts frame. `n_from` is a sum over
+    * a window partitioned by `from` on the O(states^k) counts rows, so the
+    * count pipeline runs once: a self-join with the counts' own groupBy
+    * re-runs the upstream wherever Spark cannot reuse its exchange (the
+    * StateMachines walks' closures never compare equal). */
+  private[graft] def withTransitionProbs(counts: DataFrame,
+                                         from: Seq[String]): DataFrame =
     counts
-      .join(counts.groupBy(col("from_state")).agg(sum(col("n")).as("n_from")),
-        Seq("from_state"))
+      .withColumn("n_from",
+        sum(col("n")).over(Window.partitionBy(from.map(col): _*)))
       .withColumn("prob",
         floor(col("n").cast("double") / col("n_from").cast("double")
           * 1000000d) / 1000000d)
-      .select(col("from_state"), col("to_state"), col("n"), col("n_from"),
-        col("prob"))
-  }
 
   /** Second-order (Markov-2) transition table — p(next | the last TWO
     * states), the sharper next-event model when one step of history is
     * not enough ("view→click means purchase; error→click means retry").
     * Same shape as transitionMatrix with one more lag over the SAME
     * keyed window (both lags share one WindowExec pass), so the cost is
-    * identical: one keyed exchange + two hash aggs on O(states³) rows.
+    * identical: one keyed exchange + one hash agg on O(states³) rows.
     * Keys with fewer than three events contribute nothing. Counts are
     * exact int64; prob is the one trunc6'd division. Deterministic
     * (ts ms, tiebreak) order. Emits
@@ -2794,15 +2813,7 @@ object CoreOps {
       .groupBy(col("_p2").as("from2_state"), col("_p1").as("from1_state"),
         col(state).as("to_state"))
       .agg(count(lit(1)).as("n"))
-    counts
-      .join(counts.groupBy(col("from2_state"), col("from1_state"))
-        .agg(sum(col("n")).as("n_from")),
-        Seq("from2_state", "from1_state"))
-      .withColumn("prob",
-        floor(col("n").cast("double") / col("n_from").cast("double")
-          * 1000000d) / 1000000d)
-      .select(col("from2_state"), col("from1_state"), col("to_state"),
-        col("n"), col("n_from"), col("prob"))
+    withTransitionProbs(counts, Seq("from2_state", "from1_state"))
   }
 
   /** Slowly-changing-dimension type-2 intervals from an update log: each

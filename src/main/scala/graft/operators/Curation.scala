@@ -98,12 +98,11 @@ object Curation {
     }
     val spark = df.sparkSession
     val n = math.max(spark.sessionState.conf.numShufflePartitions, 1)
-    val d = clean.withColumn("bucket", bucketExpr)
     // sub-bucket is a function of the token count alone → equal counts share
     // a slice and the (tokens, id) order survives slice boundaries
-    val sub = CoreOps.timeRangeBucket(d, col(tokensCol).cast("long"), n)
-      .getOrElse(lit(0))
-    val b = d.withColumn("_b", sub).localCheckpoint(true)
+    val (cut, sub) = CoreOps.cutWithRangeBucket(
+      clean.withColumn("bucket", bucketExpr), col(tokensCol).cast("long"), n)
+    val b = cut.withColumn("_b", sub)
     val wLocal = Window.partitionBy(col("bucket"), col("_b"))
       .orderBy(col(tokensCol), col(id))
     val wPrefix = Window.partitionBy(col("bucket")).orderBy(col("_b"))

@@ -12,11 +12,20 @@ object StreamOps {
 
   /** E6: event-time tumbling count under a watermark
     * (chapter4/EventTimeOperations.java:136-149). Rows later than
-    * (max event time − lateness) are dropped by the state store; the drop
-    * count is observable via StreamingQueryProgress.stateOperators
-    * .numRowsDroppedByWatermark — the declarative counterpart of the
-    * reference's late-data side output (:146, :174-175). Semantics delta vs
-    * the punctuated wall-clock watermark (:102-124) documented in SURVEY §7.3.
+    * (max event time − lateness) are dropped; StreamingQueryProgress
+    * .stateOperators.numRowsDroppedByWatermark is the declarative
+    * counterpart of the reference's late-data side output (:146, :174-175),
+    * with two differences:
+    *  - the count aggregates partially before its state store, so the
+    *    counter counts dropped partial-aggregate groups (per late window
+    *    and partition), not events — the output, where every too-late event
+    *    is missing from its window's count, is the per-event record; the
+    *    same holds for every watermarked aggregate (keyedWindowCount too);
+    *  - Spark filters late rows against the PREVIOUS batch's watermark, so
+    *    a query's first data batch drops nothing, and a late row is dropped
+    *    only once an earlier batch has moved the watermark past it.
+    * Semantics delta vs the punctuated wall-clock watermark (:102-124)
+    * documented in SURVEY §7.3.
     */
   def eventTimeTumblingCount(df: DataFrame, ts: String, lateness: String,
                              duration: String): DataFrame =
@@ -50,9 +59,14 @@ object StreamOps {
     df.withWatermark(ts, lateness).dropDuplicatesWithinWatermark(keys)
 
   /** E5: windowed stream-stream equi-join (chapter3/WindowJoin.java:119-158).
-    * Both sides carry a watermark so the state store can expire buckets;
-    * within a (key, window) bucket the output is the cartesian of matches —
-    * identical to the batch twin (CoreOps.windowJoin). */
+    * Within a (key, window) bucket the output is the cartesian of matches —
+    * identical to the batch twin (CoreOps.windowJoin). Both sides carry a
+    * watermark, but it bounds nothing here: the join keys on the derived
+    * window start (a field of `window(ts)`, which carries no event-time
+    * watermark) and projects `ts` away, so Spark derives no state-eviction
+    * predicate. The join state is never evicted and grows with the stream,
+    * and a row later than the watermark still joins its window's matches.
+    * perfbench's E5 reference pins this behaviour. */
   def windowJoin(left: DataFrame, right: DataFrame, key: String, ts: String,
                  lateness: String, duration: String,
                  leftProj: Seq[(String, String)],

@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.CoreOps
+import graft.streaming.StateMachines
 import org.apache.spark.sql.functions._
 
 /** Unit suites for the relational/window core (SURVEY §2.3–§2.8) on inline
@@ -2211,5 +2212,43 @@ class CoreOpsSpec extends SparkSpec {
         Seq("v" -> "run"), Seq("t" -> "tt"))
     }
     assert(bad.getMessage.contains("must also be a `sums` value column"))
+  }
+
+  test("orderedPrefixSum, numericProfile and the transition tail each " +
+      "compute their upstream once across construction and execution") {
+    val n = 2000L
+    // a nondeterministic UDF is never duplicated or re-ordered by the
+    // optimizer, so its accumulator counts each evaluation of the upstream
+    def counted(name: String) = {
+      val acc = spark.sparkContext.longAccumulator(name)
+      (acc, udf { (x: Long) => acc.add(1L); x }.asNondeterministic())
+    }
+    val base = spark.range(n).toDF("id")
+      .withColumn("user_id", col("id") % 37)
+      .withColumn("event_type", (col("id") % 3).cast("string"))
+
+    val (prefixAcc, prefixUdf) = counted("prefix_upstream")
+    CoreOps.orderedPrefixSum(base.withColumn("ord", prefixUdf(col("id"))),
+      col("ord"), "id", "user_id", "cum").collect()
+    assert(prefixAcc.value == n)
+
+    val (profileAcc, profileUdf) = counted("profile_upstream")
+    CoreOps.numericProfile(base.withColumn("v", profileUdf(col("id"))),
+      Seq("v", "user_id")).collect()
+    assert(profileAcc.value == n)
+
+    // the *_stream entries' shape: the StateMachines walk, then the tail.
+    // The counter sits on the walk's output, one row per consecutive pair
+    // (each of the 37 users' first event has none): a self-join tail reuses
+    // the input exchange but runs the walk, whose closures never compare
+    // equal, twice
+    val (walkAcc, walkUdf) = counted("transition_upstream")
+    val counts = StateMachines.transitionPairs(StateMachines.keyedEvents(
+        base, col("user_id"), col("id"), col("id"), col("event_type")))
+      .withColumn("n_pair", walkUdf(lit(1L)))
+      .groupBy(col("from_state"), col("to_state"))
+      .agg(sum(col("n_pair")).as("n"))
+    CoreOps.withTransitionProbs(counts, Seq("from_state")).collect()
+    assert(walkAcc.value == n - 37)
   }
 }
