@@ -2455,7 +2455,7 @@ object CoreOps {
     * driver- and broadcast-friendly well past dimension-table scale).
     * `small` must be a BATCH DataFrame (the filter build is one eager
     * driver-side aggregate — the only eager job these constructors run);
-    * for a streaming big side use StreamOps.bloomAntiJoinEachBatch. */
+    * for a streaming big side call it per micro-batch in foreachBatch. */
   /** Both key columns must be integral: the filter is BUILT from long
     * insertions and PROBED with mightContainLong, and a string-keyed build
     * would hash different bytes than the probe — every probe would miss
@@ -2480,9 +2480,9 @@ object CoreOps {
     * identity-anti results) instead of the NPE stat.bloomFilter throws on
     * a relation contributing no values; folding that case into the build
     * keeps the join constructors down to THIS one eager job (it matters
-    * per-trigger in bloomAntiJoinEachBatch). `small` must be a BATCH
-    * frame — the build is a driver-side aggregate, so a streaming small
-    * side throws at this aggregate, not at analysis. */
+    * per trigger when a foreachBatch caller rebuilds the filter). `small`
+    * must be a BATCH frame — the build is a driver-side aggregate, so a
+    * streaming small side throws at this aggregate, not at analysis. */
   private def buildBloomFilter(keys: DataFrame, smallKey: String,
                                expectedItems: Long, fpp: Double)
       : org.apache.spark.util.sketch.BloomFilter =

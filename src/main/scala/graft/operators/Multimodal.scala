@@ -248,7 +248,7 @@ object Multimodal {
     * from the RIGHT corpus, candidates verified by the exact signature
     * Hamming. No within-side pairs, no shared state across sides — the
     * shape a streaming batch-vs-standing-index near-dup gate needs
-    * (StreamOps.nearDupEachBatch composes exactly this). The index is
+    * (call it in foreachBatch with the micro-batch as `left`). The index is
     * BROADCAST: the right side is the bounded reference corpus (its
     * buckets fail-loud capped at maxBucket), so each probe batch joins
     * map-side with zero shuffle of the stream. Emits (left_id, right_id,

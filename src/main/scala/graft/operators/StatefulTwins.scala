@@ -128,16 +128,10 @@ object StatefulTwins {
   /** Event-time windowed count excluding late rows — the E6 pipeline
     * (chapter4/EventTimeOperations.java:136-149): watermarked 1s tumbling count
     * where rows older than the watermark are diverted (here: dropped; the late
-    * side output is the `lateRows` companion below). */
+    * side output is `withLateFlag(...).filter(col("is_late"))`). */
   def eventTimeCount(df: DataFrame, ts: String, arrivalCol: String, tiebreak: String,
                      latenessMs: Long, duration: String): DataFrame =
     CoreOps.tumblingCount(
       withLateFlag(df, ts, arrivalCol, tiebreak, latenessMs).filter(!col("is_late")),
       ts, duration)
-
-  /** Late-data side output twin (chapter4/EventTimeOperations.java:174-175). */
-  def lateRows(df: DataFrame, ts: String, arrivalCol: String, tiebreak: String,
-               latenessMs: Long): DataFrame =
-    withLateFlag(df, ts, arrivalCol, tiebreak, latenessMs)
-      .filter(col("is_late")).drop("is_late")
 }

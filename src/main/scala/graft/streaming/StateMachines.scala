@@ -4,14 +4,20 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import scala.collection.mutable.ArrayBuffer
+import scala.reflect.ClassTag
+
+/** The replay-order columns every walk machine's event type carries. */
+sealed trait OrderedEvent { def tsMs: Long; def tiebreak: Long }
 
 /** Canonical keyed-event input for the stateful operators. Keys are strings —
   * the generic superset (numeric keys cast in, and back out at the query
   * layer); `tiebreak` makes per-key ordering total and deterministic. */
 case class KeyedEvent(key: String, tsMs: Long, tiebreak: Long, kind: String)
+    extends OrderedEvent
 
 /** Value-carrying twin of KeyedEvent for the moment-sum machines. */
 case class ValuedEvent(key: String, tsMs: Long, tiebreak: Long, value: Long)
+    extends OrderedEvent
 
 /** Running prior-prefix moments for expandingAnomalies: count, Σv, Σv². */
 case class MomentState(n: Long, s: Long, ss: Long)
@@ -176,6 +182,7 @@ case class PhAlarm(key: String, tiebreak: Long, alarm_ms: Long,
   * (tsMs, tiebreak) plus the carried columns, NULLs preserved. */
 case class PayloadEvent(key: String, tsMs: Long, tiebreak: Long,
                         kind: Option[String], value: Option[Double])
+    extends OrderedEvent
 
 /** The current winning row per key for latestSnapshots. */
 case class LatestPayload(tsMs: Long, tiebreak: Long,
@@ -186,6 +193,7 @@ case class LatestSnapshot(key: String, last_ms: Long, tiebreak: Long,
 /** Tagged two-sided event for the stream-stream as-of machine: left rows
   * probe, right rows build. */
 case class AsofEvent(key: String, tsMs: Long, tiebreak: Long, isLeft: Boolean)
+    extends OrderedEvent
 /** The latest right row seen per key (asofMatches state). */
 case class AsofRight(tsMs: Long, tiebreak: Long)
 case class AsofMatch(key: String, tiebreak: Long, event_ms: Long,
@@ -198,12 +206,23 @@ case class AsofMatch(key: String, tiebreak: Long, event_ms: Long,
   * initial state), which is how the oracle-checked `*_stream` queries in
   * SparkEntry prove these emit exactly what the lag()-based batch twins emit.
   *
-  * Ordering: within each invocation the group's events are sorted by
-  * (tsMs, tiebreak) before the state walk — micro-batches deliver per-key
-  * iterators in no guaranteed order. Across micro-batches, arrival order
-  * governs, matching the reference's processing-order semantics. The sort is
-  * per key per batch, so memory is bounded by a key's per-batch volume, not
-  * by the stream.
+  * Every keyed walk machine is one `step` run by `walk`, which owns the rest:
+  *   - grouping: by the events' `key` column (a column grouping, so the plan
+  *     carries no per-row key lambda);
+  *   - replay order: within an invocation a key's events are sorted by
+  *     (tsMs, tiebreak), and AsofEvents by (tsMs, rights first, tiebreak) —
+  *     micro-batches deliver per-key iterators in no guaranteed order. Across
+  *     micro-batches arrival order governs, matching the reference's
+  *     processing-order semantics. The sort is per key per batch, so memory
+  *     is bounded by a key's per-batch volume, not by the stream;
+  *   - state: the step returns the key's next state; `Some(s)` stores it,
+  *     `None` removes the key's state (if it has any);
+  *   - TTL: `stateTtlMs` is a processing-time timeout re-armed on every
+  *     store; a key idle past it has its state removed with no output.
+  *     Batch execution ignores timeouts, so batch output is identical with
+  *     or without a TTL.
+  * The funnel's dedup machines (`keepFirst*`, `bandKeepFirst*`, `*EventTime`)
+  * key on other columns and manage their own state and timers.
   */
 object StateMachines {
 
@@ -249,6 +268,58 @@ object StateMachines {
       value.cast("double").as("value"))
       .as[PayloadEvent]
 
+  /** Resolve the timeout mode for an optional TTL. */
+  private def timeoutConf(stateTtlMs: Option[Long]): GroupStateTimeout =
+    if (stateTtlMs.isDefined) GroupStateTimeout.ProcessingTimeTimeout
+    else GroupStateTimeout.NoTimeout
+
+  /** Replay order of the walk machines' events: (tsMs, tiebreak). */
+  private object ByTs extends Ordering[OrderedEvent] {
+    def compare(a: OrderedEvent, b: OrderedEvent): Int = {
+      val c = java.lang.Long.compare(a.tsMs, b.tsMs)
+      if (c != 0) c else java.lang.Long.compare(a.tiebreak, b.tiebreak)
+    }
+  }
+
+  /** asofMatches' replay order: (tsMs, rights first, tiebreak). */
+  private object AsofOrder extends Ordering[AsofEvent] {
+    def compare(a: AsofEvent, b: AsofEvent): Int = {
+      val c = java.lang.Long.compare(a.tsMs, b.tsMs)
+      if (c != 0) c
+      else if (a.isLeft != b.isLeft) java.lang.Boolean.compare(a.isLeft, b.isLeft)
+      else java.lang.Long.compare(a.tiebreak, b.tiebreak)
+    }
+  }
+
+  /** The one keyed walk (see the object scaladoc): group `events` by their
+    * `key` column, expire timed-out keys, replay each key's batch in `order`
+    * through `step` (key, prior state, sorted non-empty batch, output
+    * buffer), then store the state it returns — re-arming the TTL — or
+    * remove it on `None`. */
+  private def walk[E <: OrderedEvent : Encoder : ClassTag, S: Encoder,
+                   O: Encoder](events: Dataset[E], stateTtlMs: Option[Long],
+                               order: java.util.Comparator[_ >: E] = ByTs)(
+      step: (String, Option[S], Array[E], ArrayBuffer[O]) => Option[S])
+      : Dataset[O] =
+    events.groupBy(col("key")).as[String, E].flatMapGroupsWithState(
+      OutputMode.Append, timeoutConf(stateTtlMs)) {
+      (key: String, it: Iterator[E], state: GroupState[S]) =>
+        if (state.hasTimedOut) {
+          state.remove()
+          Iterator.empty
+        } else {
+          val batch = it.toArray
+          java.util.Arrays.sort(batch, order)
+          val out = ArrayBuffer.empty[O]
+          step(key, state.getOption, batch, out) match {
+            case Some(s) =>
+              state.update(s); stateTtlMs.foreach(state.setTimeoutDuration)
+            case None => if (state.exists) state.remove()
+          }
+          out.iterator
+        }
+    }
+
   implicit val phStateEnc: Encoder[PhState] = Encoders.product[PhState]
   implicit val phAlarmEnc: Encoder[PhAlarm] = Encoders.product[PhAlarm]
 
@@ -273,32 +344,23 @@ object StateMachines {
                   stateTtlMs: Option[Long] = None): Dataset[PhAlarm] = {
     require(delta >= 0, s"delta must be >= 0, got $delta")
     require(lambda > 0, s"lambda must be > 0, got $lambda")
-    events.groupByKey(_.key).flatMapGroupsWithState(
-      OutputMode.Append, timeoutConf(stateTtlMs)) {
-      (key: String, it: Iterator[ValuedEvent], state: GroupState[PhState]) =>
-        if (state.hasTimedOut) {
-          state.remove()
-          Iterator.empty
-        } else {
-          var st = state.getOption.getOrElse(PhState(0L, 0L, 0L, 0L))
-          val out = ArrayBuffer.empty[PhAlarm]
-          it.toArray.sortBy(e => (e.tsMs, e.tiebreak)).foreach { e =>
-            require(e.value >= 0,
-              s"pageHinkley: values must be >= 0 (floor-div mean " +
-                s"contract); got ${e.value} for key $key")
-            val n = Math.addExact(st.n, 1L)
-            val s = Math.addExact(st.s, e.value)
-            val m = Math.addExact(st.m, e.value - s / n - delta)
-            val mn = math.min(st.mn, m)
-            if (m - mn > lambda) {
-              out += PhAlarm(key, e.tiebreak, e.tsMs, n, m, mn)
-              st = PhState(0L, 0L, 0L, 0L)
-            } else st = PhState(n, s, m, mn)
-          }
-          state.update(st)
-          stateTtlMs.foreach(state.setTimeoutDuration)
-          out.iterator
+    walk[ValuedEvent, PhState, PhAlarm](events, stateTtlMs) {
+      (key, prior, batch, out) =>
+        var st = prior.getOrElse(PhState(0L, 0L, 0L, 0L))
+        batch.foreach { e =>
+          require(e.value >= 0,
+            s"pageHinkley: values must be >= 0 (floor-div mean " +
+              s"contract); got ${e.value} for key $key")
+          val n = Math.addExact(st.n, 1L)
+          val s = Math.addExact(st.s, e.value)
+          val m = Math.addExact(st.m, e.value - s / n - delta)
+          val mn = math.min(st.mn, m)
+          if (m - mn > lambda) {
+            out += PhAlarm(key, e.tiebreak, e.tsMs, n, m, mn)
+            st = PhState(0L, 0L, 0L, 0L)
+          } else st = PhState(n, s, m, mn)
         }
+        Some(st)
     }
   }
 
@@ -311,50 +373,29 @@ object StateMachines {
     * registered query pins this machine against the same row_number()
     * oracle as the batch operator.
     *
-    * Unlike the walk machines above, max-by is ORDER-INDEPENDENT — no
-    * per-batch sort, one comparison fold, O(1) state per key (late
-    * arrivals older than the winner lose the comparison, matching the
-    * batch semantics rather than arrival order). Payload NULLs are
-    * carried verbatim; the ORDER key (tsMs, tiebreak) is non-null by
+    * Unlike the other walk machines, max-by is ORDER-INDEPENDENT — the
+    * per-batch replay order changes nothing; one comparison fold, O(1)
+    * state per key (late arrivals older than the winner lose the
+    * comparison, matching the batch semantics rather than arrival
+    * order). Payload NULLs are carried verbatim; the ORDER key (tsMs, tiebreak) is non-null by
     * projection (filter NULL order columns upstream — the batch
     * operator's fail-loud contract, kept by the registered query's
     * `ts IS NOT NULL` filter). */
   def latestSnapshots(events: Dataset[PayloadEvent],
                       stateTtlMs: Option[Long] = None)
-      : Dataset[LatestSnapshot] = {
-    events.groupByKey(_.key).flatMapGroupsWithState(
-      OutputMode.Append, timeoutConf(stateTtlMs)) {
-      (key: String, it: Iterator[PayloadEvent],
-       state: GroupState[LatestPayload]) =>
-        if (state.hasTimedOut) {
-          state.remove()
-          Iterator.empty
-        } else {
-          var best = state.getOption.orNull
-          it.foreach { e =>
-            if (best == null || e.tsMs > best.tsMs ||
-                (e.tsMs == best.tsMs && e.tiebreak > best.tiebreak))
-              best = LatestPayload(e.tsMs, e.tiebreak, e.kind, e.value)
-          }
-          if (best == null) Iterator.empty
-          else {
-            state.update(best)
-            stateTtlMs.foreach(state.setTimeoutDuration)
-            Iterator.single(LatestSnapshot(key, best.tsMs, best.tiebreak,
-              best.kind, best.value))
-          }
+      : Dataset[LatestSnapshot] =
+    walk[PayloadEvent, LatestPayload, LatestSnapshot](events, stateTtlMs) {
+      (key, prior, batch, out) =>
+        var best = prior.orNull
+        batch.foreach { e =>
+          if (best == null || e.tsMs > best.tsMs ||
+              (e.tsMs == best.tsMs && e.tiebreak > best.tiebreak))
+            best = LatestPayload(e.tsMs, e.tiebreak, e.kind, e.value)
         }
+        out += LatestSnapshot(key, best.tsMs, best.tiebreak, best.kind,
+          best.value)
+        Some(best)
     }
-  }
-
-  /** Resolve the timeout mode for an optional TTL. */
-  private def timeoutConf(stateTtlMs: Option[Long]): GroupStateTimeout =
-    if (stateTtlMs.isDefined) GroupStateTimeout.ProcessingTimeTimeout
-    else GroupStateTimeout.NoTimeout
-
-  /** Arm the processing-time TTL for a key whose state was just updated. */
-  private def armTtl(state: GroupState[LastSeen], stateTtlMs: Option[Long]): Unit =
-    stateTtlMs.foreach(state.setTimeoutDuration)
 
   /** Delete-interval alert (chapter5/StatefulOperations.java:83-128): per key,
     * remember the last `deleteKind` event's timestamp in state; a new one
@@ -372,30 +413,19 @@ object StateMachines {
   def intervalAlerts(events: Dataset[KeyedEvent], deleteKind: String,
                      thresholdMs: Long,
                      stateTtlMs: Option[Long] = None): Dataset[IntervalAlert] =
-    events.groupByKey(_.key).flatMapGroupsWithState(
-      OutputMode.Append, timeoutConf(stateTtlMs)) {
-      (key: String, it: Iterator[KeyedEvent], state: GroupState[LastSeen]) =>
-        if (state.hasTimedOut) {
-          state.remove()
-          Iterator.empty
-        } else {
-          val out = ArrayBuffer.empty[IntervalAlert]
-          var last = state.getOption
-          it.toArray.sortBy(e => (e.tsMs, e.tiebreak)).foreach { e =>
-            if (e.kind == deleteKind) {
-              last.foreach { prev =>
-                val gap = e.tsMs - prev.tsMs
-                if (gap < thresholdMs) out += IntervalAlert(key, e.tsMs, gap)
-              }
-              last = Some(LastSeen(e.kind, e.tsMs))
+    walk[KeyedEvent, LastSeen, IntervalAlert](events, stateTtlMs) {
+      (key, prior, batch, out) =>
+        var last = prior
+        batch.foreach { e =>
+          if (e.kind == deleteKind) {
+            last.foreach { prev =>
+              val gap = e.tsMs - prev.tsMs
+              if (gap < thresholdMs) out += IntervalAlert(key, e.tsMs, gap)
             }
+            last = Some(LastSeen(e.kind, e.tsMs))
           }
-          last match {
-            case Some(s) => state.update(s); armTtl(state, stateTtlMs)
-            case None    =>
-          }
-          out.iterator
         }
+        last
     }
 
   implicit val hashedDocEnc: Encoder[HashedDoc] = Encoders.product[HashedDoc]
@@ -944,25 +974,14 @@ object StateMachines {
     * like every machine here. */
   def transitionPairs(events: Dataset[KeyedEvent],
                       stateTtlMs: Option[Long] = None): Dataset[TransitionPair] =
-    events.groupByKey(_.key).flatMapGroupsWithState(
-      OutputMode.Append, timeoutConf(stateTtlMs)) {
-      (key: String, it: Iterator[KeyedEvent], state: GroupState[LastSeen]) =>
-        if (state.hasTimedOut) {
-          state.remove()
-          Iterator.empty
-        } else {
-          val out = ArrayBuffer.empty[TransitionPair]
-          var last = state.getOption
-          it.toArray.sortBy(e => (e.tsMs, e.tiebreak)).foreach { e =>
-            last.foreach(prev => out += TransitionPair(key, prev.kind, e.kind))
-            last = Some(LastSeen(e.kind, e.tsMs))
-          }
-          last match {
-            case Some(s) => state.update(s); armTtl(state, stateTtlMs)
-            case None    =>
-          }
-          out.iterator
+    walk[KeyedEvent, LastSeen, TransitionPair](events, stateTtlMs) {
+      (key, prior, batch, out) =>
+        var last = prior
+        batch.foreach { e =>
+          last.foreach(prev => out += TransitionPair(key, prev.kind, e.kind))
+          last = Some(LastSeen(e.kind, e.tsMs))
         }
+        last
     }
 
   implicit val funnelStateEnc: Encoder[FunnelState] = Encoders.product[FunnelState]
@@ -989,39 +1008,25 @@ object StateMachines {
     require(stages.size >= 2, s"a funnel needs >= 2 stages, got ${stages.size}")
     require(maxGapMs.forall(_ > 0),
       s"maxGapMs must be positive, got $maxGapMs")
-    events.groupByKey(_.key).flatMapGroupsWithState(
-      OutputMode.Append, timeoutConf(stateTtlMs)) {
-      (key: String, it: Iterator[KeyedEvent], state: GroupState[FunnelState]) =>
-        if (state.hasTimedOut) {
-          state.remove()
-          Iterator.empty
-        } else {
-          val st = state.getOption.getOrElse(FunnelState(Nil, done = false))
-          var times = st.times
-          var done = st.done
-          val out = ArrayBuffer.empty[FunnelCompletion]
-          it.toArray.sortBy(e => (e.tsMs, e.tiebreak)).foreach { e =>
-            if (!done && e.kind == stages(times.size) &&
-                (times.isEmpty || (e.tsMs > times.last &&
-                  maxGapMs.forall(g => e.tsMs - times.last <= g)))) {
-              times = times :+ e.tsMs
-              if (times.size == stages.size) {
-                done = true
-                out += FunnelCompletion(key, times)
-              }
+    walk[KeyedEvent, FunnelState, FunnelCompletion](events, stateTtlMs) {
+      (key, prior, batch, out) =>
+        val st = prior.getOrElse(FunnelState(Nil, done = false))
+        var times = st.times
+        var done = st.done
+        batch.foreach { e =>
+          if (!done && e.kind == stages(times.size) &&
+              (times.isEmpty || (e.tsMs > times.last &&
+                maxGapMs.forall(g => e.tsMs - times.last <= g)))) {
+            times = times :+ e.tsMs
+            if (times.size == stages.size) {
+              done = true
+              out += FunnelCompletion(key, times)
             }
           }
-          state.update(FunnelState(times, done))
-          armTtl2(state, stateTtlMs)
-          out.iterator
         }
+        Some(FunnelState(times, done))
     }
   }
-
-  /** Arm the processing-time TTL (FunnelState-typed twin of armTtl). */
-  private def armTtl2(state: GroupState[FunnelState],
-                      stateTtlMs: Option[Long]): Unit =
-    stateTtlMs.foreach(state.setTimeoutDuration)
 
   implicit val sessionFunnelStateEnc: Encoder[SessionFunnelState] =
     Encoders.product[SessionFunnelState]
@@ -1053,41 +1058,29 @@ object StateMachines {
       : Dataset[FunnelCompletion] = {
     require(stages.size >= 2, s"a funnel needs >= 2 stages, got ${stages.size}")
     require(gapMs > 0, s"gapMs must be positive, got $gapMs")
-    events.groupByKey(_.key).flatMapGroupsWithState(
-      OutputMode.Append, timeoutConf(stateTtlMs)) {
-      (key: String, it: Iterator[KeyedEvent],
-       state: GroupState[SessionFunnelState]) =>
-        if (state.hasTimedOut) {
-          state.remove()
-          Iterator.empty
-        } else {
-          var st = state.getOption.getOrElse(
-            SessionFunnelState(0L, 0L, Nil, done = false))
-          val out = ArrayBuffer.empty[FunnelCompletion]
-          it.toArray.sortBy(e => (e.tsMs, e.tiebreak)).foreach { e =>
-            // silence gap ⇒ new session: bump the index, reset the walk
-            // (sessionSeq 0 is the "never seen" sentinel ⇒ first session)
-            val st1 =
-              if (st.sessionSeq == 0L || e.tsMs - st.lastTs > gapMs)
-                SessionFunnelState(st.sessionSeq + 1L, e.tsMs, Nil,
-                  done = false)
-              else st
-            var times = st1.times
-            var done = st1.done
-            if (!done && e.kind == stages(times.size) &&
-                (times.isEmpty || e.tsMs > times.last)) {
-              times = times :+ e.tsMs
-              if (times.size == stages.size) {
-                done = true
-                out += FunnelCompletion(s"$key:${st1.sessionSeq}", times)
-              }
-            }
-            st = SessionFunnelState(st1.sessionSeq, e.tsMs, times, done)
+    walk[KeyedEvent, SessionFunnelState, FunnelCompletion](events,
+        stateTtlMs) { (key, prior, batch, out) =>
+      var st = prior.getOrElse(SessionFunnelState(0L, 0L, Nil, done = false))
+      batch.foreach { e =>
+        // silence gap ⇒ new session: bump the index, reset the walk
+        // (sessionSeq 0 is the "never seen" sentinel ⇒ first session)
+        val st1 =
+          if (st.sessionSeq == 0L || e.tsMs - st.lastTs > gapMs)
+            SessionFunnelState(st.sessionSeq + 1L, e.tsMs, Nil, done = false)
+          else st
+        var times = st1.times
+        var done = st1.done
+        if (!done && e.kind == stages(times.size) &&
+            (times.isEmpty || e.tsMs > times.last)) {
+          times = times :+ e.tsMs
+          if (times.size == stages.size) {
+            done = true
+            out += FunnelCompletion(s"$key:${st1.sessionSeq}", times)
           }
-          state.update(st)
-          stateTtlMs.foreach(state.setTimeoutDuration)
-          out.iterator
         }
+        st = SessionFunnelState(st1.sessionSeq, e.tsMs, times, done)
+      }
+      Some(st)
     }
   }
 
@@ -1116,37 +1109,26 @@ object StateMachines {
                 stateTtlMs: Option[Long] = None): Dataset[BurstEnd] = {
     require(loMs > 0 && hiMs >= loMs,
       s"need 0 < loMs <= hiMs, got lo=$loMs hi=$hiMs")
-    events.groupByKey(_.key).flatMapGroupsWithState(
-      OutputMode.Append, timeoutConf(stateTtlMs)) {
-      (key: String, it: Iterator[KeyedEvent], state: GroupState[BurstState]) =>
-        if (state.hasTimedOut) {
-          state.remove()
-          Iterator.empty
-        } else {
-          val out = ArrayBuffer.empty[BurstEnd]
-          var st = state.getOption.orNull
-          it.toArray.sortBy(e => (e.tsMs, e.tiebreak)).foreach { e =>
-            if (st == null) {
-              st = BurstState(-1L, 0L, e.tsMs)
-            } else if (e.tsMs >= st.lastMs) { // behind-frontier: no-op
-              val gap = e.tsMs - st.lastMs
-              st =
-                if (st.bstartMs >= 0L) {
-                  if (gap <= hiMs) BurstState(st.bstartMs, st.n + 1L, e.tsMs)
-                  else { // close and emit; gap > hiMs >= loMs never reopens
-                    out += BurstEnd(key, st.bstartMs, st.lastMs, st.n)
-                    BurstState(-1L, 0L, e.tsMs)
-                  }
-                } else if (gap <= loMs) BurstState(st.lastMs, 2L, e.tsMs)
-                else BurstState(-1L, 0L, e.tsMs)
-            }
+    walk[KeyedEvent, BurstState, BurstEnd](events, stateTtlMs) {
+      (key, prior, batch, out) =>
+        var st = prior.orNull
+        batch.foreach { e =>
+          if (st == null) {
+            st = BurstState(-1L, 0L, e.tsMs)
+          } else if (e.tsMs >= st.lastMs) { // behind-frontier: no-op
+            val gap = e.tsMs - st.lastMs
+            st =
+              if (st.bstartMs >= 0L) {
+                if (gap <= hiMs) BurstState(st.bstartMs, st.n + 1L, e.tsMs)
+                else { // close and emit; gap > hiMs >= loMs never reopens
+                  out += BurstEnd(key, st.bstartMs, st.lastMs, st.n)
+                  BurstState(-1L, 0L, e.tsMs)
+                }
+              } else if (gap <= loMs) BurstState(st.lastMs, 2L, e.tsMs)
+              else BurstState(-1L, 0L, e.tsMs)
           }
-          if (st != null) {
-            state.update(st)
-            stateTtlMs.foreach(state.setTimeoutDuration)
-          }
-          out.iterator
         }
+        Option(st)
     }
   }
 
@@ -1164,31 +1146,20 @@ object StateMachines {
     * key's final island). TTL-boundable like every machine here. */
   def streakEnds(events: Dataset[KeyedEvent],
                  stateTtlMs: Option[Long] = None): Dataset[StreakEnd] =
-    events.groupByKey(_.key).flatMapGroupsWithState(
-      OutputMode.Append, timeoutConf(stateTtlMs)) {
-      (key: String, it: Iterator[KeyedEvent], state: GroupState[StreakState]) =>
-        if (state.hasTimedOut) {
-          state.remove()
-          Iterator.empty
-        } else {
-          val out = ArrayBuffer.empty[StreakEnd]
-          var st = state.getOption.orNull
-          it.toArray.sortBy(e => (e.tsMs, e.tiebreak)).foreach { e =>
-            val d = e.tsMs
-            if (st == null) st = StreakState(d, d)
-            else if (d == st.lastDay + 1L) st = StreakState(st.startDay, d)
-            else if (d > st.lastDay + 1L) {
-              out += StreakEnd(key, st.startDay, st.lastDay,
-                st.lastDay - st.startDay + 1L)
-              st = StreakState(d, d)
-            } // d <= lastDay: day already covered / behind the frontier
-          }
-          if (st != null) {
-            state.update(st)
-            stateTtlMs.foreach(state.setTimeoutDuration)
-          }
-          out.iterator
+    walk[KeyedEvent, StreakState, StreakEnd](events, stateTtlMs) {
+      (key, prior, batch, out) =>
+        var st = prior.orNull
+        batch.foreach { e =>
+          val d = e.tsMs
+          if (st == null) st = StreakState(d, d)
+          else if (d == st.lastDay + 1L) st = StreakState(st.startDay, d)
+          else if (d > st.lastDay + 1L) {
+            out += StreakEnd(key, st.startDay, st.lastDay,
+              st.lastDay - st.startDay + 1L)
+            st = StreakState(d, d)
+          } // d <= lastDay: day already covered / behind the frontier
         }
+        Option(st)
     }
 
   /** Second-order streaming transitions — transitionPairs one lag deeper:
@@ -1201,28 +1172,16 @@ object StateMachines {
     * q_transitions2_stream). State is ONE LastTwo per key. */
   def transitionPairs2(events: Dataset[KeyedEvent],
                        stateTtlMs: Option[Long] = None): Dataset[Transition2] =
-    events.groupByKey(_.key).flatMapGroupsWithState(
-      OutputMode.Append, timeoutConf(stateTtlMs)) {
-      (key: String, it: Iterator[KeyedEvent], state: GroupState[LastTwo]) =>
-        if (state.hasTimedOut) {
-          state.remove()
-          Iterator.empty
-        } else {
-          val out = ArrayBuffer.empty[Transition2]
-          var last = state.getOption
-          it.toArray.sortBy(e => (e.tsMs, e.tiebreak)).foreach { e =>
-            last.foreach { lt =>
-              if (lt.k1 != null) out += Transition2(key, lt.k1, lt.k2, e.kind)
-            }
-            last = Some(LastTwo(last.map(_.k2).orNull, e.kind, e.tsMs))
+    walk[KeyedEvent, LastTwo, Transition2](events, stateTtlMs) {
+      (key, prior, batch, out) =>
+        var last = prior
+        batch.foreach { e =>
+          last.foreach { lt =>
+            if (lt.k1 != null) out += Transition2(key, lt.k1, lt.k2, e.kind)
           }
-          last match {
-            case Some(s) =>
-              state.update(s); stateTtlMs.foreach(state.setTimeoutDuration)
-            case None =>
-          }
-          out.iterator
+          last = Some(LastTwo(last.map(_.k2).orNull, e.kind, e.tsMs))
         }
+        last
     }
 
   /** Per-key action-duration tracker
@@ -1233,28 +1192,17 @@ object StateMachines {
   def actionDurations(events: Dataset[KeyedEvent], loginKind: String,
                       logoutKind: String,
                       stateTtlMs: Option[Long] = None): Dataset[ActionDuration] =
-    events.groupByKey(_.key).flatMapGroupsWithState(
-      OutputMode.Append, timeoutConf(stateTtlMs)) {
-      (key: String, it: Iterator[KeyedEvent], state: GroupState[LastSeen]) =>
-        if (state.hasTimedOut) {
-          state.remove()
-          Iterator.empty
-        } else {
-          val out = ArrayBuffer.empty[ActionDuration]
-          var last = state.getOption
-          it.toArray.sortBy(e => (e.tsMs, e.tiebreak)).foreach { e =>
-            last.foreach { prev =>
-              if (e.kind != loginKind)
-                out += ActionDuration(key, prev.kind, e.tsMs - prev.tsMs)
-            }
-            last = if (e.kind == logoutKind) None else Some(LastSeen(e.kind, e.tsMs))
+    walk[KeyedEvent, LastSeen, ActionDuration](events, stateTtlMs) {
+      (key, prior, batch, out) =>
+        var last = prior
+        batch.foreach { e =>
+          last.foreach { prev =>
+            if (e.kind != loginKind)
+              out += ActionDuration(key, prev.kind, e.tsMs - prev.tsMs)
           }
-          last match {
-            case Some(s) => state.update(s); armTtl(state, stateTtlMs)
-            case None    => if (state.exists) state.remove()
-          }
-          out.iterator
+          last = if (e.kind == logoutKind) None else Some(LastSeen(e.kind, e.tsMs))
         }
+        last
     }
 
   implicit val ewmaStateEnc: Encoder[EwmaState]       = Encoders.product[EwmaState]
@@ -1298,40 +1246,29 @@ object StateMachines {
       s"refill rate must be positive, got $refillNum/$refillDen")
     val capMicro = Math.multiplyExact(capacityTokens.toLong, 1000000L)
     val tokenMicro = 1000000L
-    events.groupByKey(_.key).flatMapGroupsWithState(
-      OutputMode.Append, timeoutConf(stateTtlMs)) {
-      (key: String, it: Iterator[KeyedEvent], state: GroupState[BucketState]) =>
-        if (state.hasTimedOut) {
-          state.remove()
-          Iterator.empty
-        } else {
-          val out = ArrayBuffer.empty[ThrottleDecision]
-          var st = state.getOption.orNull
-          it.toArray.sortBy(e => (e.tsMs, e.tiebreak)).foreach { e =>
-            val refilled =
-              if (st == null) capMicro
-              else {
-                val delta = math.max(e.tsMs - st.lastMs, 0L)
-                math.min(capMicro, Math.addExact(st.availMicro,
-                  Math.multiplyExact(delta, refillNum) / refillDen))
-              }
-            val admitted = refilled >= tokenMicro
-            val avail = refilled - (if (admitted) tokenMicro else 0L)
-            out += ThrottleDecision(key, e.tiebreak, e.tsMs, admitted, avail)
-            // the clock advances MONOTONICALLY: a behind-frontier arrival
-            // across micro-batches already had its refill delta clamped to
-            // 0, so rewinding lastMs to its tsMs would re-credit the span
-            // [tsMs, lastMs] to the NEXT in-order event — double-refilling
-            // the bucket (the burstEnds strict-no-op rule for the clock)
-            st = BucketState(
-              if (st == null) e.tsMs else math.max(st.lastMs, e.tsMs), avail)
-          }
-          if (st != null) {
-            state.update(st)
-            stateTtlMs.foreach(state.setTimeoutDuration)
-          }
-          out.iterator
+    walk[KeyedEvent, BucketState, ThrottleDecision](events, stateTtlMs) {
+      (key, prior, batch, out) =>
+        var st = prior.orNull
+        batch.foreach { e =>
+          val refilled =
+            if (st == null) capMicro
+            else {
+              val delta = math.max(e.tsMs - st.lastMs, 0L)
+              math.min(capMicro, Math.addExact(st.availMicro,
+                Math.multiplyExact(delta, refillNum) / refillDen))
+            }
+          val admitted = refilled >= tokenMicro
+          val avail = refilled - (if (admitted) tokenMicro else 0L)
+          out += ThrottleDecision(key, e.tiebreak, e.tsMs, admitted, avail)
+          // the clock advances MONOTONICALLY: a behind-frontier arrival
+          // across micro-batches already had its refill delta clamped to
+          // 0, so rewinding lastMs to its tsMs would re-credit the span
+          // [tsMs, lastMs] to the NEXT in-order event — double-refilling
+          // the bucket (the burstEnds strict-no-op rule for the clock)
+          st = BucketState(
+            if (st == null) e.tsMs else math.max(st.lastMs, e.tsMs), avail)
         }
+        Option(st)
     }
   }
 
@@ -1361,30 +1298,20 @@ object StateMachines {
     require(alphaDen > 0 && alphaNum > 0 && alphaNum <= alphaDen,
       s"need 0 < alphaNum <= alphaDen, got $alphaNum/$alphaDen")
     require(valueScale >= 1L, s"valueScale must be >= 1, got $valueScale")
-    events.groupByKey(_.key).flatMapGroupsWithState(
-      OutputMode.Append, timeoutConf(stateTtlMs)) {
-      (key: String, it: Iterator[ValuedEvent], state: GroupState[EwmaState]) =>
-        if (state.hasTimedOut) {
-          state.remove()
-          Iterator.empty
-        } else {
-          var st = state.getOption.getOrElse(EwmaState(0L, 0L, 0L))
-          it.toArray.sortBy(e => (e.tsMs, e.tiebreak)).foreach { e =>
-            val vs = Math.multiplyExact(e.value, valueScale)
-            val s2 =
-              if (st.n == 0L) vs
-              else Math.addExact(Math.multiplyExact(alphaNum.toLong, vs),
-                Math.multiplyExact((alphaDen - alphaNum).toLong, st.s)) /
-                alphaDen
-            st = EwmaState(Math.addExact(st.n, 1L), e.tsMs, s2)
-          }
-          if (st.n == 0L) Iterator.empty
-          else {
-            state.update(st)
-            stateTtlMs.foreach(state.setTimeoutDuration)
-            Iterator.single(EwmaSnapshot(key, st.n, st.lastMs, st.s))
-          }
+    walk[ValuedEvent, EwmaState, EwmaSnapshot](events, stateTtlMs) {
+      (key, prior, batch, out) =>
+        var st = prior.getOrElse(EwmaState(0L, 0L, 0L))
+        batch.foreach { e =>
+          val vs = Math.multiplyExact(e.value, valueScale)
+          val s2 =
+            if (st.n == 0L) vs
+            else Math.addExact(Math.multiplyExact(alphaNum.toLong, vs),
+              Math.multiplyExact((alphaDen - alphaNum).toLong, st.s)) /
+              alphaDen
+          st = EwmaState(Math.addExact(st.n, 1L), e.tsMs, s2)
         }
+        out += EwmaSnapshot(key, st.n, st.lastMs, st.s)
+        Some(st)
     }
   }
 
@@ -1422,38 +1349,25 @@ object StateMachines {
     require(incSuccessPpm > 0L && incFailPpm < 0L,
       s"increments must have opposite signs for the walk to decide both " +
         s"ways (got success $incSuccessPpm, fail $incFailPpm)")
-    events.groupByKey(_.key).flatMapGroupsWithState(
-      OutputMode.Append, timeoutConf(stateTtlMs)) {
-      (key: String, it: Iterator[KeyedEvent], state: GroupState[SprtState]) =>
-        if (state.hasTimedOut) {
-          state.remove()
-          Iterator.empty
-        } else {
-          val out = ArrayBuffer.empty[SprtDecision]
-          var st = state.getOption.getOrElse(SprtState(0L, 0L, done = false))
-          it.toArray.sortBy(e => (e.tsMs, e.tiebreak)).foreach { e =>
-            if (!st.done) {
-              val inc = if (e.kind == successKind) incSuccessPpm
-                        else incFailPpm
-              val llr = Math.addExact(st.llr, inc)
-              val n = Math.addExact(st.n, 1L)
-              val decision =
-                if (llr >= acceptH1Ppm) "accept_h1"
-                else if (llr <= acceptH0Ppm) "accept_h0"
-                else null
-              if (decision != null)
-                out += SprtDecision(key, e.tiebreak, e.tsMs, n, llr,
-                  decision)
-              st = SprtState(n, llr, decision != null)
-            }
-          }
-          if (st.n == 0L) Iterator.empty
-          else {
-            state.update(st)
-            stateTtlMs.foreach(state.setTimeoutDuration)
-            out.iterator
+    walk[KeyedEvent, SprtState, SprtDecision](events, stateTtlMs) {
+      (key, prior, batch, out) =>
+        var st = prior.getOrElse(SprtState(0L, 0L, done = false))
+        batch.foreach { e =>
+          if (!st.done) {
+            val inc = if (e.kind == successKind) incSuccessPpm
+                      else incFailPpm
+            val llr = Math.addExact(st.llr, inc)
+            val n = Math.addExact(st.n, 1L)
+            val decision =
+              if (llr >= acceptH1Ppm) "accept_h1"
+              else if (llr <= acceptH0Ppm) "accept_h0"
+              else null
+            if (decision != null)
+              out += SprtDecision(key, e.tiebreak, e.tsMs, n, llr, decision)
+            st = SprtState(n, llr, decision != null)
           }
         }
+        Some(st)
     }
   }
 
@@ -1478,37 +1392,25 @@ object StateMachines {
   def kmvSnapshots(events: Dataset[ValuedEvent], k: Int,
                    stateTtlMs: Option[Long] = None): Dataset[KmvSnapshot] = {
     require(k >= 2, s"sketch size k must be >= 2, got $k")
-    events.groupByKey(_.key).flatMapGroupsWithState(
-      OutputMode.Append, timeoutConf(stateTtlMs)) {
-      (key: String, it: Iterator[ValuedEvent], state: GroupState[KmvState]) =>
-        if (state.hasTimedOut) {
-          state.remove()
-          Iterator.empty
-        } else {
-          var st = state.getOption.getOrElse(KmvState(0L, Vector.empty))
-          it.toArray.sortBy(e => (e.tsMs, e.tiebreak)).foreach { e =>
-            val h = graft.expressions.Md5Hash.first32(
-              org.apache.spark.unsafe.types.UTF8String
-                .fromString(e.value.toString))
-            val mins = st.mins
-            val next =
-              if (mins.contains(h)) mins
-              else if (mins.size < k) (mins :+ h).sorted
-              else if (h < mins.last) ((mins :+ h).sorted).take(k)
-              else mins
-            st = KmvState(Math.addExact(st.n, 1L), next)
-          }
-          if (st.n == 0L) Iterator.empty
-          else {
-            state.update(st)
-            stateTtlMs.foreach(state.setTimeoutDuration)
-            val m = st.mins.size.toLong
-            val est =
-              if (m < k) m
-              else ((k - 1L) * 4294967296L) / st.mins.last
-            Iterator.single(KmvSnapshot(key, st.n, m, est))
-          }
+    walk[ValuedEvent, KmvState, KmvSnapshot](events, stateTtlMs) {
+      (key, prior, batch, out) =>
+        var st = prior.getOrElse(KmvState(0L, Vector.empty))
+        batch.foreach { e =>
+          val h = graft.expressions.Md5Hash.first32(
+            org.apache.spark.unsafe.types.UTF8String
+              .fromString(e.value.toString))
+          val mins = st.mins
+          val next =
+            if (mins.contains(h)) mins
+            else if (mins.size < k) (mins :+ h).sorted
+            else if (h < mins.last) ((mins :+ h).sorted).take(k)
+            else mins
+          st = KmvState(Math.addExact(st.n, 1L), next)
         }
+        val m = st.mins.size.toLong
+        val est = if (m < k) m else ((k - 1L) * 4294967296L) / st.mins.last
+        out += KmvSnapshot(key, st.n, m, est)
+        Some(st)
     }
   }
 
@@ -1540,40 +1442,30 @@ object StateMachines {
     require(betaDen > 0 && betaNum > 0 && betaNum <= betaDen,
       s"need 0 < betaNum <= betaDen, got $betaNum/$betaDen")
     require(valueScale >= 1L, s"valueScale must be >= 1, got $valueScale")
-    events.groupByKey(_.key).flatMapGroupsWithState(
-      OutputMode.Append, timeoutConf(stateTtlMs)) {
-      (key: String, it: Iterator[ValuedEvent], state: GroupState[HoltState]) =>
-        if (state.hasTimedOut) {
-          state.remove()
-          Iterator.empty
-        } else {
-          var st = state.getOption.getOrElse(HoltState(0L, 0L, 0L, 0L))
-          it.toArray.sortBy(e => (e.tsMs, e.tiebreak)).foreach { e =>
-            val vs = Math.multiplyExact(e.value, valueScale)
-            st =
-              if (st.n == 0L) HoltState(1L, e.tsMs, vs, 0L)
-              else {
-                val pred = Math.addExact(st.l, st.b)
-                val l2 = Math.addExact(
-                  Math.multiplyExact(alphaNum.toLong, vs),
-                  Math.multiplyExact((alphaDen - alphaNum).toLong, pred)) /
-                  alphaDen
-                val b2 = Math.addExact(
-                  Math.multiplyExact(betaNum.toLong,
-                    Math.subtractExact(l2, st.l)),
-                  Math.multiplyExact((betaDen - betaNum).toLong, st.b)) /
-                  betaDen
-                HoltState(Math.addExact(st.n, 1L), e.tsMs, l2, b2)
-              }
-          }
-          if (st.n == 0L) Iterator.empty
-          else {
-            state.update(st)
-            stateTtlMs.foreach(state.setTimeoutDuration)
-            Iterator.single(HoltSnapshot(key, st.n, st.lastMs, st.l, st.b,
-              Math.addExact(st.l, st.b)))
-          }
+    walk[ValuedEvent, HoltState, HoltSnapshot](events, stateTtlMs) {
+      (key, prior, batch, out) =>
+        var st = prior.getOrElse(HoltState(0L, 0L, 0L, 0L))
+        batch.foreach { e =>
+          val vs = Math.multiplyExact(e.value, valueScale)
+          st =
+            if (st.n == 0L) HoltState(1L, e.tsMs, vs, 0L)
+            else {
+              val pred = Math.addExact(st.l, st.b)
+              val l2 = Math.addExact(
+                Math.multiplyExact(alphaNum.toLong, vs),
+                Math.multiplyExact((alphaDen - alphaNum).toLong, pred)) /
+                alphaDen
+              val b2 = Math.addExact(
+                Math.multiplyExact(betaNum.toLong,
+                  Math.subtractExact(l2, st.l)),
+                Math.multiplyExact((betaDen - betaNum).toLong, st.b)) /
+                betaDen
+              HoltState(Math.addExact(st.n, 1L), e.tsMs, l2, b2)
+            }
         }
+        out += HoltSnapshot(key, st.n, st.lastMs, st.l, st.b,
+          Math.addExact(st.l, st.b))
+        Some(st)
     }
   }
 
@@ -1612,51 +1504,40 @@ object StateMachines {
     require(gammaDen > 0 && gammaNum > 0 && gammaNum <= gammaDen,
       s"need 0 < gammaNum <= gammaDen, got $gammaNum/$gammaDen")
     require(valueScale >= 1L, s"valueScale must be >= 1, got $valueScale")
-    events.groupByKey(_.key).flatMapGroupsWithState(
-      OutputMode.Append, timeoutConf(stateTtlMs)) {
-      (key: String, it: Iterator[ValuedEvent], state: GroupState[HwState]) =>
-        if (state.hasTimedOut) {
-          state.remove()
-          Iterator.empty
-        } else {
-          var st = state.getOption.getOrElse(
-            HwState(0L, 0L, 0L, 0L, Seq.empty))
-          it.toArray.sortBy(e => (e.tsMs, e.tiebreak)).foreach { e =>
-            val vs = Math.multiplyExact(e.value, valueScale)
-            st =
-              if (st.n == 0L)
-                HwState(1L, e.tsMs, vs, 0L, Seq.fill(period)(0L))
-              else {
-                val idx = (st.n % period).toInt // (n-1) mod m for event n
-                val si = st.s(idx)
-                val l2 = Math.addExact(
-                  Math.multiplyExact(alphaNum.toLong,
-                    Math.subtractExact(vs, si)),
-                  Math.multiplyExact((alphaDen - alphaNum).toLong,
-                    Math.addExact(st.l, st.b))) / alphaDen
-                val b2 = Math.addExact(
-                  Math.multiplyExact(betaNum.toLong,
-                    Math.subtractExact(l2, st.l)),
-                  Math.multiplyExact((betaDen - betaNum).toLong, st.b)) /
-                  betaDen
-                val s2 = Math.addExact(
-                  Math.multiplyExact(gammaNum.toLong,
-                    Math.subtractExact(vs, l2)),
-                  Math.multiplyExact((gammaDen - gammaNum).toLong, si)) /
-                  gammaDen
-                HwState(Math.addExact(st.n, 1L), e.tsMs, l2, b2,
-                  st.s.updated(idx, s2))
-              }
-          }
-          if (st.n == 0L) Iterator.empty
-          else {
-            state.update(st)
-            stateTtlMs.foreach(state.setTimeoutDuration)
-            Iterator.single(HwSnapshot(key, st.n, st.lastMs, st.l, st.b,
-              Math.addExact(Math.addExact(st.l, st.b),
-                st.s((st.n % period).toInt))))
-          }
+    walk[ValuedEvent, HwState, HwSnapshot](events, stateTtlMs) {
+      (key, prior, batch, out) =>
+        var st = prior.getOrElse(HwState(0L, 0L, 0L, 0L, Seq.empty))
+        batch.foreach { e =>
+          val vs = Math.multiplyExact(e.value, valueScale)
+          st =
+            if (st.n == 0L)
+              HwState(1L, e.tsMs, vs, 0L, Seq.fill(period)(0L))
+            else {
+              val idx = (st.n % period).toInt // (n-1) mod m for event n
+              val si = st.s(idx)
+              val l2 = Math.addExact(
+                Math.multiplyExact(alphaNum.toLong,
+                  Math.subtractExact(vs, si)),
+                Math.multiplyExact((alphaDen - alphaNum).toLong,
+                  Math.addExact(st.l, st.b))) / alphaDen
+              val b2 = Math.addExact(
+                Math.multiplyExact(betaNum.toLong,
+                  Math.subtractExact(l2, st.l)),
+                Math.multiplyExact((betaDen - betaNum).toLong, st.b)) /
+                betaDen
+              val s2 = Math.addExact(
+                Math.multiplyExact(gammaNum.toLong,
+                  Math.subtractExact(vs, l2)),
+                Math.multiplyExact((gammaDen - gammaNum).toLong, si)) /
+                gammaDen
+              HwState(Math.addExact(st.n, 1L), e.tsMs, l2, b2,
+                st.s.updated(idx, s2))
+            }
         }
+        out += HwSnapshot(key, st.n, st.lastMs, st.l, st.b,
+          Math.addExact(Math.addExact(st.l, st.b),
+            st.s((st.n % period).toInt)))
+        Some(st)
     }
   }
 
@@ -1682,34 +1563,24 @@ object StateMachines {
       : Dataset[AnomalyFlag] = {
     require(k > 0, s"k (σ multiplier) must be positive, got $k")
     require(minPrior >= 2, s"minPrior must be >= 2, got $minPrior")
-    events.groupByKey(_.key).flatMapGroupsWithState(
-      OutputMode.Append, timeoutConf(stateTtlMs)) {
-      (key: String, it: Iterator[ValuedEvent],
-       state: GroupState[MomentState]) =>
-        if (state.hasTimedOut) {
-          state.remove()
-          Iterator.empty
-        } else {
-          val out = ArrayBuffer.empty[AnomalyFlag]
-          var st = state.getOption.getOrElse(MomentState(0L, 0L, 0L))
-          it.toArray.sortBy(e => (e.tsMs, e.tiebreak)).foreach { e =>
-            if (st.n >= minPrior) {
-              val dev = BigInt(e.value) * st.n - st.s
-              val vr = BigInt(st.n) * st.ss - BigInt(st.s) * st.s
-              if (vr > 0 && dev * dev > BigInt(k.toLong * k) * vr) {
-                val z = math.floor(dev.toDouble / math.sqrt(vr.toDouble)
-                  * 1000000d) / 1000000d
-                out += AnomalyFlag(key, e.tiebreak, e.tsMs, e.value, st.n, z)
-              }
+    walk[ValuedEvent, MomentState, AnomalyFlag](events, stateTtlMs) {
+      (key, prior, batch, out) =>
+        var st = prior.getOrElse(MomentState(0L, 0L, 0L))
+        batch.foreach { e =>
+          if (st.n >= minPrior) {
+            val dev = BigInt(e.value) * st.n - st.s
+            val vr = BigInt(st.n) * st.ss - BigInt(st.s) * st.s
+            if (vr > 0 && dev * dev > BigInt(k.toLong * k) * vr) {
+              val z = math.floor(dev.toDouble / math.sqrt(vr.toDouble)
+                * 1000000d) / 1000000d
+              out += AnomalyFlag(key, e.tiebreak, e.tsMs, e.value, st.n, z)
             }
-            st = MomentState(Math.addExact(st.n, 1L),
-              Math.addExact(st.s, e.value),
-              Math.addExact(st.ss, Math.multiplyExact(e.value, e.value)))
           }
-          state.update(st)
-          stateTtlMs.foreach(state.setTimeoutDuration)
-          out.iterator
+          st = MomentState(Math.addExact(st.n, 1L),
+            Math.addExact(st.s, e.value),
+            Math.addExact(st.ss, Math.multiplyExact(e.value, e.value)))
         }
+        Some(st)
     }
   }
 
@@ -1754,34 +1625,21 @@ object StateMachines {
     * qualifies — the LEFT-join convention. */
   def asofMatches(events: Dataset[AsofEvent],
                   stateTtlMs: Option[Long] = None): Dataset[AsofMatch] =
-    events.groupByKey(_.key).flatMapGroupsWithState(
-      OutputMode.Append, timeoutConf(stateTtlMs)) {
-      (key: String, it: Iterator[AsofEvent], state: GroupState[AsofRight]) =>
-        if (state.hasTimedOut) {
-          state.remove()
-          Iterator.empty
-        } else {
-          val out = ArrayBuffer.empty[AsofMatch]
-          var st = state.getOption.orNull
-          it.toArray
-            .sortBy(e => (e.tsMs, e.isLeft, e.tiebreak)) // rights first
-            .foreach { e =>
-              if (e.isLeft) {
-                if (st != null && st.tsMs <= e.tsMs)
-                  out += AsofMatch(key, e.tiebreak, e.tsMs,
-                    Some(st.tsMs), Some(st.tiebreak))
-                else
-                  out += AsofMatch(key, e.tiebreak, e.tsMs, None, None)
-              } else if (st == null || e.tsMs > st.tsMs
-                  || (e.tsMs == st.tsMs && e.tiebreak > st.tiebreak)) {
-                st = AsofRight(e.tsMs, e.tiebreak)
-              }
-            }
-          if (st != null) {
-            state.update(st)
-            stateTtlMs.foreach(state.setTimeoutDuration)
+    walk[AsofEvent, AsofRight, AsofMatch](events, stateTtlMs, AsofOrder) {
+      (key, prior, batch, out) =>
+        var st = prior.orNull
+        batch.foreach { e =>
+          if (e.isLeft) {
+            if (st != null && st.tsMs <= e.tsMs)
+              out += AsofMatch(key, e.tiebreak, e.tsMs,
+                Some(st.tsMs), Some(st.tiebreak))
+            else
+              out += AsofMatch(key, e.tiebreak, e.tsMs, None, None)
+          } else if (st == null || e.tsMs > st.tsMs
+              || (e.tsMs == st.tsMs && e.tiebreak > st.tiebreak)) {
+            st = AsofRight(e.tsMs, e.tiebreak)
           }
-          out.iterator
         }
+        Option(st)
     }
 }

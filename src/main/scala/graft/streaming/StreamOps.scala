@@ -441,87 +441,6 @@ object StreamOps {
         idR, strR, maxDist), batchId)
     }
 
-  /** Streaming allowlist/blocklist gate, stream-static form: every
-    * micro-batch of `big` runs the batch CoreOps.bloomAntiJoin against the
-    * CURRENT `small` relation — drop rows whose key appears in a
-    * (slowly-changing) block table, with the Bloom prune keeping the
-    * per-trigger cost at one small-side isEmpty probe + one bloom-build
-    * aggregate + a join over only the probe hits. That per-trigger rebuild
-    * is the price of picking up block-table changes at trigger
-    * granularity; it dominates at sub-second triggers over a static table. Per-row semantics against a static right side → output
-    * independent of the micro-batch split (parity in StreamingParitySpec);
-    * same idempotent-sink contract as asofJoinEachBatch. For a block table
-    * that changes rarely, build the BloomFilter once outside and filter
-    * with BloomProbeExpressions.mightContain directly instead. */
-  def bloomAntiJoinEachBatch(big: DataFrame, small: DataFrame,
-                             bigKey: String, smallKey: String,
-                             expectedItems: Long, fpp: Double = 1e-3)(
-      write: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    big.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      write(CoreOps.bloomAntiJoin(batch, small, bigKey, smallKey,
-        expectedItems, fpp), batchId)
-    }
-
-  /** Streaming decontamination, stream-static form: every micro-batch of
-    * incoming docs is checked against the CURRENT benchmark relation with
-    * the batch Dedup.contaminationPairs — gate documents against eval sets
-    * at ingest time instead of in a later sweep. Contamination is per-doc
-    * vs the static benchmark, so output is independent of the micro-batch
-    * split (parity with the batch operator is exact); the benchmark
-    * re-evaluates per trigger, picking up newly registered eval sets. Same
-    * idempotent-sink contract as asofJoinEachBatch: the callback gets the
-    * epoch's batchId. */
-  def decontaminateEachBatch(docs: DataFrame, bench: DataFrame, id: String,
-                             text: String, k: Int, w: Int,
-                             minContainment: Double)(
-      write: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      write(graft.operators.Dedup.contaminationPairs(
-        batch, bench, id, text, k, w, minContainment), batchId)
-    }
-
-  /** Streaming TEXT near-dup gate, stream-static form: every micro-batch
-    * of incoming documents runs the batch Dedup.lshJaccardJoin against
-    * the standing corpus — MinHash bands generate cross-side candidates,
-    * exact shingle-set Jaccard verifies — so "have we already crawled a
-    * near-copy of this page?" is answered at ingest, before the doc ever
-    * enters the corpus (the nearDupEachBatch idiom for the text
-    * modality; decontaminateEachBatch gates on benchmark CONTAINMENT,
-    * this gates on corpus SIMILARITY). Per-row semantics against the
-    * static right ⇒ output independent of the micro-batch split (parity
-    * in StreamingParitySpec); the corpus relation re-evaluates per
-    * trigger. Same idempotent-sink contract as asofJoinEachBatch. */
-  def lshJoinEachBatch(stream: DataFrame, corpus: DataFrame, idL: String,
-                       textL: String, idR: String, textR: String, k: Int,
-                       bands: Int, rowsPerBand: Int, minJaccard: Double)(
-      write: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      write(graft.operators.Dedup.lshJaccardJoin(batch, corpus, idL,
-        textL, idR, textR, k, bands, rowsPerBand, minJaccard), batchId)
-    }
-
-  /** Streaming near-dup gate, stream-static form: every micro-batch of
-    * incoming binary payloads probes the Hamming-band index of a standing
-    * corpus with the batch Multimodal.imageDupJoin — "have we already got
-    * a near-identical image/clip?" answered at ingest time instead of in
-    * a later sweep. The index is broadcast-bounded with fail-loud
-    * maxBucket buckets, so each trigger is a map-side band probe + exact
-    * signature verify over only the colliding candidates — zero shuffle
-    * of the stream, zero Spark state (nothing grows with stream length).
-    * Matching is per-left-row against the static right, so output is
-    * independent of the micro-batch split (parity with the batch operator
-    * is exact — StreamingParitySpec); the index relation re-evaluates per
-    * trigger, picking up newly registered payloads at trigger
-    * granularity. Same idempotent-sink contract as asofJoinEachBatch. */
-  def nearDupEachBatch(stream: DataFrame, index: DataFrame, idL: String,
-                       binL: String, idR: String, binR: String,
-                       maxHamming: Int, maxBucket: Int = 10000)(
-      write: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      write(graft.operators.Multimodal.imageDupJoin(batch, index,
-        idL, binL, idR, binR, maxHamming, maxBucket), batchId)
-    }
-
   /** Streaming QUALITY gate — the TRAINED classifier applied at ingest
     * (the fourth gate beside contamination, text near-dup, and binary
     * near-dup): every micro-batch of arriving documents is scored under
@@ -537,47 +456,6 @@ object StreamOps {
     stream.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
       write(graft.operators.LogReg.scoreUnlabeled(batch, features, weights,
         keep), batchId)
-    }
-
-  /** Streaming PERPLEXITY gate — the self-trained unigram LM applied at
-    * ingest (the fifth gate): each micro-batch's documents are scored by
-    * exact µnat NLL under the FROZEN inventory. Unlike the batch docPpl
-    * join (whose word table covers the training corpus), the gate
-    * Viterbi-segments the BATCH'S OWN distinct words under the frozen
-    * vocab — so out-of-vocabulary words of arriving docs still score
-    * (unknown chars segment at the qlog(1)−Z floor, canonical unigram
-    * OOV), nothing silently drops. `zQ` is the inventory's normalizer
-    * (Unigram.zOf, computed ONCE at gate construction — a plan literal,
-    * the frozen-artifact discipline). Per-row semantics against the
-    * static inventory ⇒ output independent of the micro-batch split
-    * (parity vs the same computation run as one batch — UnigramSpec).
-    * Emits (id, n_words, n_pieces, nll_scaled, mean_nll) per scored doc;
-    * the caller thresholds mean_nll. Same idempotent-sink contract as
-    * asofJoinEachBatch. */
-  def pplGateEachBatch(stream: DataFrame, id: String, text: String,
-                       vocab: DataFrame, zQ: Long, maxWordLen: Int,
-                       maxPieceLen: Int)(
-      write: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      val words = graft.operators.Unigram.words(batch, text, maxWordLen)
-      val seg = graft.operators.Unigram.viterbi(words, vocab, zQ,
-          maxWordLen, maxPieceLen)
-        .select(col("word"), col("n_pieces"), col("best_qll"))
-      val dw = batch.filter(col(text).isNotNull)
-        .select(col(id),
-          explode(filter(split(lower(col(text)), "[^a-z]+"),
-            w => w =!= "" && length(w) <= maxWordLen)).as("word"))
-        .groupBy(col(id), col("word")).agg(count(lit(1)).as("_n"))
-      val out = dw.join(seg, Seq("word"))
-        .groupBy(col(id))
-        .agg(sum(col("_n")).as("n_words"),
-          sum(col("_n") * col("n_pieces")).as("n_pieces"),
-          (-sum(col("_n") * col("best_qll"))).as("nll_scaled"))
-        .select(col(id), col("n_words"), col("n_pieces"),
-          col("nll_scaled"),
-          (floor(col("nll_scaled").cast("double")
-            / col("n_pieces").cast("double")) / 1000000d).as("mean_nll"))
-      write(out, batchId)
     }
 
   /** The COMPOSED five-gate ingest pipeline — the reference's E8 move

@@ -5,8 +5,9 @@ import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
 /** Generates docs/REGISTRY.md — the machine-built per-tier query index
-  * (query name → operator → file:line → oracle kind) so judges and future
-  * rounds stop hand-counting a 300+ query registry.
+  * (query name → operator → def site → oracle kind) so readers stop
+  * hand-counting a 300+ query registry. A def site is `file#method`, not
+  * file:line, so edits that only move code leave the index unchanged.
   *
   * Ground truth is the COMPILED registry (`SparkEntry.queries` /
   * `SparkEntry.oracleSql`); the operator attribution is parsed from the
@@ -102,10 +103,10 @@ object Registry {
       if (obj == "SparkEntry") "SparkEntry.scala"
       else {
         val (f, src) = objFile(obj)
-        val lines = src.split("\n", -1)
-        val i = lines.indexWhere(_.matches(s".*def $method[\\[(: ].*"))
         val short = f.stripPrefix(SrcRoot + "/")
-        if (i >= 0) s"$short:${i + 1}" else short
+        if (s"def $method[\\[(: ]".r.findFirstIn(src).isDefined)
+          s"$short#$method"
+        else short
       }
 
     def oracleKind(name: String): String =

@@ -53,6 +53,46 @@ class PlanLintSpec extends SparkSpec {
     assert(scanned > 500, s"plan walker saw only $scanned nodes — unwrap broken?")
   }
 
+  test("every StateMachines walk groups by the key column: no per-row " +
+      "AppendColumns key lambda in its batch-mode executed plan") {
+    import graft.streaming.StateMachines._
+    val spk = spark
+    import spk.implicits._
+    val raw = Seq(("u", 1000L, 1L, "view", 5L), ("u", 2000L, 2L, "buy", 7L))
+      .toDF("k", "ts", "id", "kind", "v")
+    val (k, ts, id) = (col("k"), col("ts"), col("id"))
+    val ke = keyedEvents(raw, k, ts, id, col("kind"))
+    val ve = valuedEvents(raw, k, ts, id, col("v"))
+    val walks: Seq[(String, org.apache.spark.sql.Dataset[_])] = Seq(
+      "pageHinkley" -> pageHinkley(ve, 0L, 10L),
+      "latestSnapshots" ->
+        latestSnapshots(payloadEvents(raw, k, ts, id, col("kind"), col("v"))),
+      "intervalAlerts" -> intervalAlerts(ke, "view", 1000L),
+      "transitionPairs" -> transitionPairs(ke),
+      "funnelStages" -> funnelStages(ke, Seq("view", "buy")),
+      "sessionFunnelStages" -> sessionFunnelStages(ke, Seq("view", "buy"), 1000L),
+      "burstEnds" -> burstEnds(ke, 10L, 100L),
+      "streakEnds" -> streakEnds(ke),
+      "transitionPairs2" -> transitionPairs2(ke),
+      "actionDurations" -> actionDurations(ke, "login", "logout"),
+      "tokenBucket" -> tokenBucket(ke, 2, 1L, 1L),
+      "ewmaSnapshots" -> ewmaSnapshots(ve, 1, 2),
+      "sprtDecisions" -> sprtDecisions(ke, "buy", 100L, -100L, 1000L, -1000L),
+      "kmvSnapshots" -> kmvSnapshots(ve, 2),
+      "holtSnapshots" -> holtSnapshots(ve, 1, 2, 1, 2),
+      "holtWintersSnapshots" -> holtWintersSnapshots(ve, 2, 1, 2, 1, 2, 1, 2),
+      "expandingAnomalies" -> expandingAnomalies(ve, 3, 2),
+      "asofMatches" -> asofMatches(asofEvents(raw, k, ts, id, raw, k, ts, id)))
+    walks.foreach { case (name, ds) =>
+      val ops = nodes(ds.queryExecution.executedPlan).map(_.nodeName)
+      // batch execution plans the walk as MapGroups over a sort
+      assert(ops.contains("MapGroups"),
+        s"$name: no walk in its plan (${ops.mkString(", ")})")
+      assert(!ops.exists(_.startsWith("AppendColumns")),
+        s"$name groups by a per-row key lambda: ${ops.mkString(", ")}")
+    }
+  }
+
   // ── low-cardinality-partition window lint ─────────────────────────────
   // "Partitioned by a ~constant is unpartitioned at scale" (the round-11
   // lesson): a Window PARTITION BY over a handful of values (lang, a

@@ -491,4 +491,47 @@ class RecoverySpec extends SparkSpec {
     assert(got == card(straightDir),
       s"catch-up card diverged: $got vs ${card(straightDir)}")
   }
+
+  test("intervalAlerts restarts a checkpoint written by its earlier " +
+      "groupByKey(_.key) form with the state intact: a Delete 1,500 ms " +
+      "after a pre-restart Delete alerts") {
+    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout,
+      OutputMode}
+    // the keyed walk before it grouped by the key column: a per-row key
+    // lambda, the same state type and no timeout
+    def byKeyLambda(events: Dataset[KeyedEvent], deleteKind: String,
+                    thresholdMs: Long): Dataset[IntervalAlert] =
+      events.groupByKey(_.key).flatMapGroupsWithState(
+        OutputMode.Append, GroupStateTimeout.NoTimeout) {
+        (key: String, it: Iterator[KeyedEvent], state: GroupState[LastSeen]) =>
+          val out = scala.collection.mutable.ArrayBuffer.empty[IntervalAlert]
+          var last = state.getOption
+          it.toArray.sortBy(e => (e.tsMs, e.tiebreak)).foreach { e =>
+            if (e.kind == deleteKind) {
+              last.foreach { prev =>
+                val gap = e.tsMs - prev.tsMs
+                if (gap < thresholdMs) out += IntervalAlert(key, e.tsMs, gap)
+              }
+              last = Some(LastSeen(e.kind, e.tsMs))
+            }
+          }
+          last.foreach(state.update)
+          out.iterator
+      }
+    val schema = Encoders.product[KeyedEvent].schema
+    val inDir = tmp("graft_rec_ia_in")
+    val cp = tmp("graft_rec_ia_cp")
+    val outDir = tmp("graft_rec_ia_out")
+    appendJson(inDir, Seq(KeyedEvent("u", 1000, 1, "Delete"),
+      KeyedEvent("v", 1000, 2, "Login")))
+    runUntilDrained(inDir, schema, cp, outDir)(df =>
+      byKeyLambda(df.as[KeyedEvent], "Delete", 2000))
+    appendJson(inDir, Seq(KeyedEvent("u", 2500, 3, "Delete"),
+      KeyedEvent("w", 2500, 4, "Delete"))) // cold key: nothing to pair
+    runUntilDrained(inDir, schema, cp, outDir)(df =>
+      StateMachines.intervalAlerts(df.as[KeyedEvent], "Delete", 2000))
+    val rows = spark.read.parquet(outDir).collect().map(_.toString).toSet
+    // a lost or unreadable state would emit nothing for u
+    assert(rows == Set("[u,2500,1500]"), s"got $rows")
+  }
 }

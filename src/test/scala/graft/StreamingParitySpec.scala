@@ -425,116 +425,6 @@ class StreamingParitySpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("bloomAntiJoinEachBatch(stream-static) == plain anti join across splits") {
-    val block = Seq(2L, 4L).toDF("bk")
-    val batch1 = Seq((10L, 1L), (11L, 2L), (12L, 3L))
-    val batch2 = Seq((13L, 4L), (14L, 5L), (15L, 2L))
-    val input = MemoryStream[(Long, Long)]
-    val stream = input.toDF().toDF("rid", "k")
-    val sink = scala.collection.mutable.ArrayBuffer.empty[Long]
-    val q = StreamOps.bloomAntiJoinEachBatch(stream, block, "k", "bk", 2L) {
-      (out, _) => sink.synchronized {
-        sink ++= out.select("rid").as[Long].collect()
-      }
-    }.start()
-    try {
-      input.addData(batch1); q.processAllAvailable()
-      input.addData(batch2); q.processAllAvailable()
-      assert(sink.toSet == Set(10L, 12L, 14L)) // blocked keys 2 and 4 dropped
-      assert(sink.size == 3) // exactly-once per surviving row
-    } finally q.stop()
-  }
-
-  test("decontaminateEachBatch(stream-static) == contaminationPairs(batch) across splits") {
-    val benchText = "the quick brown fox jumps over the lazy dog"
-    val bench = Seq((1L, benchText)).toDF("doc_id", "text")
-    val batch1 = Seq((100L, "prefix words " + benchText + " and a long unrelated tail " +
-      "about completely different topics that dilute the jaccard similarity heavily"))
-    val batch2 = Seq((101L, "clean document about other things"),
-      (102L, benchText + " copied almost verbatim here"))
-    val input = MemoryStream[(Long, String)]
-    val stream = input.toDF().toDF("doc_id", "text")
-    val sink = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Double)]
-    val q = StreamOps.decontaminateEachBatch(stream, bench, "doc_id", "text",
-        3, 4, 0.9) { (out, _) =>
-      sink.synchronized { sink ++= out.as[(Long, Long, Double)].collect() }
-    }.start()
-    try {
-      input.addData(batch1); q.processAllAvailable()
-      input.addData(batch2); q.processAllAvailable()
-      val batchAll = (batch1 ++ batch2).toDF("doc_id", "text")
-      val expected = graft.operators.Dedup
-        .contaminationPairs(batchAll, bench, "doc_id", "text", 3, 4, 0.9)
-        .as[(Long, Long, Double)].collect().toSet
-      assert(sink.toSet == expected)
-      assert(sink.map(_._1).toSet == Set(100L, 102L)) // 101 is clean
-    } finally q.stop()
-  }
-
-  test("lshJoinEachBatch(stream-static) == lshJaccardJoin(batch) across " +
-      "splits; the standing corpus gates each text micro-batch") {
-    import graft.operators.Dedup
-    val corpus = Seq(
-      (100L, "the quick brown fox jumps over the lazy dog tonight"),
-      (101L, "completely different material about engines and parts"))
-      .toDF("doc_id", "text")
-    val batch1 = Seq((1L,
-      "the quick brown fox jumps over the lazy dog today"))
-    val batch2 = Seq(
-      (2L, "completely different material about engines and parts"),
-      (3L, "fresh unrelated content with its own vocabulary"))
-    val input = MemoryStream[(Long, String)]
-    val stream = input.toDF().toDF("doc_id", "text")
-    val sink = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Double)]
-    val q = StreamOps.lshJoinEachBatch(stream, corpus, "doc_id", "text",
-        "doc_id", "text", 3, 8, 2, 0.5) { (out, _) =>
-      sink.synchronized { sink ++= out.as[(Long, Long, Double)].collect() }
-    }.start()
-    try {
-      input.addData(batch1); q.processAllAvailable()
-      input.addData(batch2); q.processAllAvailable()
-      val expected = Dedup.lshJaccardJoin(
-          (batch1 ++ batch2).toDF("doc_id", "text"), corpus,
-          "doc_id", "text", "doc_id", "text", 3, 8, 2, 0.5)
-        .as[(Long, Long, Double)].collect().toSet
-      assert(sink.toSet == expected)
-      assert(sink.map(t => (t._1, t._2)).toSet == Set((1L, 100L), (2L, 101L)))
-    } finally q.stop()
-  }
-
-  test("nearDupEachBatch(stream-static) == imageDupJoin(batch) across " +
-      "splits; the standing index gates each micro-batch") {
-    import graft.operators.Multimodal
-    def withImg(df: org.apache.spark.sql.DataFrame) =
-      df.withColumn("img",
-        Multimodal.fakeImageBytes(col("text"), col("doc_id")))
-    // identical text + same doc_id%3 => identical payload => hamming 0
-    val index = withImg(Seq((100L, "alpha"), (101L, "beta"),
-      (102L, "gamma")).toDF("doc_id", "text"))
-    val batch1 = Seq((1L, "alpha"))  // 1%3 == 100%3: exact payload dup
-    val batch2 = Seq((2L, "beta"),   // 2%3 == 101%3: exact payload dup
-      (3L, "zeta"))                  // fresh content
-    val input = MemoryStream[(Long, String)]
-    val stream = withImg(input.toDF().toDF("doc_id", "text"))
-    val sink = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
-    val q = StreamOps.nearDupEachBatch(stream, index, "doc_id", "img",
-        "doc_id", "img", 2) { (out, _) =>
-      sink.synchronized { sink ++= out.as[(Long, Long, Long)].collect() }
-    }.start()
-    try {
-      input.addData(batch1); q.processAllAvailable()
-      input.addData(batch2); q.processAllAvailable()
-      val batchAll = withImg((batch1 ++ batch2).toDF("doc_id", "text"))
-      val expected = Multimodal.imageDupJoin(batchAll, index, "doc_id",
-          "img", "doc_id", "img", 2)
-        .as[(Long, Long, Long)].collect().toSet
-      assert(sink.toSet == expected)
-      // the exact-payload dups are caught, each against ITS index twin
-      assert(sink.toSet.contains((1L, 100L, 0L)))
-      assert(sink.toSet.contains((2L, 101L, 0L)))
-    } finally q.stop()
-  }
-
   test("funnelStages(streaming) completes across batches, emits once, in order only") {
     val batch1 = Seq(
       KeyedEvent("1", 1000, 1, "view"), KeyedEvent("1", 2000, 2, "click"),

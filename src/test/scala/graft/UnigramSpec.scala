@@ -76,52 +76,6 @@ class UnigramSpec extends SparkSpec {
     }
   }
 
-  test("pplGateEachBatch: micro-batch-split-exact parity with the one-" +
-      "shot computation, and OOV words of arriving docs still score") {
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    val (vocab, _) = Unigram.learn(docs, "text", 2, 64, 12, 4)
-    val frozen = vocab.localCheckpoint(true)
-    val zQ = Unigram.zOf(frozen)
-    // doc 11 is pure training-like text; doc 12 is OOV (zz) — both score
-    val arriving = Seq((11L, "aa ab"), (12L, "zz aa"))
-    def oneShot(rows: Seq[(Long, String)]) = {
-      import spark.implicits._
-      val batch = rows.toDF("doc_id", "text")
-      var got: Option[Set[(Long, Long, Long, Long, Double)]] = None
-      val input = MemoryStream[(Long, String)]
-      val acc = scala.collection.mutable.Set.empty[(Long, Long, Long, Long, Double)]
-      val q = graft.streaming.StreamOps.pplGateEachBatch(
-        input.toDS().toDF("doc_id", "text"), "doc_id", "text", frozen, zQ,
-        12, 4) { (out, _) =>
-        acc ++= out.as[(Long, Long, Long, Long, Double)].collect()
-      }.start()
-      try {
-        rows.foreach { r => input.addData(Seq(r)); q.processAllAvailable() }
-        got = Some(acc.toSet)
-      } finally q.stop()
-      got.get
-    }
-    val streamed = oneShot(arriving)
-    assert(streamed.map(_._1) === Set(11L, 12L))
-    // the OOV doc's zz segments char by char at the qlog(1)−Z floor:
-    // nll = 2·Z (two z chars) + aa's cost — strictly above doc 11's
-    val byId = streamed.map(t => t._1 -> t._5).toMap
-    assert(byId(12L) > byId(11L))
-    // split-independence: one-row batches above vs one two-row batch
-    val input2 = MemoryStream[(Long, String)]
-    val acc2 = scala.collection.mutable.Set.empty[(Long, Long, Long, Long, Double)]
-    val q2 = graft.streaming.StreamOps.pplGateEachBatch(
-      input2.toDS().toDF("doc_id", "text"), "doc_id", "text", frozen, zQ,
-      12, 4) { (out, _) =>
-      acc2 ++= out.as[(Long, Long, Long, Long, Double)].collect()
-    }.start()
-    try {
-      input2.addData(arriving); q2.processAllAvailable()
-      assert(acc2.toSet === streamed)
-    } finally q2.stop()
-  }
-
   test("reconstruction invariant on the real corpus: every segmented " +
       "word's pieces concatenate back to the word (the corpus word set " +
       "covers the held-out slice's)") {
