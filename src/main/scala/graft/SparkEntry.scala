@@ -97,7 +97,7 @@ object SparkEntry {
   private val WprIters = 5     // weighted pagerank iterations
   private val TextRankTopK = 50 // keywords kept by q_textrank
   private val HitsIters = 5        // HITS fixed-point iterations
-  private val HitsScale = 1000000L // HITS integer score scale (see hitsFixed)
+  private val HitsScale = 1000000L // HITS integer score scale (see hitsWithResidualOn)
   private val LpaIters = 4         // label-propagation rounds (even: the
                                    // bipartite co-sourcing graph 2-cycles)
   private val BfsSeedMod = 50L     // every 50th supplier seeds the BFS
@@ -206,11 +206,12 @@ object SparkEntry {
       |    sum(micro)::BIGINT::DOUBLE / 1000000 AS chi2
       |  FROM cell GROUP BY n, na, nb)""".stripMargin
 
-  /** Unrolled-CTE DuckDB twin of Graph.pagerankFixed over the bidirected
-    * supplier-part co-sourcing graph. Every arithmetic step is the SAME
-    * integer op as the Spark side (`//` ≡ `div` on non-negative operands),
-    * so after `iters` rounds the scaled ranks match bit-for-bit; the final
-    * `pr` is one double division with both operands exactly representable. */
+  /** Unrolled-CTE DuckDB twin of Graph.pagerankWithResidualOn over the
+    * bidirected supplier-part co-sourcing graph. Every arithmetic step is
+    * the SAME integer op as the Spark side (`//` ≡ `div` on non-negative
+    * operands), so after `iters` rounds the scaled ranks match
+    * bit-for-bit; the final `pr` is one double division with both
+    * operands exactly representable. */
   private def pagerankOracleCtes(iters: Int, scale: Long): String = {
     val head =
       s"""WITH sp AS (SELECT DISTINCT l_suppkey * 2 AS src,
@@ -248,7 +249,7 @@ object SparkEntry {
          |  COALESCE(sum(abs(a.pr - b.pr)), 0)::BIGINT::DOUBLE
          |    / CAST($scale AS DOUBLE) AS l1
          |FROM r$iters a JOIN r${iters - 1} b ON a.node = b.node""".stripMargin
-  /** Unrolled-CTE DuckDB twin of Graph.hitsFixed over the DIRECTED
+  /** Unrolled-CTE DuckDB twin of Graph.hitsWithResidualOn over the DIRECTED
     * supplier→part edges. Each half-step mirrors the Spark side's
     * integer ops exactly: Σ incoming scores, then (s·scale) // total
     * with zero-score nodes kept by the LEFT JOIN onto the node frame.
@@ -307,9 +308,9 @@ object SparkEntry {
          |JOIN a$iters a1 ON a1.node = h1.node
          |JOIN a${iters - 1} a0 ON a0.node = h1.node""".stripMargin
 
-  /** Unrolled-CTE twin of Graph.labelPropagation over the undirected
-    * co-sourcing graph: per round, neighbor-label counts, per-node max
-    * count, min label among the ties — every step an integer argmin, so
+  /** Unrolled-CTE twin of Graph.labelPropagationWithMovementOn over the
+    * undirected co-sourcing graph: per round, neighbor-label counts,
+    * per-node max count, min label among the ties — every step an integer argmin, so
     * the partition matches bit-for-bit after any fixed round count. */
   private def lpaOracleCtes(iters: Int): String = {
     val head =
@@ -375,7 +376,7 @@ object SparkEntry {
          |    / 1000000 AS modularity
          |FROM m CROSS JOIN q WHERE m.mm > 0""".stripMargin
 
-  /** Unrolled-CTE twin of Graph.labelPropagationWeighted over the
+  /** Unrolled-CTE twin of Graph.labelPropagationWeightedOn over the
     * co-sourcing graph with lineitem multiplicities: the lpaOracleCtes
     * chain with canonical-pair weight sums voting in place of counts. */
   private def lpaWeightedOracleSql(iters: Int): String =
@@ -460,7 +461,7 @@ object SparkEntry {
   }
 
   /** The per-community card over the UNWEIGHTED LPA partition and the
-    * weighted canonical edge set (Graph.communityCard twin): size, intra
+    * weighted canonical edge set (Graph.communityCardFrom twin): size, intra
     * edges/weight, weighted cut (both endpoints' communities charged),
     * trunc6'd conductance. */
   private def lpaCardOracleSql(iters: Int): String =
@@ -497,9 +498,9 @@ object SparkEntry {
          |FROM csz s LEFT JOIN cintra i USING (community)
          |LEFT JOIN ccut c USING (community)""".stripMargin
 
-  /** Unrolled-CTE twin of Graph.pagerankPersonalized over the bidirected
-    * sourcing graph with the q_bfs_dist seed set: the pagerank CTE chain
-    * with the uniform base swapped for a seed-CASE'd one (S = surviving
+  /** Unrolled-CTE twin of Graph.pagerankPersonalizedOn over the
+    * bidirected sourcing graph with the q_bfs_dist seed set: the pagerank
+    * CTE chain with the uniform base swapped for a seed-CASE'd one (S = surviving
     * seeds via the LEFT JOIN flag, exactly the Spark side's set). */
   private def pprOracleSql(iters: Int, scale: Long, seedMod: Long): String = {
     val head =
@@ -650,7 +651,7 @@ object SparkEntry {
       s" AS pr FROM r$iters"
   }
 
-  /** Unrolled-CTE twin of Graph.kcoreSurvivors: R synchronous peels;
+  /** Unrolled-CTE twin of Graph.kcoreSurvivorsOn: R synchronous peels;
     * canonical orientation differs (numeric vs lexicographic least) but
     * the UNORDERED pair set — and therefore every degree — is
     * orientation-independent. */
@@ -682,7 +683,7 @@ object SparkEntry {
          |GROUP BY 1""".stripMargin
   }
 
-  /** Unrolled-CTE twin of Graph.bfsDistances: seeds at dist 0, `rounds`
+  /** Unrolled-CTE twin of Graph.bfsDistancesOn: seeds at dist 0, `rounds`
     * synchronous min/+1 relaxations over the bidirected sourcing edges. */
   /** q_harmonic's twin: the bfsOracleSql relaxation keyed by (seed,
     * node), folded to Σ 10⁶ // d per node. */
@@ -1844,10 +1845,10 @@ object SparkEntry {
     "q_dup_clusters" -> ((s, dir) =>
       dupClustersShared(s, dir)),
     // entity resolution end-to-end: edit-distance pairs (provable-recall
-    // prefix filter) fed into the SAME pointer-jumping closure — records
+    // segment scheme) fed into the SAME pointer-jumping closure — records
     // within 2 edits transitively collapse to one canonical id. The
     // verified pair frame is shared with q_fuzzy_pairs/q_linkage_score
-    // (fuzzyPairsShared): the q-gram filter + banded verify runs once
+    // (fuzzyPairsShared): segment probing + banded verify runs once
     "q_entity_clusters" -> ((s, dir) =>
       Dedup.dupClusters(fuzzyPairsShared(s, dir), "doc_a", "doc_b")),
     // Fellegi-Sunter log-odds over the SAME fuzzy candidates: field
@@ -4399,7 +4400,7 @@ object SparkEntry {
     // the surfaced pairs are supplier-supplier co-purchase predictions
     // through part middles (deg ≤ ~41). AA and neighbor-Jaccard rank the
     // SAME candidate pair frame — the wedge join runs once
-    // (commonNeighborStats, memoized+persisted) and each query is its
+    // (commonNeighborStatsOn, memoized+persisted) and each query is its
     // own TakeOrderedAndProject over it
     "q_adamic_adar" -> ((s, dir) =>
       Graph.adamicAdarFrom(commonNeighborShared(s, dir), AaTopN)),
@@ -4834,7 +4835,7 @@ object SparkEntry {
 
   /** q_pagerank and q_pagerank_residual are views over ONE fixpoint: the
     * shared prefix of rounds is eagerly checkpointed inside
-    * pagerankWithResidual, so the residual gauge costs one extra join +
+    * pagerankWithResidualOn, so the residual gauge costs one extra join +
     * 1-row agg instead of a second full iteration. Same BENCH caveat as
     * nearDupPairs: the pair's per-query timings share one
     * materialization. */
@@ -5336,7 +5337,7 @@ object SparkEntry {
 
   /** The fused common-neighbor pair frame q_adamic_adar and
     * q_neighbor_jaccard both rank — the wedge self-join, anti join, and
-    * degree work run once (Graph.commonNeighborStats), persisted so the
+    * degree work run once (Graph.commonNeighborStatsOn), persisted so the
     * second score is a TakeOrderedAndProject over cached rows. */
   private val cnStatsCache = scala.collection.concurrent.TrieMap
     .empty[(SparkSession, String), DataFrame]
@@ -5914,7 +5915,7 @@ uvoc$r AS MATERIALIZED (SELECT c.piece, coalesce(u.cnt, 0)::BIGINT AS cnt
   }
 
   /** The BPE induction loop as MATERIALIZED unrolled CTEs (the
-    * pagerankFixed oracle pattern), mirroring TextOps.bpeLoop round for
+    * q_pagerank oracle pattern), mirroring TextOps.bpeLoop round for
     * round: per round, freq-weighted adjacent-pair counts, the
     * (count DESC, l, r) argmax winner, and the greedy-L2R re-segmentation
     * via the run-parity rule (merge every matched position when l != r;

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
@@ -37,15 +37,22 @@ object Tables {
     * and handed to the reader afterwards, which then only lists files. */
   private def parquet(s: SparkSession, path: String): DataFrame = {
     val p = new Path(path)
-    val it = p.getFileSystem(s.sessionState.newHadoopConf()).listFiles(p, true)
-    val files = Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
-      .map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).toVector.sorted
+    val files = leafFiles(p.getFileSystem(s.sessionState.newHadoopConf()), p)
+      .map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).sorted
     val conf = s.conf.getAll.filter { case (k, _) =>
       k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.")
     }
     val schema = schemas.computeIfAbsent((files, conf), _ => s.read.parquet(path).schema)
     s.read.schema(schema).parquet(path)
   }
+
+  /** Leaf files under `p` (or `p` itself when it is a file), by plain
+    * `listStatus` walks. `listFiles` would wrap each leaf in a
+    * LocatedFileStatus, which reads the file's permission: on a local FS
+    * without the native Hadoop library that forks an `ls -ld` per file. */
+  private def leafFiles(fs: FileSystem, p: Path): Vector[FileStatus] =
+    fs.listStatus(p).toVector.flatMap(st =>
+      if (st.isDirectory) leafFiles(fs, st.getPath) else Vector(st))
 
   /** events.parquet's `ts` physical type has varied across driver data
     * generations — parquet TIMESTAMP(NANOS) (which Spark's reader rejects by

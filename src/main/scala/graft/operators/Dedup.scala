@@ -227,197 +227,30 @@ object Dedup {
 
   /** Edit-distance similarity self-join — fuzzy pairs of strings within
     * `maxDist` Levenshtein edits (entity resolution: near-identical titles,
-    * URLs, names at corpus scale). Candidate generation is q-gram PREFIX
-    * FILTERING with a provable recall guarantee, then an exact banded
-    * Levenshtein verify:
+    * URLs, names at corpus scale). Emits (doc_a, doc_b, dist), doc_a <
+    * doc_b, each pair once, verified with a threshold-banded levenshtein
+    * (O(d·len) per pair). Recall is exact by construction — the DuckDB
+    * oracle for q_fuzzy_pairs is the brute-force all-pairs join, so a
+    * missed pair is a hash mismatch, not a silent quality loss.
     *
-    *  1. Each string's char k-grams are occurrence-NUMBERED (the j-th copy
-    *     of a gram is a distinct token), so set intersection of tokens
-    *     equals bag intersection of grams — the form the count bound needs.
-    *  2. Count filtering (Gravano et al., q-gram filters): one edit
-    *     destroys at most k grams, so ed(s,t) ≤ d ⇒ the bags share
-    *     ≥ max(|s|,|t|) − k + 1 − d·k grams.
-    *  3. Prefix filtering: order all tokens by (global document frequency
-    *     ASC, token ASC); two strings overlapping that much MUST share a
-    *     token among their first d·k + 1 tokens in that order. Only those
-    *     prefix tokens are indexed — the rarest grams, which is what keeps
-    *     buckets small where naive gram indexing drowns in "the "/"ing "
-    *     stopgrams.
-    *  4. Bucket-group pair expansion (the minhashPairs idiom: group by
-    *     token, expand inside the bucket — never a corpus self-join),
-    *     verify with threshold-banded levenshtein, O(d·len) per pair.
-    *
-    * The count bound is vacuous for strings shorter than (d+1)·k, so those
-    * FAIL LOUDLY (executor-side guard) — pre-filter or bucket short strings
-    * separately (they are cheap to compare exactly). NULL strings are
-    * dropped. Emits (doc_a, doc_b, dist), doc_a < doc_b, each pair once.
-    * Recall is exact by construction — the DuckDB oracle for q_fuzzy_pairs
-    * is the brute-force all-pairs join, so a missed pair is a hash
-    * mismatch, not a silent quality loss. Shuffles: token frequency agg,
-    * two bounded windows (per-string gram numbering / prefix rank), the
-    * token-bucket group — all over gram-sized rows (strings here are short
-    * keys, not documents); a pair sharing multiple prefix tokens verifies
-    * once per shared token before `distinct` (same trade minhashPairs
-    * makes — levenshtein on short strings is cheaper than a join back).
-    *
-    * `maxBucket` is the FAIL-LOUD bound on one prefix-token bucket (the
-    * rangeJoin `maxCellsPerInterval` / basketLift `maxBasketSize` idiom):
-    * prefix filtering picks the RAREST grams, which keeps buckets small on
-    * real text, but nothing in the math enforces it — a templated corpus
-    * (thousands of strings sharing one otherwise-rare q-gram) would make
-    * one bucket quadratic. Dropping hot tokens instead would VOID the
-    * recall lemma (a dropped token can be the ONLY shared prefix token of
-    * a true pair), so the contract is a diagnostic, never a silent drop:
-    * the guard names the token and the bucket size; raise `maxBucket`
-    * deliberately or pre-split the templated strings. Recall is untouched
-    * — nothing is filtered, the operator either runs exact or refuses. */
-  def fuzzyPairs(docs: DataFrame, id: String, str: String,
-                 k: Int, maxDist: Int, maxBucket: Int = 10000): DataFrame = {
-    require(k > 0, s"k must be positive, got $k")
-    require(maxDist >= 0, s"maxDist must be non-negative, got $maxDist")
-    require(maxBucket >= 2, s"maxBucket must be >= 2, got $maxBucket")
-    val tokens = fuzzyTokens(docs, id, str, k, maxDist, "fuzzyPairs")
-    val freq = tokens.groupBy(col("_tok")).agg(count(lit(1)).as("_freq"))
-    val prefix = fuzzyPrefix(tokens, freq, maxDist * k + 1)
-    val dist = levenshtein(col("a._st"), col("b._st"), maxDist)
-    // executor-side cap check rides the already-collected bucket — zero
-    // extra pass, zero extra shuffle
-    val capGuard = assert_true(size(col("ms")) <= maxBucket,
-      concat(lit("fuzzyPairs: prefix-token bucket '"), col("_tok"),
-        lit("' holds "), size(col("ms")).cast("string"),
-        lit(s" strings (> maxBucket=$maxBucket) — pair expansion would be " +
-          "quadratic. Raise maxBucket deliberately or pre-split " +
-          "templated/low-entropy strings; dropping the token would lose " +
-          "recall, so this operator refuses instead.")))
-    prefix.groupBy(col("_tok"))
-      .agg(collect_list(struct(col("doc"), col("_st"))).as("ms"))
-      .filter(capGuard.isNull)
-      .filter(size(col("ms")) > 1)
-      .select(explode(col("ms")).as("a"), col("ms"))
-      .select(col("a"), explode(col("ms")).as("b"))
-      .filter(col("a.doc") < col("b.doc"))
-      // threshold-banded DP: O(maxDist·len) per pair, -1 = over threshold
-      .select(col("a.doc").as("doc_a"), col("b.doc").as("doc_b"),
-        dist.cast("long").as("dist"))
-      .filter(col("dist") >= 0)
-      .distinct()
-  }
-
-  /** Cross-corpus form of fuzzyPairs — resolve `left` strings against
-    * `right` within `maxDist` edits (the entity-resolution join: raw
-    * records vs a canonical registry). Same machinery and the same recall
-    * guarantee, with one load-bearing difference: the global token order
-    * that prefix filtering requires must be ONE total order shared by both
-    * sides, so document frequencies aggregate over the UNION of both
-    * token sets before either side's prefixes are chosen (per-side
-    * frequencies would order tokens differently per side and void the
-    * lemma). Emits (left_id, right_id, dist), every qualifying pair once —
-    * including exact hits at dist 0. Same fail-loud minimum-length guard
-    * per side; same brute-force-oracle checkability; same fail-loud
-    * `maxBucket` cap per SIDE of a prefix-token bucket as fuzzyPairs (the
-    * bucket join's expansion is |L_tok|·|R_tok| ≤ maxBucket², a
-    * diagnostic instead of a quadratic stall — dropping the token would
-    * void the recall lemma, so the operator refuses instead). The cap
-    * check is a count over the per-token window the bucket join already
-    * shuffles on — no extra exchange. */
-  def fuzzyJoin(left: DataFrame, right: DataFrame,
-                idL: String, strL: String, idR: String, strR: String,
-                k: Int, maxDist: Int, maxBucket: Int = 10000): DataFrame = {
-    require(k > 0, s"k must be positive, got $k")
-    require(maxDist >= 0, s"maxDist must be non-negative, got $maxDist")
-    require(maxBucket >= 2, s"maxBucket must be >= 2, got $maxBucket")
-    val tokL = fuzzyTokens(left, idL, strL, k, maxDist, "fuzzyJoin(left)")
-    val tokR = fuzzyTokens(right, idR, strR, k, maxDist, "fuzzyJoin(right)")
-    val freq = tokL.select(col("_tok")).unionAll(tokR.select(col("_tok")))
-      .groupBy(col("_tok")).agg(count(lit(1)).as("_freq"))
-    val p = maxDist * k + 1
-    val dist = levenshtein(col("_lst"), col("_rst"), maxDist)
-    def capside(pref: DataFrame, side: String): DataFrame = {
-      val w = Window.partitionBy(col("_tok"))
-      val g = assert_true(count(lit(1)).over(w) <= maxBucket.toLong,
-        concat(lit(s"fuzzyJoin($side): prefix-token bucket '"), col("_tok"),
-          lit(s"' exceeds maxBucket=$maxBucket — the bucket join would go " +
-            "quadratic. Raise maxBucket deliberately or pre-split " +
-            "templated/low-entropy strings; dropping the token would lose " +
-            "recall, so this operator refuses instead.")))
-      pref.withColumn("_cap", g).filter(col("_cap").isNull).drop("_cap")
-    }
-    capside(fuzzyPrefix(tokL, freq, p), "left")
-      .select(col("doc").as("left_id"), col("_st").as("_lst"), col("_tok"))
-      .join(capside(fuzzyPrefix(tokR, freq, p), "right")
-        .select(col("doc").as("right_id"), col("_st").as("_rst"), col("_tok")),
-        Seq("_tok"))
-      .select(col("left_id"), col("right_id"), dist.cast("long").as("dist"))
-      .filter(col("dist") >= 0)
-      .distinct()
-  }
-
-  /** Occurrence-numbered q-gram tokens of one frame: (doc, _st, _tok) rows
-    * with the fail-loud minimum-length guard. Shared by fuzzyPairs and
-    * fuzzyJoin. */
-  private def fuzzyTokens(docs: DataFrame, id: String, str: String,
-                          k: Int, maxDist: Int, opName: String): DataFrame = {
-    require(id != "_st" && str != "_st",
-      s"$opName uses '_st' internally; rename the input column")
-    val minLen = (maxDist + 1) * k
-    val s = col(str)
-    // NULL-safe fail-loud guard (rangeJoin's assert_true idiom): the q-gram
-    // count bound cannot promise recall below minLen — refuse, don't miss
-    val guard = assert_true(s.isNull || length(s) >= minLen,
-      concat(lit(s"$opName: length('$str') must be >= $minLen " +
-        s"(= (maxDist+1)*k) for the q-gram bound to guarantee recall; got '"),
-        s, lit("'")))
-    val base = docs.select(col(id).as("doc"), s.as("_st"))
-      .filter(guard.isNull).filter(col("_st").isNotNull)
-    val gramArr = transform(sequence(lit(0), length(col("_st")) - k),
-      i => col("_st").substr(i + lit(1), lit(k)))
-    // occurrence numbers computed INSIDE the array (occ of gram i = copies
-    // of it at positions ≤ i): O(len²) char compares per row beats the
-    // exchange+sort a per-(doc, gram) window would cost — keys are short.
-    // Tokens are STRINGS g + "#" + occ (not structs): string keys keep the
-    // downstream frequency aggregate and token join in codegen'd
-    // HashAggregate/sort paths, and the encoding is unambiguous because occ
-    // is digit-only — splitting at the LAST '#' recovers (g, occ) uniquely
-    val tokArr = transform(gramArr, (g, i) =>
-      concat(g, lit("#"),
-        size(filter(slice(gramArr, lit(1), i + 1), x => x === g))
-          .cast("string")))
-    base.select(col("doc"), col("_st"), explode(tokArr).as("_tok"))
-  }
-
-  /** Each string's first `prefixLen` tokens under the shared global
-    * (frequency ASC, token ASC) order — the only tokens prefix filtering
-    * needs to index. */
-  private def fuzzyPrefix(tokens: DataFrame, freq: DataFrame,
-                          prefixLen: Int): DataFrame = {
-    val rank = Window.partitionBy(col("doc"))
-      .orderBy(col("_freq"), col("_tok"))
-    tokens.join(freq, Seq("_tok"))
-      .select(col("doc"), col("_st"), col("_tok"), col("_freq"))
-      .withColumn("_rn", row_number().over(rank))
-      .filter(col("_rn") <= prefixLen)
-      .drop("_freq", "_rn")
-  }
-
-  /** Partition-based fuzzy self-join — same contract and output as
-    * fuzzyPairs (pairs within `maxDist` edits, doc_a < doc_b, exact
-    * recall), with the Pass-Join candidate scheme (Li, Deng & Feng,
-    * PVLDB 2011) instead of q-gram prefix filtering: each string splits
+    * Candidates come from the Pass-Join segment scheme (Li, Deng & Feng,
+    * PVLDB 2011) rather than q-gram prefix filtering: each string splits
     * into maxDist+1 near-equal segments, and the pigeonhole principle says
     * `d` edits cannot touch all `d+1` segments — so for every true pair
     * some segment of one string survives VERBATIM in the other, shifted by
     * at most `d` positions (net indels before it). Candidates are exact
     * substring-equality hits on (target length, segment index, segment),
     * which on real text are far rarer than shared q-grams: at sf0.1 this
-    * generates 81k candidates where 5-gram prefix filtering generates
+    * generated 81k candidates where 5-gram prefix filtering generated
     * 1.1M, for the same provably-complete pair set.
     *
     * Distributed shape: one tiny distinct-lengths aggregate (broadcast —
     * O(max string length) rows at ANY corpus size), then map-side segment
     * and probe-substring generation, ONE equi-join on the
     * (length, segment index, substring) key, a distinct, and the banded
-    * levenshtein verify. No windows and no frequency table — the two
-    * per-string ranking windows prefix filtering needs don't exist here.
+    * levenshtein verify. No windows and no frequency table — the global
+    * gram-frequency order and the per-string ranking windows a prefix
+    * filter needs don't exist here.
     * Probe fan-out is bounded: ≤ (d+1) segments × (2d+1) target lengths ×
     * (2d+1) shifts per string, independent of string length or corpus
     * size. Index strings shorter than maxDist+1 chars FAIL LOUDLY (a
@@ -442,14 +275,18 @@ object Dedup {
   }
 
   /** Cross-corpus form of segmentPairs — resolve `left` strings against
-    * `right` within `maxDist` edits, same contract as fuzzyJoin. The
+    * `right` within `maxDist` edits (the entity-resolution join: raw
+    * records vs a canonical registry). Emits (left_id, right_id, dist),
+    * every qualifying pair once — including exact hits at dist 0 — with
+    * the same exact recall and brute-force-oracle checkability. The
     * pigeonhole guarantee is directional and this uses the direction that
     * needs no shared global state at all: a surviving segment of the RIGHT
     * string appears verbatim in the LEFT string, so `right` is segmented
     * (the registry — typically the smaller, deduplicated side) and `left`
     * only generates probe substrings against the registry's distinct
-    * lengths. Unlike fuzzyJoin there is no union-frequency aggregate over
-    * both corpora — the only shared state is the broadcast length list. */
+    * lengths. Unlike a q-gram prefix filter there is no union-frequency
+    * aggregate over both corpora — the only shared state is the broadcast
+    * length list. */
   def segmentJoin(left: DataFrame, right: DataFrame,
                   idL: String, strL: String, idR: String, strR: String,
                   maxDist: Int): DataFrame = {
@@ -917,8 +754,8 @@ object Dedup {
     * WITHOUT comparing the batch to itself: the ingest-time dedup gate a
     * growing corpus runs on every new crawl slice. Same signature pipeline
     * as lshJaccardPairs on each side — the md5-derived hash family is a
-    * pure function of the text, so unlike fuzzyJoin's union-frequency
-    * order there is NO shared state to compute across the corpora; the
+    * pure function of the text, so unlike a prefix filter's union-
+    * frequency order there is NO shared state to compute across the corpora; the
     * two sides only meet at the band-bucket equi-join. Verification is
     * the exact distinct-shingle-hash Jaccard, fused before `distinct` so
     * multi-band hits shrink in the same shuffle. Emits
@@ -983,13 +820,20 @@ object Dedup {
     * engine-exact; the verify is one jaccardHashes kernel per distinct
     * candidate pair. Recall is exact by construction — the DuckDB oracle
     * is the brute-force all-pairs join, so a missed pair is a hash
-    * mismatch, not a silent quality loss (the fuzzyPairs contract,
+    * mismatch, not a silent quality loss (the segmentPairs contract,
     * transplanted from edit distance to set similarity).
     *
-    * Same fail-loud `maxBucket` cap on a prefix-token bucket as
-    * fuzzyPairs: dropping a hot token would void the recall lemma, so a
-    * templated corpus is a named diagnostic, never a quadratic stall or
-    * a silent drop. Shuffles: shingle explode + frequency agg, one
+    * `maxBucket` is the FAIL-LOUD bound on one prefix-token bucket (the
+    * rangeJoin `maxCellsPerInterval` / basketLift `maxBasketSize` idiom):
+    * the prefix holds the RAREST shingles, which keeps buckets small on
+    * real text, but nothing in the math enforces it — a templated corpus
+    * (thousands of documents sharing one otherwise-rare shingle) would
+    * make one bucket quadratic. Dropping hot tokens instead would VOID
+    * the recall lemma (a dropped token can be the ONLY shared prefix
+    * token of a true pair), so the guard names the token and the bucket
+    * size: raise `maxBucket` deliberately or pre-split the templated
+    * documents — a named diagnostic, never a quadratic stall or a silent
+    * drop. Shuffles: shingle explode + frequency agg, one
     * per-doc ranking window, the token-bucket group, the verify join —
     * all bounded; never a corpus self-join. NULL ids/texts drop. Emits
     * (doc_a, doc_b, jaccard), doc_a < doc_b, each pair once. */
@@ -1524,7 +1368,7 @@ object Dedup {
   /** Fellegi-Sunter probabilistic linkage scores over CANDIDATE pairs —
     * the classical record-linkage model (Fellegi & Sunter 1969, JASA;
     * the Splink/dedupe formulation) on top of whatever bounded blocking
-    * produced the pairs (fuzzyPairs, minhash bands, …): each field's
+    * produced the pairs (segmentPairs, minhash bands, …): each field's
     * agreement contributes ln(m/u), each disagreement ln((1−m)/(1−u)),
     * and the pair's total log-odds ranks match likelihood — principled
     * evidence weighting where rare-value agreement (low u) counts for

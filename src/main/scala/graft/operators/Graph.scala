@@ -41,7 +41,8 @@ object Graph {
     * (edge ⋈ outdeg) frame (both shuffled on src — co-partitioned after the
     * first round) + one hash agg on dst + one left join back to nodes:
     * O(|E| + |V|) through every exchange, never a materialized matrix. The
-    * edge and node frames are localCheckpoint'd once and reused every round.
+    * edge and node frames are laid out once (pagerankLayout) and reused
+    * every round.
     * Driver traffic: ONE node count at build (folds N into plan literals);
     * zero per round — the iteration count is fixed, not convergence-tested,
     * so rank frames feed forward linearly through one lazy plan, with a
@@ -61,42 +62,11 @@ object Graph {
     * id spaces should pack them into disjoint integer ranges rather than
     * tag with string prefixes.
     */
-  /** Shared setup for the PageRank family: checkpointed distinct edge /
-    * node / (edge ⋈ outdeg) frames plus the ONE O(1)-result driver count
-    * that folds N into plan literals. nNodes == 0 ⇒ the graph is empty. */
+  /** Shared setup for the PageRank family: the layout's distinct node and
+    * (edge ⋈ outdeg) frames plus the ONE O(1)-result driver count that
+    * folds N into plan literals. nNodes == 0 ⇒ the graph is empty. */
   private case class PrSetup(nodes: DataFrame, withDeg: DataFrame,
                              nNodes: Long, init: Long, base: Long)
-
-  private def prSetup(edges: DataFrame, src: String, dst: String,
-                      scale: Long, op: String): PrSetup = {
-    require(scale >= 1000000L, s"scale must be >= 1e6, got $scale")
-    val emitted = Seq("node", "pr_scaled", "pr", "_src", "_dst", "_deg", "_s")
-    require(!emitted.contains(src) && !emitted.contains(dst),
-      s"$op emits/uses ${emitted.mkString(", ")}; rename inputs")
-    require(edges.schema(src).dataType == edges.schema(dst).dataType,
-      s"src/dst must share one node type; got ${edges.schema(src).dataType} " +
-        s"vs ${edges.schema(dst).dataType}")
-    val e = edges
-      .select(col(src).as("_src"), col(dst).as("_dst"))
-      .filter(col("_src").isNotNull && col("_dst").isNotNull)
-      .distinct()
-      .localCheckpoint(true) // reused every round: never recompute the source
-    val nodes = e.select(col("_src").as("node"))
-      .union(e.select(col("_dst").as("node")))
-      .distinct()
-      .localCheckpoint(true)
-    val withDeg = e
-      .join(e.groupBy(col("_src")).agg(count(lit(1)).as("_deg")), Seq("_src"))
-      .localCheckpoint(true)
-    // N as ONE O(1)-result driver action on the checkpointed node frame:
-    // `scale div N` and the per-round teleport base then fold into plan
-    // literals, so an iteration adds NO driver round-trip, no 1-row
-    // broadcast join, and no eager materialization — the whole fixpoint is
-    // one lazy plan (ranks feed forward linearly; nothing is recomputed)
-    val nNodes = nodes.count()
-    val init = if (nNodes == 0L) 0L else scale / nNodes // Long div ≡ div
-    PrSetup(nodes, withDeg, nNodes, init, (init * 15L) / 100L)
-  }
 
   /** One synchronous PageRank round:
     * pr'(v) = base + (Σ_{u→v} (pr(u) div outdeg(u)) * 85) div 100. */
@@ -229,30 +199,12 @@ object Graph {
       nNodes)
   }
 
-  /** prSetup over a prebuilt layout: same PrSetup contract, zero new work
-    * (the layout already normalized, partitioned, and counted). */
+  /** The PrSetup of a prebuilt layout: zero new work (the layout already
+    * normalized, partitioned, and counted). */
   private def prSetupFrom(l: PrLayout, scale: Long): PrSetup = {
     require(scale >= 1000000L, s"scale must be >= 1e6, got $scale")
     val init = if (l.nNodes == 0L) 0L else scale / l.nNodes
     PrSetup(l.nodes, l.withDeg, l.nNodes, init, (init * 15L) / 100L)
-  }
-
-  def pagerankFixed(edges: DataFrame, src: String, dst: String, iters: Int,
-                    scale: Long = 1000000000000L): DataFrame = {
-    require(iters >= 1 && iters <= 50, s"iters must be in [1,50], got $iters")
-    val s = prSetup(edges, src, dst, scale, "pagerankFixed")
-    if (s.nNodes == 0L)
-      return s.nodes.select(col("node"), lit(0L).as("pr_scaled"),
-        lit(0d).as("pr"))
-    var ranks = s.nodes.select(col("node"), lit(s.init).as("pr_scaled"))
-    for (i <- 1 to iters) {
-      ranks = prStep(s)(ranks)
-      // cut lineage only every few rounds: at small iters the chain stays
-      // one job; at the 50-iter cap depth never exceeds 8 joins per segment
-      if (i % 8 == 0 && i < iters) ranks = ranks.localCheckpoint(true)
-    }
-    ranks.select(col("node"), col("pr_scaled"),
-      (col("pr_scaled").cast("double") / lit(scale.toDouble)).as("pr"))
   }
 
   /** PERSONALIZED PageRank — importance relative to a trusted seed set,
@@ -261,8 +213,8 @@ object Graph {
     * rank nodes by proximity-weighted reachability FROM the seeds — the
     * trust-propagation gauge behind source-quality weighting and
     * contamination spread scoring. Same integer contract as
-    * pagerankFixed, with the uniform base swapped for a seed-conditional
-    * one:
+    * pagerankWithResidualOn's ranks, with the uniform base swapped for a
+    * seed-conditional one:
     *   init(v)  = scale div S        if v ∈ seeds else 0   (S = |seeds∩V|)
     *   pr'(v)   = [v ∈ seeds]·((scale div S)·15) div 100
     *            + (Σ_{u→v} (pr(u) div outdeg(u)) · 85) div 100
@@ -271,18 +223,10 @@ object Graph {
     * the edge set are DROPPED (they hold mass the graph can never see;
     * S counts survivors — the oracle must agree on the same set);
     * an empty surviving seed set emits all-zero ranks. Per round: the
-    * identical one-join-one-agg-one-left-join shape as pagerankFixed —
+    * identical one-join-one-agg-one-left-join shape as plain PageRank —
     * the seed flag rides the checkpointed node frame, costing nothing
-    * per round. Emits (node, pr_scaled, pr). */
-  def pagerankPersonalized(edges: DataFrame, src: String, dst: String,
-                           seeds: DataFrame, iters: Int,
-                           scale: Long = 1000000000000L): DataFrame =
-    pagerankPersonalizedCore(prSetup(edges, src, dst, scale,
-      "pagerankPersonalized"), seeds, iters, scale)
-
-  /** pagerankPersonalized over a prebuilt co-partitioned layout — same
-    * rounds, same output, minus the per-call setup and the per-round edge
-    * Exchange (see the layout scaladoc). */
+    * per round. Runs over a prebuilt co-partitioned layout (no per-call
+    * setup, no per-round edge Exchange). Emits (node, pr_scaled, pr). */
   def pagerankPersonalizedOn(l: PrLayout, seeds: DataFrame, iters: Int,
                              scale: Long = 1000000000000L): DataFrame =
     pagerankPersonalizedCore(prSetupFrom(l, scale), seeds, iters, scale)
@@ -298,7 +242,7 @@ object Graph {
         lit(0d).as("pr"))
     // seed flag onto the node frame, checkpointed once — the per-round
     // join/agg shape is untouched; ONE O(1)-result count folds S into
-    // plan literals exactly like prSetup's N
+    // plan literals exactly like prSetupFrom's N
     val flagged = s.nodes.join(
         seeds.filter(col("node").isNotNull).distinct()
           .select(col("node"), lit(true).as("_seed")),
@@ -330,22 +274,29 @@ object Graph {
   }
 
   /** The (ranks, residual) PAIR over ONE shared fixpoint prefix — for a
-    * registry exposing both queries: iters−1 rounds run once (the
-    * penultimate frame is eagerly checkpointed; it feeds both the final
-    * step and the diff), the final frame likewise (it feeds the rank
-    * output and the diff). Outputs are exactly pagerankFixed's and
-    * pagerankResidual's — the same integer arithmetic, so the same
-    * oracles hold — at one fixpoint's cost instead of two. Construction
-    * is EAGER (the checkpoints materialize now); one-shot callers who
-    * want a lazy single plan use the individual forms. */
-  def pagerankWithResidual(edges: DataFrame, src: String, dst: String,
-                           iters: Int, scale: Long = 1000000000000L)
-      : (DataFrame, DataFrame) =
-    pagerankWithResidualCore(prSetup(edges, src, dst, scale,
-      "pagerankWithResidual"), edges.sparkSession, iters, scale)
-
-  /** pagerankWithResidual over a prebuilt co-partitioned layout — same
-    * rounds, same outputs, minus the per-call setup and the per-round edge
+    * registry exposing both queries (q_pagerank, q_pagerank_residual):
+    * iters−1 rounds run once (the penultimate frame is eagerly
+    * checkpointed; it feeds both the final step and the diff), the final
+    * frame likewise (it feeds the rank output and the diff). The ranks are the fixed-iteration integer
+    * PageRank above and the residual is its last-round movement — the
+    * same integer arithmetic, so the same oracles hold — at one
+    * fixpoint's cost instead of two. Construction is EAGER (the
+    * checkpoints materialize now).
+    *
+    * The residual is the convergence gauge — "was `iters` enough?": the
+    * L1 residual Σ_v |pr_iters(v) − pr_{iters−1}(v)| between the LAST TWO
+    * rounds, as one summary row. Fixed-iteration PageRank is the right
+    * oracle-checkable core (bit-exact integer arithmetic, zero per-round
+    * driver traffic), but it reports no movement signal; the gauge
+    * reads the SAME integer rounds (so the oracle reproduces it digit for
+    * digit) off the penultimate rank frame — it has two consumers, the
+    * last step and the diff, so the cut prevents a re-execution of the
+    * whole chain, at the cost of one materialization — and folds the diff through one co-partitioned join + one global agg.
+    * Reading: residual ≈ 0 ⇒ converged; large ⇒ raise iters. The scaled
+    * residual is exact BIGINT; `l1` is one double division. Residual:
+    * ONE row (n_nodes, l1_scaled, l1); an empty graph emits all-zero
+    * ranks and the (0, 0, 0.0) row. Runs over a prebuilt co-partitioned
+    * layout, so there is no per-call setup and no per-round edge
     * Exchange (see the layout scaladoc). */
   def pagerankWithResidualOn(l: PrLayout, iters: Int,
                              scale: Long = 1000000000000L)
@@ -382,47 +333,8 @@ object Graph {
     (ranks, residual)
   }
 
-  /** Convergence gauge for pagerankFixed — "was `iters` enough?": the L1
-    * residual Σ_v |pr_iters(v) − pr_{iters−1}(v)| between the LAST TWO
-    * rounds, as one summary row. Fixed-iteration PageRank is the right
-    * oracle-checkable core (bit-exact integer arithmetic, zero per-round
-    * driver traffic), but it reports no movement signal; this companion
-    * runs the SAME integer rounds (so the oracle reproduces it digit for
-    * digit), localCheckpoints the penultimate rank frame — it has two
-    * consumers, the last step and the diff, so the cut prevents a
-    * re-execution of the whole chain, at the cost of one materialization —
-    * and folds the diff through one co-partitioned join + one global agg.
-    * Reading: residual ≈ 0 ⇒ converged; large ⇒ raise iters. The scaled
-    * residual is exact BIGINT; `l1` is one double division. Emits ONE row
-    * (n_nodes, l1_scaled, l1). Empty graph ⇒ (0, 0, 0.0). */
-  def pagerankResidual(edges: DataFrame, src: String, dst: String,
-                       iters: Int,
-                       scale: Long = 1000000000000L): DataFrame = {
-    require(iters >= 1 && iters <= 50, s"iters must be in [1,50], got $iters")
-    val s = prSetup(edges, src, dst, scale, "pagerankResidual")
-    val spark = edges.sparkSession
-    if (s.nNodes == 0L) {
-      import spark.implicits._
-      return Seq((0L, 0L, 0d)).toDF("n_nodes", "l1_scaled", "l1")
-    }
-    var prev = s.nodes.select(col("node"), lit(s.init).as("pr_scaled"))
-    for (i <- 1 until iters) {
-      prev = prStep(s)(prev)
-      if (i % 8 == 0) prev = prev.localCheckpoint(true)
-    }
-    prev = prev.localCheckpoint(true) // two consumers: last step + the diff
-    val last = prStep(s)(prev)
-    prev.select(col("node"), col("pr_scaled").as("_prev"))
-      .join(last, Seq("node"))
-      .agg(count(lit(1)).as("n_nodes"),
-        coalesce(sum(abs(col("pr_scaled") - col("_prev"))), lit(0L))
-          .as("l1_scaled"))
-      .select(col("n_nodes"), col("l1_scaled"),
-        (col("l1_scaled").cast("double") / lit(scale.toDouble)).as("l1"))
-  }
-
   /** HITS hubs & authorities by fixed-point INTEGER arithmetic — the
-    * bipartite-importance twin of pagerankFixed: on a directed graph
+    * bipartite-importance twin of integer PageRank: on a directed graph
     * (e.g. supplier→part sourcing edges) hubs are good pointers and
     * authorities are well-pointed-at targets, the two-sided importance
     * signal one PageRank score conflates. Kleinberg's iteration with
@@ -430,14 +342,14 @@ object Graph {
     *   a'(v) = Σ_{u→v} h(u);  a(v) = (a'(v)·scale) div Σ_w a'(w)
     *   h'(u) = Σ_{u→v} a(v);  h(u) = (h'(u)·scale) div Σ_w h'(w)
     * so after any number of rounds the scaled scores are bit-identical
-    * across engines/partitionings (the pagerankFixed argument; float HITS
+    * across engines/partitionings (the PageRank argument; float HITS
     * is order-dependent in both the sums and the norm).
     *
     * Distributed shape per round: two co-partitioned hash joins (scores
     * onto edges by src, then by dst) + two hash aggs + two 1-row
     * normalizer aggs that ride back as broadcast crossJoins — O(|E|+|V|)
-    * per exchange, zero driver traffic. Unlike pagerankFixed (whose
-    * rank frame has ONE consumer per round) the pre-normalization sum
+    * per exchange, zero driver traffic. Unlike PageRank (whose rank
+    * frame has ONE consumer per round) the pre-normalization sum
     * frame here feeds BOTH the normalizer and the join back, so each
     * half-step eagerly localCheckpoints it — 2·iters materializations
     * of O(|V|) frames, which also keeps lineage depth constant.
@@ -448,42 +360,28 @@ object Graph {
     * lowering scale). Zero-edge graphs emit all-zero scores; nodes with
     * no in-edges (resp. out-edges) hold authority (resp. hub) exactly 0.
     * Self-loops kept; parallel edges collapse; NULL endpoints drop.
-    * Emits (node, hub_scaled, auth_scaled, hub, auth) — the doubles are
-    * one exact division each. */
-  def hitsFixed(edges: DataFrame, src: String, dst: String, iters: Int,
-                scale: Long = 1000000L): DataFrame = {
-    val f = hitsCore(edges, src, dst, iters, scale, "hitsFixed")
-    hitsEmit(f.hubs, f.auths, scale)
-  }
-
-  /** The (scores, residual) PAIR over ONE shared HITS fixpoint — the
-    * q_pagerank_residual pattern for hitsFixed: "was `iters` enough?"
+    * Scores: (node, hub_scaled, auth_scaled, hub, auth) — the doubles are
+    * one exact division each.
+    *
+    * Emits the (scores, residual) PAIR over ONE shared HITS fixpoint —
+    * the q_pagerank_residual pattern for HITS: "was `iters` enough?"
     * answered by the L1 movement of BOTH score vectors between the last
     * two rounds, Σ_v |h_i(v) − h_{i−1}(v)| and Σ_v |a_i(v) − a_{i−1}(v)|,
     * as one summary row next to the rank output. Every half-step frame
     * is already eagerly checkpointed (the two-consumer rule), so the
     * gauge costs one four-way co-keyed join + one global agg on top of
-    * the fixpoint hitsFixed runs anyway — never a second fixpoint. Same
-    * bit-exact integer arithmetic, so the unrolled-CTE oracle reproduces
-    * both outputs digit for digit. Residual row: (n_nodes,
+    * the fixpoint itself — never a second fixpoint. Same bit-exact
+    * integer arithmetic, so the unrolled-CTE oracle reproduces both
+    * outputs digit for digit. Residual row: (n_nodes,
     * l1_hub_scaled, l1_auth_scaled, l1_hub, l1_auth); a zero-edge graph
     * emits (0, 0, 0, 0.0, 0.0). Needs iters ≥ 2 (round 1 has no
-    * predecessor authority vector to move from). */
-  def hitsWithResidual(edges: DataFrame, src: String, dst: String,
-                       iters: Int, scale: Long = 1000000L)
-      : (DataFrame, DataFrame) = {
-    require(iters >= 2, s"hitsWithResidual needs iters >= 2, got $iters")
-    val f = hitsCore(edges, src, dst, iters, scale, "hitsWithResidual")
-    hitsResidualEmit(f, scale)
-  }
-
-  /** hitsWithResidual over a prebuilt co-partitioned layout — same
-    * half-steps, same outputs, minus the per-call setup and the per-round
-    * edge Exchange on BOTH half-step joins (the layout carries the edge
-    * frame partitioned by `_src` and by `_dst`). */
+    * predecessor authority vector to move from). Runs over a prebuilt
+    * co-partitioned layout: the per-round edge Exchange disappears from
+    * BOTH half-step joins (the layout carries the edge frame partitioned
+    * by `_src` and by `_dst`). */
   def hitsWithResidualOn(l: HitsLayout, iters: Int, scale: Long = 1000000L)
       : (DataFrame, DataFrame) = {
-    require(iters >= 2, s"hitsWithResidual needs iters >= 2, got $iters")
+    require(iters >= 2, s"hitsWithResidualOn needs iters >= 2, got $iters")
     val f = hitsLoop(l.eBySrc, l.eByDst, l.nodes, iters, scale)
     hitsResidualEmit(f, scale)
   }
@@ -566,27 +464,6 @@ object Graph {
     HitsLayout(eBySrc, eByDst, nodes)
   }
 
-  private def hitsCore(edges: DataFrame, src: String, dst: String,
-                       iters: Int, scale: Long, op: String): HitsFrames = {
-    val emitted = Seq("node", "hub_scaled", "auth_scaled", "hub", "auth",
-      "_src", "_dst", "_s", "_t")
-    require(!emitted.contains(src) && !emitted.contains(dst),
-      s"$op emits/uses ${emitted.mkString(", ")}; rename inputs")
-    require(edges.schema(src).dataType == edges.schema(dst).dataType,
-      s"src/dst must share one node type; got ${edges.schema(src).dataType} " +
-        s"vs ${edges.schema(dst).dataType}")
-    val e = edges
-      .select(col(src).as("_src"), col(dst).as("_dst"))
-      .filter(col("_src").isNotNull && col("_dst").isNotNull)
-      .distinct()
-      .localCheckpoint(true)
-    val nodes = e.select(col("_src").as("node"))
-      .union(e.select(col("_dst").as("node")))
-      .distinct()
-      .localCheckpoint(true)
-    hitsLoop(e, e, nodes, iters, scale)
-  }
-
   private def hitsLoop(eBySrc: DataFrame, eByDst: DataFrame,
                        nodes: DataFrame, iters: Int,
                        scale: Long): HitsFrames = {
@@ -599,7 +476,7 @@ object Graph {
     // full node set every half-step (authority-less hubs and vice versa).
     // The pre-normalization sum frame has TWO consumers — the 1-row
     // normalizer total and the join back — so it is localCheckpoint'd
-    // (the pagerankResidual two-consumer rule); without the cut each
+    // (the pagerankWithResidualOn two-consumer rule); without the cut each
     // round re-executes its whole prefix through both consumers and the
     // fixpoint goes exponential in iters.
     def halfStep(e: DataFrame, scores: DataFrame, joinKey: String,
@@ -656,25 +533,12 @@ object Graph {
     * with a lineage cut every 4th round. `seeds` is a one-column
     * ("node") frame; seed nodes absent from the edge set still emit
     * dist 0 (they are legitimate sources). NULL endpoints/seeds drop;
-    * parallel edges collapse. Emits (node, dist). */
-  def bfsDistances(edges: DataFrame, src: String, dst: String,
-                   seeds: DataFrame, rounds: Int): DataFrame = {
-    val emitted = Seq("node", "dist", "_src", "_dst", "_d")
-    require(!emitted.contains(src) && !emitted.contains(dst),
-      s"bfsDistances emits/uses ${emitted.mkString(", ")}; rename inputs")
-    bfsDistancesCore(edges
-      .select(col(src).as("_src"), col(dst).as("_dst"))
-      .filter(col("_src").isNotNull && col("_dst").isNotNull)
-      .distinct()
-      .localCheckpoint(true), seeds, rounds)
-  }
-
-  /** bfsDistances over a prebuilt layout — same rounds, same output,
-    * minus the per-call edge distinct. The loop re-scans the edge frame
-    * once per round; a row-RDD checkpoint scans measurably faster than
-    * the columnar cache (one cache read per call buys `rounds` cheap
-    * scans), so the layout is re-staged here rather than consumed
-    * directly. */
+    * parallel edges collapse. Emits (node, dist).
+    *
+    * Runs over a prebuilt layout. The loop re-scans the edge frame once
+    * per round; a row-RDD checkpoint scans measurably faster than the
+    * columnar cache (one cache read per call buys `rounds` cheap scans),
+    * so the layout is re-staged here rather than consumed directly. */
   def bfsDistancesOn(l: PrLayout, seeds: DataFrame, rounds: Int): DataFrame =
     bfsDistancesCore(l.edges.localCheckpoint(true), seeds, rounds)
 
@@ -697,7 +561,7 @@ object Graph {
     dist
   }
 
-  /** Per-seed BFS hop distances — bfsDistances keyed by (seed, node)
+  /** Per-seed BFS hop distances — bfsDistancesOn keyed by (seed, node)
     * instead of collapsed to the min over seeds, so each seed's whole
     * distance field survives (what closeness/harmonic estimators and
     * landmark-distance features consume). Same exact min/+1 integer
@@ -705,23 +569,8 @@ object Graph {
     * O(|seeds|·|V|) rows — pick the seed sample accordingly (this is
     * the Boldi-Vigna sampling regime: a handful of seeds estimates
     * centralities on a 100 TB graph where the all-pairs field cannot
-    * exist). Emits (seed, node, dist ≤ rounds). */
-  def bfsDistancesPerSeed(edges: DataFrame, src: String, dst: String,
-                          seeds: DataFrame, rounds: Int): DataFrame = {
-    val emitted = Seq("seed", "node", "dist", "_src", "_dst")
-    require(!emitted.contains(src) && !emitted.contains(dst),
-      s"bfsDistancesPerSeed emits/uses ${emitted.mkString(", ")}; " +
-        "rename inputs")
-    bfsDistancesPerSeedCore(edges
-      .select(col(src).as("_src"), col(dst).as("_dst"))
-      .filter(col("_src").isNotNull && col("_dst").isNotNull)
-      .distinct()
-      .localCheckpoint(true), seeds, rounds)
-  }
-
-  /** bfsDistancesPerSeed over a prebuilt layout (the bfsDistancesOn
-    * argument — including its row-RDD re-staging — keyed by
-    * (seed, node)). */
+    * exist). Runs over a prebuilt layout, re-staged as bfsDistancesOn
+    * does. Emits (seed, node, dist ≤ rounds). */
   def bfsDistancesPerSeedOn(l: PrLayout, seeds: DataFrame,
                             rounds: Int): DataFrame =
     bfsDistancesPerSeedCore(l.edges.localCheckpoint(true), seeds, rounds)
@@ -752,18 +601,12 @@ object Graph {
     * stays well-defined on disconnected graphs (unreachable seeds
     * contribute zero, not infinity, unlike closeness). Exact integer:
     * each reciprocal enters as 10⁶ div d, the per-node sum is BIGINT.
-    * One bfsDistancesPerSeed run + one node-keyed agg; n_reached makes
-    * the sample coverage visible beside the score. Nodes no seed
+    * One bfsDistancesPerSeedOn frame + one node-keyed agg; n_reached
+    * makes the sample coverage visible beside the score. Nodes no seed
     * reaches within `rounds` are absent (unmeasured, not zero). Emits
-    * (node, n_reached, harmonic_ppm). */
-  def harmonicCentrality(edges: DataFrame, src: String, dst: String,
-                         seeds: DataFrame, rounds: Int): DataFrame =
-    harmonicCentralityFrom(bfsDistancesPerSeed(edges, src, dst, seeds,
-      rounds))
-
-  /** harmonicCentrality's aggregation view over a bfsDistancesPerSeed
-    * frame — lets a caller share ONE BFS between this and
-    * betweennessSampledFrom when both run on the same seeds/rounds. */
+    * (node, n_reached, harmonic_ppm). Taking the BFS frame as input lets
+    * a caller share ONE BFS between this and betweennessSampledFromOn
+    * when both run on the same seeds/rounds. */
   def harmonicCentralityFrom(dist: DataFrame): DataFrame =
     dist
       .filter(col("dist") > 0L)
@@ -776,7 +619,7 @@ object Graph {
     * through? The bridge/broker gauge degree and PageRank both miss
     * (a low-degree node connecting two communities scores ~0 on both
     * and dominates here). Exact per-seed Brandes, RELATIONALLY: the
-    * per-seed BFS fields (bfsDistancesPerSeed) induce the shortest-path
+    * per-seed BFS fields (bfsDistancesPerSeedOn) induce the shortest-path
     * DAG (edges where dist(v) = dist(u)+1, each seed's own levels);
     * path counts σ accumulate FORWARD level by level (σ_seed = 1,
     * σ(v) = Σ_pred σ(u) — decimal(38,0): path counts compound);
@@ -788,36 +631,17 @@ object Graph {
     * O(|seeds|·|V|) state and 2·rounds bounded joins — the exact
     * all-sources form cannot exist at 100 TB, the sample's can. Emits
     * (node, bc_ppm) for every node some seed reaches at dist ≥ 1
-    * (zeros kept: "on no shortest path" is a finding). */
-  def betweennessSampled(edges: DataFrame, src: String, dst: String,
-                         seeds: DataFrame, rounds: Int): DataFrame =
-    betweennessSampledFrom(
-      // the one-shot path materializes its fresh BFS here; the shared
-      // path (centDistShared) passes an already-checkpointed frame and
-      // must not pay a second materialization of O(seeds×reached) rows
-      bfsDistancesPerSeed(edges, src, dst, seeds, rounds)
-        .localCheckpoint(true),
-      edges, src, dst, rounds)
-
-  /** betweennessSampled's Brandes passes over a precomputed
-    * bfsDistancesPerSeed frame — the BFS is the piece harmonic
-    * centrality shares, so a caller running both memoizes `dist` and
-    * pays for it once. CONTRACT: `distIn` must already be materialized
+    * (zeros kept: "on no shortest path" is a finding).
+    *
+    * The Brandes passes run over a precomputed bfsDistancesPerSeedOn
+    * frame — the BFS is the piece harmonic centrality shares, so a
+    * caller running both memoizes `dist` and pays for it once. CONTRACT: `distIn` must already be materialized
     * (cached/eagerly checkpointed) — it feeds the DAG induction, the σ
     * seed rows, and the δ init, and an unmaterialized frame would re-run
     * the whole BFS three times. `rounds` must match the hop cap the
-    * frame was built with (levels past it simply don't exist). */
-  def betweennessSampledFrom(distIn: DataFrame, edges: DataFrame,
-                             src: String, dst: String,
-                             rounds: Int): DataFrame =
-    betweennessSampledCore(distIn,
-      edges.select(col(src).as("_src"), col(dst).as("_dst"))
-        .filter(col("_src").isNotNull && col("_dst").isNotNull)
-        .distinct(), rounds)
-
-  /** betweennessSampledFrom over a prebuilt co-partitioned layout: the
+    * frame was built with (levels past it simply don't exist). The
     * DAG-induction join consumes the layout's already-distinct persisted
-    * edge frame instead of re-distincting the input per call. */
+    * edge frame. */
   def betweennessSampledFromOn(distIn: DataFrame, l: PrLayout,
                                rounds: Int): DataFrame =
     betweennessSampledCore(distIn, l.edges, rounds)
@@ -945,11 +769,6 @@ object Graph {
     triangleStatsCore(und, deg)
   }
 
-  /** triangleStats over a prebuilt canonical-undirected layout — same
-    * counts, minus the per-call canonicalize + distinct + degree agg. */
-  def triangleStatsOn(l: UndLayout): DataFrame =
-    triangleStatsCore(l.und, l.deg)
-
   private def triangleStatsCore(und: DataFrame, deg: DataFrame): DataFrame = {
     val lower = (col("_da") < col("_db")) ||
       (col("_da") === col("_db") && col("_a") < col("_b"))
@@ -960,12 +779,12 @@ object Graph {
         when(lower, col("_b")).otherwise(col("_a")).as("_v"))
       .localCheckpoint(true) // two consumers: wedge self-join + closure
     // NOTE (round-15, measured): expanding wedges from a collected
-    // out-neighbor array (the localClustering rewrite) REGRESSED here —
+    // out-neighbor array (the localClusteringOn rewrite) REGRESSED here —
     // q_triangles runs on the support-filtered co-order graph, small
     // enough that both the self-join and the closure plan as broadcast
     // joins with near-zero shuffle (0.4 MB), so the array form's groupBy
     // exchange was pure added cost (1.0s → 2.6s at sf0.1). The self-join
-    // stays; localClustering keeps the array form because its co-sourcing
+    // stays; localClusteringOn keeps the array form because its co-sourcing
     // graph genuinely shuffles (24.7 MB, task time halved there).
     val wedgePairs = oriented
       .join(oriented.select(col("_u"), col("_v").as("_y")), Seq("_u"))
@@ -1076,7 +895,7 @@ object Graph {
   /** WEIGHTED PageRank — mass flows proportionally to edge weight (the
     * co-sourcing frequency, citation count, co-click strength), not
     * uniformly per neighbor: the form that separates "linked once" from
-    * "linked a thousand times". Same integer contract as pagerankFixed:
+    * "linked a thousand times". Same integer contract as unweighted PageRank:
     *   pr'(v) = base + (Σ_{u→v} (pr(u)·w(u,v)) div W(u) · 85) div 100
     * with W(u) = Σ_v w(u,v), every op integral. Parallel edges COLLAPSE
     * BY SUMMING their weights (groupBy, not distinct); weights must be
@@ -1084,7 +903,7 @@ object Graph {
     * fail loud / drop. Overflow bound: pr(u)·w needs scale·maxWeight
     * < 2⁶³ (at the default scale 10¹² that admits weights to ~9·10⁶ —
     * pre-bucket heavier multiplicities or lower scale; ANSI fails loud).
-    * Same per-round shape and driver contract as pagerankFixed (one
+    * Same per-round shape and driver contract as unweighted PageRank (one
     * extra checkpointed weight column on the edge frame). Emits
     * (node, pr_scaled, pr). */
   /** Weighted-PageRank input layout: the weight-summed edge frame joined
@@ -1214,30 +1033,6 @@ object Graph {
       (col("pr_scaled").cast("double") / lit(scale.toDouble)).as("pr"))
   }
 
-  /** k-core membership after `rounds` synchronous peels — the density
-    * skeleton of a graph (spam nests and duplicate clusters live in
-    * high cores; stringy crawl frontiers die in the first peel). Each
-    * round removes every node whose CURRENT degree (over surviving
-    * undirected edges, parallel edges collapsed, self-loops dropped)
-    * is < k, simultaneously. Fixed `rounds` is the oracle-checkable
-    * core (the semantics are "after R peels" — peeling converges in a
-    * handful of rounds on real graphs; raise `rounds` deliberately):
-    * pure integer degree comparisons, bit-identical everywhere.
-    * Shape per round (round-15 form, guide §2.3/§2.4 — restrict a
-    * SHRINKING frame, not the original): the LIVE edge frame is carried
-    * forward and re-restricted by two semi joins on the round's
-    * survivors — peeling only removes nodes, so filtering the previous
-    * round's live frame equals re-filtering the full edge set, and every
-    * round's degree agg and semi joins run over a frame that only gets
-    * smaller instead of re-scanning all edges. Rounds also EXIT EARLY at
-    * the fixpoint: survivors only shrink, so an unchanged survivor
-    * COUNT means an unchanged survivor SET, every remaining round is the
-    * identity, and the emitted frame is already final — "after R peels"
-    * semantics are unchanged, the identity rounds are just not paid for.
-    * Emits (node, deg) over the round-R survivor-restricted edges —
-    * survivors that lost their last edge inside round R are absent
-    * (deg 0 has nothing to stand on; one more round would peel them
-    * anyway). */
   /** Canonical-undirected input layout shared by the whole string-
     * canonical tier (k-core, triangles, local clustering, the common-
     * neighbor wedge, modularity): the distinct (least, greatest)-cast
@@ -1279,22 +1074,30 @@ object Graph {
     UndLayout(und, deg)
   }
 
-  def kcoreSurvivors(edges: DataFrame, src: String, dst: String,
-                     k: Int, rounds: Int): DataFrame = {
-    val emitted = Seq("node", "deg", "_a", "_b")
-    require(!emitted.contains(src) && !emitted.contains(dst),
-      s"kcoreSurvivors emits/uses ${emitted.mkString(", ")}; rename inputs")
-    val sa = col(src).cast("string"); val sb = col(dst).cast("string")
-    kcoreSurvivorsCore(edges
-      .select(least(sa, sb).as("_a"), greatest(sa, sb).as("_b"))
-      .filter(col("_a").isNotNull && col("_b").isNotNull
-        && col("_a") =!= col("_b"))
-      .distinct()
-      .localCheckpoint(true), k, rounds)
-  }
-
-  /** kcoreSurvivors over a prebuilt canonical-undirected layout — same
-    * peels, same output, minus the per-call canonicalize + distinct. */
+  /** k-core membership after `rounds` synchronous peels — the density
+    * skeleton of a graph (spam nests and duplicate clusters live in
+    * high cores; stringy crawl frontiers die in the first peel). Each
+    * round removes every node whose CURRENT degree (over surviving
+    * undirected edges, parallel edges collapsed, self-loops dropped)
+    * is < k, simultaneously. Fixed `rounds` is the oracle-checkable
+    * core (the semantics are "after R peels" — peeling converges in a
+    * handful of rounds on real graphs; raise `rounds` deliberately):
+    * pure integer degree comparisons, bit-identical everywhere.
+    * Shape per round (round-15 form, guide §2.3/§2.4 — restrict a
+    * SHRINKING frame, not the original): the LIVE edge frame is carried
+    * forward and re-restricted by two semi joins on the round's
+    * survivors — peeling only removes nodes, so filtering the previous
+    * round's live frame equals re-filtering the full edge set, and every
+    * round's degree agg and semi joins run over a frame that only gets
+    * smaller instead of re-scanning all edges. Rounds also EXIT EARLY at
+    * the fixpoint: survivors only shrink, so an unchanged survivor
+    * COUNT means an unchanged survivor SET, every remaining round is the
+    * identity, and the emitted frame is already final — "after R peels"
+    * semantics are unchanged, the identity rounds are just not paid for.
+    * Emits (node, deg) over the round-R survivor-restricted edges —
+    * survivors that lost their last edge inside round R are absent
+    * (deg 0 has nothing to stand on; one more round would peel them
+    * anyway). Runs over a prebuilt canonical-undirected layout. */
   def kcoreSurvivorsOn(l: UndLayout, k: Int, rounds: Int): DataFrame =
     kcoreSurvivorsCore(l.und, k, rounds)
 
@@ -1347,30 +1150,8 @@ object Graph {
     * trunc6'd division of exact integers; degree-1 nodes emit NULL
     * (no possible wedge — undefined, not zero). Self-loops/parallel
     * edges collapse; NULL endpoints drop. Emits one row per node
-    * (node, degree, n_triangles, lcc). */
-  def localClustering(edges: DataFrame, src: String, dst: String)
-      : DataFrame = {
-    val emitted = Seq("node", "degree", "n_triangles", "lcc",
-      "_a", "_b", "_da", "_db", "_u", "_v", "_x", "_y", "_t")
-    require(!emitted.contains(src) && !emitted.contains(dst),
-      s"localClustering emits/uses ${emitted.mkString(", ")}; rename inputs")
-    val sa = col(src).cast("string"); val sb = col(dst).cast("string")
-    val und = edges
-      .select(least(sa, sb).as("_a"), greatest(sa, sb).as("_b"))
-      .filter(col("_a").isNotNull && col("_b").isNotNull
-        && col("_a") =!= col("_b"))
-      .distinct()
-      .localCheckpoint(true)
-    val deg = und.select(col("_a").as("node"))
-      .union(und.select(col("_b").as("node")))
-      .groupBy(col("node")).agg(count(lit(1)).as("_da"))
-      .localCheckpoint(true)
-    localClusteringCore(und, deg)
-  }
-
-  /** localClustering over a prebuilt canonical-undirected layout — same
-    * wedge expansion, same output, minus the per-call canonicalize +
-    * distinct + degree aggregation. */
+    * (node, degree, n_triangles, lcc). Runs over a prebuilt
+    * canonical-undirected layout. */
   def localClusteringOn(l: UndLayout): DataFrame =
     localClusteringCore(l.und, l.deg)
 
@@ -1500,10 +1281,10 @@ object Graph {
     * becomes the total canonical weight, e_c the intra-community weight,
     * d_c the weighted degree sum; Q·4m² = 4m·Σe_c − Σd_c² stays EXACT
     * int64 (d_c ≤ 2m ⇒ safe to m ~ 1.5·10⁹ total weight; ANSI fails
-    * loud past it). The natural gauge for labelPropagationWeighted's
+    * loud past it). The natural gauge for labelPropagationWeightedOn's
     * partitions — the unweighted form would grade a multiplicity-aware
     * vote on a multiplicity-blind score. Parallel canonical edges
-    * collapse by SUMMING weights (the labelPropagationWeighted rule);
+    * collapse by SUMMING weights (the lpaWeightedLayout rule);
     * same labeling contract and O(communities) shape as modularity.
     * Emits ONE row (total_weight, n_communities, q_num, modularity). */
   def modularityWeighted(edges: DataFrame, src: String, dst: String,
@@ -1551,43 +1332,6 @@ object Graph {
              * col("total_weight").cast("double"))).as("modularity"))
   }
 
-  /** Community detection by fixed-round SYNCHRONOUS label propagation —
-    * the generative companion to `modularity` (which can only score a
-    * partition someone else produced): nodes start as their own label
-    * and each round simultaneously adopt the most frequent label among
-    * their neighbors, ties broken by the MINIMUM label. Both rules are
-    * total-order argmins over exact integer counts, so after any fixed
-    * number of rounds the labeling is bit-identical across engines and
-    * partitionings — the pagerankFixed discipline (float-free, fixed
-    * `iters`, never convergence-tested; synchronous LPA can 2-cycle on
-    * bipartite graphs, which a fixed round count renders harmless for
-    * reproducibility — raise `iters` deliberately, or compare two
-    * consecutive counts like q_pagerank_residual if movement matters).
-    *
-    * Graph semantics match kcoreSurvivors: UNDIRECTED, self-loops
-    * dropped, parallel edges collapsed; neighbors only (a node's own
-    * current label does not vote — its id won round 0). Every node has
-    * ≥ 1 neighbor by construction (nodes come from edges), so each
-    * round relabels the full node set.
-    *
-    * Distributed shape per round: one hash join of labels onto the
-    * checkpointed adjacency (shuffles O(|E|)), one (node, label) count
-    * agg, one O(|V|) max agg, one co-keyed join + min agg — O(|E|+|V|)
-    * through every exchange, zero driver traffic. The per-round count
-    * frame feeds BOTH the max and the tie-break join, so it is
-    * localCheckpoint'd each round (the hitsFixed two-consumer rule —
-    * without the cut each round re-executes its whole prefix twice and
-    * the fixpoint goes exponential in iters). Labels keep the input
-    * node type (longs shuffle faster than strings — the pagerankFixed
-    * note; min-label ties then compare numerically on both engines).
-    * Emits (node, label); the labels of a community converge to its
-    * minimum member id, so `label` doubles as a canonical community
-    * representative. Score the partition with `modularity` — the
-    * composed form is oracle-checked end to end (q_communities_modularity). */
-  def labelPropagation(edges: DataFrame, src: String, dst: String,
-                       iters: Int): DataFrame =
-    lpaCore(edges, src, dst, iters)._1
-
   /** Label-propagation input layout (shared by the weighted form when
     * built from weighted edges): the both-orientations adjacency hash-
     * partitioned by `_s` (every round joins labels on it) and the initial
@@ -1625,7 +1369,7 @@ object Graph {
         s"vs ${edges.schema(dst).dataType}")
     CoreOps.requireIntegralCols(edges, Seq(weight), "lpaWeightedLayout")
     val guard = assert_true(col(weight) > 0,
-      concat(lit("labelPropagationWeighted: non-positive weight (zero " +
+      concat(lit("lpaWeightedLayout: non-positive weight (zero " +
         "votes are dead edges, negative votes invert the argmax); got "),
         col(weight).cast("string")))
     val und = edges
@@ -1642,28 +1386,6 @@ object Graph {
           col("_w"))))
   }
 
-  /** weightedUndirected staged as a persisted layout frame: sized by its
-    * measured row count (the layoutPartitions rule), hash-partitioned by
-    * `_a`, eagerly materialized — for callers serving several per-pass
-    * consumers (both community cards, the weighted-LPA layout). */
-  def weightedUndirectedLayout(edges: DataFrame, src: String, dst: String,
-                               weight: String): DataFrame = {
-    val u0 = weightedUndirected(edges, src, dst, weight)
-      .localCheckpoint(true)
-    val u = u0.repartition(layoutPartitions(u0.count()), col("_a"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    u.count() // materialize now — the caller's build step is timed
-    u
-  }
-
-  /** lpaWeightedLayout over a prebuilt weightedUndirected frame (shares
-    * the canonical weight-summing with communityCardFrom consumers). */
-  def lpaWeightedLayoutFrom(undW: DataFrame): LpaLayout =
-    lpaLayoutFrom(
-      undW.select(col("_a").as("_s"), col("_b").as("_d"), col("_w"))
-        .union(undW.select(col("_b").as("_s"), col("_a").as("_d"),
-          col("_w"))))
-
   private def lpaLayoutFrom(adjIn: DataFrame): LpaLayout = {
     val adj0 = adjIn.localCheckpoint(true)
     val nParts = layoutPartitions(adj0.count())
@@ -1679,26 +1401,50 @@ object Graph {
     LpaLayout(adj, initLabels)
   }
 
-  /** The (labels, movement) PAIR over ONE propagation run — "did `iters`
-    * rounds settle?" answered by the count of nodes whose label still
+  /** Community detection by fixed-round SYNCHRONOUS label propagation —
+    * the generative companion to `modularity` (which can only score a
+    * partition someone else produced): nodes start as their own label
+    * and each round simultaneously adopt the most frequent label among
+    * their neighbors, ties broken by the MINIMUM label. Both rules are
+    * total-order argmins over exact integer counts, so after any fixed
+    * number of rounds the labeling is bit-identical across engines and
+    * partitionings — the integer-PageRank discipline (float-free, fixed
+    * `iters`, never convergence-tested; synchronous LPA can 2-cycle on
+    * bipartite graphs, which a fixed round count renders harmless for
+    * reproducibility — raise `iters` deliberately, or compare two
+    * consecutive counts like q_pagerank_residual if movement matters).
+    *
+    * Graph semantics match kcoreSurvivorsOn: UNDIRECTED, self-loops
+    * dropped, parallel edges collapsed; neighbors only (a node's own
+    * current label does not vote — its id won round 0). Every node has
+    * ≥ 1 neighbor by construction (nodes come from edges), so each
+    * round relabels the full node set.
+    *
+    * Distributed shape per round: one hash join of labels onto the
+    * checkpointed adjacency (shuffles O(|E|)), one (node, label) count
+    * agg, one O(|V|) max agg, one co-keyed join + min agg — O(|E|+|V|)
+    * through every exchange, zero driver traffic. The per-round count
+    * frame feeds BOTH the max and the tie-break join, so it is
+    * localCheckpoint'd each round (the HITS two-consumer rule —
+    * without the cut each round re-executes its whole prefix twice and
+    * the fixpoint goes exponential in iters). Labels keep the input
+    * node type (longs shuffle faster than strings — the PageRank
+    * note; min-label ties then compare numerically on both engines).
+    * Emits (node, label); the labels of a community converge to its
+    * minimum member id, so `label` doubles as a canonical community
+    * representative. Score the partition with `modularityOn` — the
+    * composed form is oracle-checked end to end (q_communities_modularity).
+    *
+    * Emits the (labels, movement) PAIR over ONE propagation run — "did
+    * `iters` rounds settle?" answered by the count of nodes whose label still
     * changed in the LAST round, next to the partition itself (the
-    * pagerankWithResidual pattern; LPA has no score vector, so the
+    * pagerankWithResidualOn pattern; LPA has no score vector, so the
     * movement COUNT is its natural residual — 0 means a fixed point was
     * reached, and on bipartite graphs a persistent nonzero count is the
     * documented 2-cycle, not a bug). Same integer walk, so the oracle
     * reproduces both frames digit for digit. Movement row: (n_nodes,
     * n_moved, moved_share) with the share one trunc6'd division; an
     * empty graph emits (0, 0, NULL). */
-  def labelPropagationWithMovement(edges: DataFrame, src: String,
-                                   dst: String, iters: Int)
-      : (DataFrame, DataFrame) = {
-    val (labels, prev) = lpaCore(edges, src, dst, iters)
-    lpaMovementEmit(labels, prev)
-  }
-
-  /** labelPropagationWithMovement over a prebuilt co-partitioned layout —
-    * same rounds, same outputs, minus the per-call setup and the per-round
-    * adjacency Exchange (see the layout scaladoc). */
   def labelPropagationWithMovementOn(l: LpaLayout, iters: Int)
       : (DataFrame, DataFrame) = {
     val (labels, prev) =
@@ -1706,12 +1452,18 @@ object Graph {
     lpaMovementEmit(labels, prev)
   }
 
-  /** labelPropagation over a prebuilt co-partitioned layout. */
-  def labelPropagationOn(l: LpaLayout, iters: Int): DataFrame =
-    lpaLoop(l.adj, l.initLabels, iters, count(lit(1)), trackPrev = false)._1
-
-  /** labelPropagationWeighted over a prebuilt co-partitioned layout (the
-    * layout must come from lpaWeightedLayout so `adj` carries `_w`). */
+  /** Weighted label propagation — label propagation with each neighbor's
+    * vote counted `weight` times (the pagerankWeighted precedent: the
+    * co-sourcing graph has lineitem multiplicities, and a neighbor
+    * co-sourced 40 times should out-vote three co-sourced once). Same
+    * fixed-round synchronous discipline, same min-label ties; the vote
+    * is an exact integer SUM of weights instead of a count, so the
+    * partition is still bit-identical across engines and partitionings.
+    * Parallel edges collapse by SUMMING their canonical-pair weights
+    * (the natural multigraph reading — `distinct()` would silently
+    * drop multiplicity). Weights must be positive integers (fail-loud,
+    * the weightedMedian convention). The layout must come from
+    * lpaWeightedLayout, so `adj` carries `_w`. Emits (node, label). */
   def labelPropagationWeightedOn(l: LpaLayout, iters: Int): DataFrame = {
     require(l.adj.columns.contains("_w"),
       "labelPropagationWeightedOn needs a weighted layout " +
@@ -1733,72 +1485,8 @@ object Graph {
     (labels, movement)
   }
 
-  /** Weighted label propagation — labelPropagation with each neighbor's
-    * vote counted `weight` times (the pagerankWeighted precedent: the
-    * co-sourcing graph has lineitem multiplicities, and a neighbor
-    * co-sourced 40 times should out-vote three co-sourced once). Same
-    * fixed-round synchronous discipline, same min-label ties; the vote
-    * is an exact integer SUM of weights instead of a count, so the
-    * partition is still bit-identical across engines and partitionings.
-    * Parallel edges collapse by SUMMING their canonical-pair weights
-    * (the natural multigraph reading — `distinct()` would silently
-    * drop multiplicity). Weights must be positive integers (fail-loud,
-    * the weightedMedian convention). Emits (node, label). */
-  def labelPropagationWeighted(edges: DataFrame, src: String, dst: String,
-                               weight: String, iters: Int): DataFrame = {
-    require(iters >= 1 && iters <= 50, s"iters must be in [1,50], got $iters")
-    val emitted = Seq("node", "label", "_a", "_b", "_s", "_d", "_w", "_n",
-      "_mn")
-    require(!emitted.contains(src) && !emitted.contains(dst) &&
-        !emitted.contains(weight),
-      s"labelPropagationWeighted emits/uses ${emitted.mkString(", ")}; " +
-        "rename inputs")
-    require(edges.schema(src).dataType == edges.schema(dst).dataType,
-      s"src/dst must share one node type; got ${edges.schema(src).dataType} " +
-        s"vs ${edges.schema(dst).dataType}")
-    CoreOps.requireIntegralCols(edges, Seq(weight),
-      "labelPropagationWeighted")
-    val guard = assert_true(col(weight) > 0,
-      concat(lit("labelPropagationWeighted: non-positive weight (zero " +
-        "votes are dead edges, negative votes invert the argmax); got "),
-        col(weight).cast("string")))
-    val und = edges
-      .select(least(col(src), col(dst)).as("_a"),
-        greatest(col(src), col(dst)).as("_b"),
-        col(weight).cast("long").as("_w"))
-      .filter(col("_a").isNotNull && col("_b").isNotNull
-        && col("_a") =!= col("_b"))
-      .filter(guard.isNull)
-      .groupBy(col("_a"), col("_b")).agg(sum(col("_w")).as("_w"))
-    val adj = und.select(col("_a").as("_s"), col("_b").as("_d"), col("_w"))
-      .union(und.select(col("_b").as("_s"), col("_a").as("_d"), col("_w")))
-      .localCheckpoint(true) // reused every round
-    val labels = adj.select(col("_s").as("node")).distinct()
-      .select(col("node"), col("node").as("label"))
-      .localCheckpoint(true)
-    lpaLoop(adj, labels, iters, sum(col("_w")), trackPrev = false)._1
-  }
-
-  /** Per-community quality card — the q_data_card idiom keyed by a
-    * propagation partition: for every community, its size and the three
-    * numbers that say whether it is real structure or an artifact —
-    * intra-community edge count and weight, weighted cut to the rest of
-    * the graph, and the weighted CONDUCTANCE cut_w / (2·intra_w + cut_w)
-    * (0 = island, →1 = no internal cohesion; the standard community-
-    * quality gauge, here as one trunc6'd division of exact integer
-    * sums). `labels` must label every endpoint (LPA labels every node of
-    * its edge set by construction — fail-loud if not, a silently dropped
-    * endpoint would understate cuts). Parallel canonical edges collapse
-    * by summing weights, exactly like labelPropagationWeighted, so the
-    * card agrees with the partition it grades.
-    *
-    * Shape: two id-keyed joins tag endpoints, ONE community-keyed agg
-    * for intra stats, one union'd endpoint agg for volumes — all output
-    * frames O(communities); no windows, no driver traffic. Emits
-    * (community, n_nodes, n_intra_edges, intra_weight, cut_weight,
-    * conductance). */
   /** The canonical weight-summed undirected frame (_a, _b, _w) shared by
-    * communityCard and the weighted-LPA layout — least/greatest canonical
+    * communityCardFrom and the weighted-LPA layout — least/greatest canonical
     * pairs, parallel edges collapsed by SUMMING weights, self-loops and
     * NULLs dropped. A caller serving several per-pass consumers memoizes
     * and persists THIS frame once (the UndLayout idea for the weighted
@@ -1806,7 +1494,7 @@ object Graph {
   def weightedUndirected(edges: DataFrame, src: String, dst: String,
                          weight: String): DataFrame = {
     CoreOps.requireIntegralCols(edges, Seq(weight), "weightedUndirected")
-    // the labelPropagationWeighted positivity guard, applied to the RAW
+    // the lpaWeightedLayout positivity guard, applied to the RAW
     // weights before summing (a negative weight could hide inside a
     // positive sum): every consumer of this frame assumes positive votes
     val guard = assert_true(col(weight) > 0,
@@ -1823,30 +1511,34 @@ object Graph {
       .groupBy(col("_a"), col("_b")).agg(sum(col("_w")).as("_w"))
   }
 
-  def communityCard(edges: DataFrame, src: String, dst: String,
-                    weight: String, labels: DataFrame, node: String,
-                    label: String): DataFrame = {
-    val emitted = Seq("community", "n_nodes", "n_intra_edges",
-      "intra_weight", "cut_weight", "conductance", "_a", "_b", "_w",
-      "_la", "_lb", "_c")
-    require(!emitted.contains(src) && !emitted.contains(dst) &&
-        !emitted.contains(weight) && !emitted.contains(node) &&
-        !emitted.contains(label),
-      s"communityCard emits/uses ${emitted.mkString(", ")}; rename inputs")
-    communityCardFrom(weightedUndirected(edges, src, dst, weight),
-      labels, node, label)
-  }
-
-  /** communityCard over a prebuilt weightedUndirected frame — the
-    * canonical weight-summing both cards of a shared graph otherwise
-    * rebuild per call. */
+  /** Per-community quality card — the q_data_card idiom keyed by a
+    * propagation partition: for every community, its size and the three
+    * numbers that say whether it is real structure or an artifact —
+    * intra-community edge count and weight, weighted cut to the rest of
+    * the graph, and the weighted CONDUCTANCE cut_w / (2·intra_w + cut_w)
+    * (0 = island, →1 = no internal cohesion; the standard community-
+    * quality gauge, here as one trunc6'd division of exact integer
+    * sums). `labels` must label every endpoint (LPA labels every node of
+    * its edge set by construction — fail-loud if not, a silently dropped
+    * endpoint would understate cuts). Parallel canonical edges collapse
+    * by summing weights, exactly like lpaWeightedLayout, so the
+    * card agrees with the partition it grades.
+    *
+    * Shape: two id-keyed joins tag endpoints, ONE community-keyed agg
+    * for intra stats, one union'd endpoint agg for volumes — all output
+    * frames O(communities); no windows, no driver traffic. Emits
+    * (community, n_nodes, n_intra_edges, intra_weight, cut_weight,
+    * conductance). `undIn` is a weightedUndirected frame — the canonical
+    * weight-summing both cards of a shared graph otherwise rebuild per
+    * call. */
   def communityCardFrom(undIn: DataFrame, labels: DataFrame, node: String,
                         label: String): DataFrame = {
     val emitted = Seq("community", "n_nodes", "n_intra_edges",
       "intra_weight", "cut_weight", "conductance", "_a", "_b", "_w",
       "_la", "_lb", "_c")
     require(!emitted.contains(node) && !emitted.contains(label),
-      s"communityCard emits/uses ${emitted.mkString(", ")}; rename inputs")
+      s"communityCardFrom emits/uses ${emitted.mkString(", ")}; " +
+        "rename inputs")
     val und = undIn
     val lab = labels.select(col(node), col(label))
     val tagged = und
@@ -1859,7 +1551,8 @@ object Graph {
     // silently zero the very cuts the card exists to surface
     val covGuard = nUnd.crossJoin(broadcast(nTagged).select(col("_n").as("_nt")))
       .select(assert_true(col("_n") === col("_nt"),
-        concat(lit("communityCard: "), (col("_n") - col("_nt")).cast("string"),
+        concat(lit("communityCardFrom: "),
+          (col("_n") - col("_nt")).cast("string"),
           lit(" edge(s) have an unlabeled endpoint — label every node " +
             "(LPA output does) or filter the edge set first"))).as("_g"))
     val sizes = lab.groupBy(col(label).as("community"))
@@ -1885,34 +1578,6 @@ object Graph {
           trunc6(col("cut_weight").cast("double")
             / (lit(2L) * col("intra_weight") + col("cut_weight"))
               .cast("double"))))
-  }
-
-  /** Shared LPA fixpoint: returns (labels after `iters`, labels after
-    * `iters`−1). The penultimate frame feeds both the final round and
-    * the movement diff, so it is localCheckpoint'd (the two-consumer
-    * rule); every round's count frame likewise. */
-  private def lpaCore(edges: DataFrame, src: String, dst: String,
-                      iters: Int): (DataFrame, DataFrame) = {
-    require(iters >= 1 && iters <= 50, s"iters must be in [1,50], got $iters")
-    val emitted = Seq("node", "label", "_a", "_b", "_s", "_d", "_n", "_mn")
-    require(!emitted.contains(src) && !emitted.contains(dst),
-      s"labelPropagation emits/uses ${emitted.mkString(", ")}; rename inputs")
-    require(edges.schema(src).dataType == edges.schema(dst).dataType,
-      s"src/dst must share one node type; got ${edges.schema(src).dataType} " +
-        s"vs ${edges.schema(dst).dataType}")
-    val und = edges
-      .select(least(col(src), col(dst)).as("_a"),
-        greatest(col(src), col(dst)).as("_b"))
-      .filter(col("_a").isNotNull && col("_b").isNotNull
-        && col("_a") =!= col("_b"))
-      .distinct()
-    val adj = und.select(col("_a").as("_s"), col("_b").as("_d"))
-      .union(und.select(col("_b").as("_s"), col("_a").as("_d")))
-      .localCheckpoint(true) // reused every round
-    val labels = adj.select(col("_s").as("node")).distinct()
-      .select(col("node"), col("node").as("label"))
-      .localCheckpoint(true)
-    lpaLoop(adj, labels, iters, count(lit(1)), trackPrev = true)
   }
 
   /** The shared fixed-round propagation loop (unweighted vote =
@@ -1971,21 +1636,27 @@ object Graph {
     * TakeOrderedAndProject (per-partition top-N, never a global sort).
     * Self-loops and NULL endpoints drop. Deterministic order:
     * (aa_scaled DESC, node_a ASC, node_b ASC).
+    * The ranking view over a commonNeighborStatsOn frame.
     * Emits topN × (node_a, node_b, n_common, aa_scaled). */
-  def adamicAdar(edges: DataFrame, src: String, dst: String,
-                 maxMiddleDegree: Int, topN: Int): DataFrame =
-    adamicAdarFrom(
-      commonNeighborStats(edges, src, dst, maxMiddleDegree), topN)
+  def adamicAdarFrom(stats: DataFrame, topN: Int): DataFrame = {
+    require(topN >= 1, s"topN must be >= 1, got $topN")
+    stats
+      .orderBy(col("aa_scaled").desc, col("node_a"), col("node_b"))
+      .limit(topN)
+      .select(col("node_a"), col("node_b"), col("n_common"),
+        col("aa_scaled"))
+  }
 
-  /** The fused common-neighbor pair frame adamicAdar and neighborJaccard
-    * are both views over — ONE wedge self-join instead of two. The two
-    * scores rank the same candidate set (non-adjacent canonical pairs
-    * sharing >= 1 common neighbor of degree in [2, maxMiddleDegree]) and
-    * differ only in the per-pair arithmetic, so every heavy pass —
-    * distinct canonical edges, the degree aggregation, the capped
-    * adjacency build, the wedge self-join on the middle, the
-    * existing-edge anti join, and the pair-count aggregation — runs once
-    * here; each consumer is just its own TakeOrderedAndProject. A caller
+  /** The fused common-neighbor pair frame adamicAdarFrom and
+    * neighborJaccardFrom are both views over — ONE wedge self-join
+    * instead of two, over a prebuilt canonical-undirected layout (the
+    * layout's `_da` degree column is renamed to this operator's `deg`).
+    * The two scores rank the same candidate set (non-adjacent canonical
+    * pairs sharing >= 1 common neighbor of degree in [2,
+    * maxMiddleDegree]) and differ only in the per-pair arithmetic, so
+    * every heavy pass — the capped adjacency build, the wedge self-join
+    * on the middle, the existing-edge anti join, and the pair-count
+    * aggregation — runs once here; each consumer is just its own TakeOrderedAndProject. A caller
     * registering both scores should memoize THIS frame. Integer math is
     * documented on the two consumers and is unchanged by the fusion: the
     * same wedge rows feed the same aggregates. Emits one row per
@@ -1993,32 +1664,6 @@ object Graph {
     * jac_scaled). The endpoint-degree joins can never drop a pair — a
     * wedge endpoint is adjacent to its middle, so it always has a degree
     * row. */
-  def commonNeighborStats(edges: DataFrame, src: String, dst: String,
-                          maxMiddleDegree: Int): DataFrame = {
-    val emitted = Seq("node_a", "node_b", "n_common", "aa_scaled",
-      "deg_a", "deg_b", "jac_scaled",
-      "_a", "_b", "_w", "_dw", "_qw", "_n", "node", "deg")
-    require(!emitted.contains(src) && !emitted.contains(dst),
-      s"commonNeighborStats emits/uses ${emitted.mkString(", ")}; " +
-        "rename inputs")
-    val sa = col(src).cast("string"); val sb = col(dst).cast("string")
-    val und = edges
-      .select(least(sa, sb).as("_a"), greatest(sa, sb).as("_b"))
-      .filter(col("_a").isNotNull && col("_b").isNotNull
-        && col("_a") =!= col("_b"))
-      .distinct()
-      .localCheckpoint(true) // reused by degrees, adjacency, and the anti join
-    val deg = und.select(col("_a").as("node"))
-      .union(und.select(col("_b").as("node")))
-      .groupBy(col("node")).agg(count(lit(1)).as("deg"))
-      .localCheckpoint(true) // middle cap + both endpoint joins
-    commonNeighborStatsCore(und, deg, maxMiddleDegree)
-  }
-
-  /** commonNeighborStats over a prebuilt canonical-undirected layout —
-    * same candidate pairs, same scores, minus the per-call canonicalize
-    * + distinct + degree aggregation (the layout's `_da` degree column
-    * is renamed to this operator's `deg`). */
   def commonNeighborStatsOn(l: UndLayout,
                             maxMiddleDegree: Int): DataFrame =
     commonNeighborStatsCore(l.und,
@@ -2074,35 +1719,20 @@ object Graph {
         col("jac_scaled"))
   }
 
-  /** adamicAdar's ranking view over a commonNeighborStats frame. */
-  def adamicAdarFrom(stats: DataFrame, topN: Int): DataFrame = {
-    require(topN >= 1, s"topN must be >= 1, got $topN")
-    stats
-      .orderBy(col("aa_scaled").desc, col("node_a"), col("node_b"))
-      .limit(topN)
-      .select(col("node_a"), col("node_b"), col("n_common"),
-        col("aa_scaled"))
-  }
-
   /** Neighborhood-Jaccard link prediction — Adamic-Adar's size-normalized
     * sibling (|N(a)∩N(b)| / |N(a)∪N(b)|): AA rewards many rare shared
     * neighbors, Jaccard asks what FRACTION of the combined neighborhoods
     * is shared — the right gauge when endpoint degrees vary wildly (a hub
     * sharing 3 of its 500 neighbors is not like a leaf sharing 3 of 4).
-    * Same hub-proof shape as adamicAdar: undirected-distinct edges,
+    * Same hub-proof shape as adamicAdarFrom: undirected-distinct edges,
     * middles capped at `maxMiddleDegree` BEFORE the wedge join (common
     * neighbors above the cap are dropped — the documented approximation;
     * ENDPOINT degrees stay exact and uncapped), existing edges excluded,
     * deterministic (score DESC, a, b) top-N. jac_scaled enters as the
     * exact integer (n_common·10⁶) div (deg_a + deg_b − n_common); the
-    * emitted `jaccard` is one double division. Emits
+    * emitted `jaccard` is one double division. The ranking view over a
+    * commonNeighborStatsOn frame. Emits
     * (node_a, node_b, n_common, deg_a, deg_b, jac_scaled, jaccard). */
-  def neighborJaccard(edges: DataFrame, src: String, dst: String,
-                      maxMiddleDegree: Int, topN: Int): DataFrame =
-    neighborJaccardFrom(
-      commonNeighborStats(edges, src, dst, maxMiddleDegree), topN)
-
-  /** neighborJaccard's ranking view over a commonNeighborStats frame. */
   def neighborJaccardFrom(stats: DataFrame, topN: Int): DataFrame = {
     require(topN >= 1, s"topN must be >= 1, got $topN")
     stats

@@ -1022,7 +1022,7 @@ object Similarity {
   }
 
   /** Top principal direction by FIXED-ROUND power iteration over the
-    * quantized covariance (the pagerankFixed/LPA discipline: "after R
+    * quantized covariance (the integer PageRank/LPA discipline: "after R
     * rounds" is the oracle-checkable semantics; R ~ 10 separates any
     * non-degenerate spectrum). The corpus is touched ONCE
     * (covarianceScaled); every round after is arithmetic on the d²-row

@@ -838,7 +838,7 @@ object TextOps {
     * vocabulary-LEARNING half of the tokenizer lifecycle (wordPieces
     * APPLIES a vocab, fertility MEASURES one; this trains one from the
     * corpus): `iters` rounds of count-adjacent-pairs → deterministic
-    * argmax merge → re-segment, the pagerankFixed/LPA fixed-round
+    * argmax merge → re-segment, the integer PageRank/LPA fixed-round
     * discipline.
     *
     * Convention, identical on both engines: words are lowercase non-letter-

@@ -555,7 +555,7 @@ object StateMachines {
     * the id is the store's key, so the collision would otherwise
     * silently corrupt every later verify against it.
     *
-    * `maxBucket` is the house FAIL-LOUD bound (Dedup.fuzzyPairs'
+    * `maxBucket` is the house FAIL-LOUD bound (Dedup.jaccardAllPairs'
     * convention) on one bucket's membership: a bucket past it means the
     * banding no longer bounds per-arrival verify work — raise it
     * deliberately or re-band (more rows per band); never silent.

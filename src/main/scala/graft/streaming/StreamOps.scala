@@ -390,17 +390,6 @@ object StreamOps {
       write(CoreOps.asofJoin(batch, right, key, ts, rightCols), batchId)
     }
 
-  /** Streaming fuzzy entity resolution, stream-static form: every
-    * micro-batch of incoming strings resolves against the CURRENT
-    * registry with the batch Dedup.segmentJoin — the ingest-time "is this
-    * title/name/url within d edits of something we know" lookup, running
-    * continuously. Per-row semantics against a static right side, so the
-    * union of per-batch outputs equals the one-shot batch join regardless
-    * of the micro-batch split (StreamingParitySpec pins this). The
-    * registry's segment index and distinct-length list rebuild per
-    * trigger — the price of picking up registry changes at trigger
-    * granularity; for a frozen registry, precompute outside. Same
-    * idempotent-sink contract as asofJoinEachBatch. */
   /** Continuous drift monitor: per event-time window, the total-variation
     * distance between the window's category mix and a STATIC reference
     * mix — "alert when an hour's event-type distribution diverges from
@@ -432,6 +421,17 @@ object StreamOps {
           category, "_wn", ref), batchId)
       }
 
+  /** Streaming fuzzy entity resolution, stream-static form: every
+    * micro-batch of incoming strings resolves against the CURRENT
+    * registry with the batch Dedup.segmentJoin — the ingest-time "is this
+    * title/name/url within d edits of something we know" lookup, running
+    * continuously. Per-row semantics against a static right side, so the
+    * union of per-batch outputs equals the one-shot batch join regardless
+    * of the micro-batch split (StreamingParitySpec pins this). The
+    * registry's segment index and distinct-length list rebuild per
+    * trigger — the price of picking up registry changes at trigger
+    * granularity; for a frozen registry, precompute outside. Same
+    * idempotent-sink contract as asofJoinEachBatch. */
   def segmentJoinEachBatch(left: DataFrame, right: DataFrame,
                            idL: String, strL: String, idR: String,
                            strR: String, maxDist: Int)(

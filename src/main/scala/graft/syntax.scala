@@ -143,16 +143,11 @@ object syntax {
       Dedup.keepBest(df, id, clusters, priority)
     def dedupReport(id: String, clusters: DataFrame, dim: String): DataFrame =
       Dedup.dedupReport(df, id, clusters, dim)
-    def fuzzyPairs(id: String, str: String, k: Int, maxDist: Int): DataFrame =
-      Dedup.fuzzyPairs(df, id, str, k, maxDist)
     def segmentPairs(id: String, str: String, maxDist: Int): DataFrame =
       Dedup.segmentPairs(df, id, str, maxDist)
     def segmentJoin(right: DataFrame, idL: String, strL: String,
                     idR: String, strR: String, maxDist: Int): DataFrame =
       Dedup.segmentJoin(df, right, idL, strL, idR, strR, maxDist)
-    def fuzzyJoin(right: DataFrame, idL: String, strL: String, idR: String,
-                  strR: String, k: Int, maxDist: Int): DataFrame =
-      Dedup.fuzzyJoin(df, right, idL, strL, idR, strR, k, maxDist)
     def lshJaccardJoin(right: DataFrame, idL: String, textL: String,
                        idR: String, textR: String, k: Int, bands: Int,
                        rowsPerBand: Int, minJaccard: Double): DataFrame =
@@ -299,8 +294,6 @@ object syntax {
       CoreOps.valueHistogram(df, value, lo, width, nBins)
     def giniImpurity(group: String, label: String): DataFrame =
       CoreOps.giniImpurity(df, group, label)
-    def pagerankFixed(src: String, dst: String, iters: Int): DataFrame =
-      Graph.pagerankFixed(df, src, dst, iters)
     def triangleStats(src: String, dst: String): DataFrame =
       Graph.triangleStats(df, src, dst)
     def skylineMax2D(x: String, y: String): DataFrame =
@@ -458,17 +451,9 @@ object syntax {
       CoreOps.joinSizeEstimate(df, key, other, otherKey, d, w)
     def theilSen(x: String, y: String, maxPoints: Int = 10000): DataFrame =
       CoreOps.theilSen(df, x, y, maxPoints)
-    def adamicAdar(src: String, dst: String, maxMiddleDegree: Int,
-                   topN: Int): DataFrame =
-      Graph.adamicAdar(df, src, dst, maxMiddleDegree, topN)
-    def commonNeighborStats(src: String, dst: String,
-                            maxMiddleDegree: Int): DataFrame =
-      Graph.commonNeighborStats(df, src, dst, maxMiddleDegree)
     def modularity(src: String, dst: String, labels: DataFrame,
                    node: String, community: String): DataFrame =
       Graph.modularity(df, src, dst, labels, node, community)
-    def localClustering(src: String, dst: String): DataFrame =
-      Graph.localClustering(df, src, dst)
     def goldenRecord(id: String, clusters: DataFrame, longest: String,
                      majority: String, minimum: String): DataFrame =
       Dedup.goldenRecord(df, id, clusters, longest, majority, minimum)
@@ -485,20 +470,12 @@ object syntax {
                     everyNth: Int): DataFrame =
       Multimodal.frameSample(df, id, bin, frameBytes, everyNth)
 
-    // ── round-9 community / audit / image-dup additions ───────────────────
-    def labelPropagation(src: String, dst: String, iters: Int): DataFrame =
-      Graph.labelPropagation(df, src, dst, iters)
-    def labelPropagationWithMovement(src: String, dst: String,
-                                     iters: Int): (DataFrame, DataFrame) =
-      Graph.labelPropagationWithMovement(df, src, dst, iters)
+    // ── round-9 audit / image-dup additions ───────────────────────────────
     def averagePrecision(score: String, isPos: Column): DataFrame =
       Eval.averagePrecision(df, score, isPos)
     def brierScore(score: String, outcome: Column, lo: Long,
                    hi: Long): DataFrame =
       Eval.brierScore(df, score, outcome, lo, hi)
-    def hitsWithResidual(src: String, dst: String, iters: Int,
-                         scale: Long = 1000000L): (DataFrame, DataFrame) =
-      Graph.hitsWithResidual(df, src, dst, iters, scale)
     def blockingQualitySampled(id: String, text: String, k: Int, bands: Int,
                                rowsPerBand: Int, tNum: Int, tDen: Int,
                                sampleMod: Int,
@@ -558,9 +535,6 @@ object syntax {
                    id: String, d: Int, pNum: Int = 1,
                    pDen: Int = 2): DataFrame =
       Similarity.rboOverlap(df, other, query, rank, id, d, pNum, pDen)
-    def neighborJaccard(src: String, dst: String, maxMiddleDegree: Int,
-                        topN: Int): DataFrame =
-      Graph.neighborJaccard(df, src, dst, maxMiddleDegree, topN)
     def tClosenessClasses(quasi: Seq[String], sensitive: String,
                           t: Double): DataFrame =
       Curation.tClosenessClasses(df, quasi, sensitive, t)
@@ -636,13 +610,6 @@ object syntax {
                                  text: String, k: Int,
                                  sampleMod: Int): DataFrame =
       Dedup.contaminationRateSampled(df, bench, id, text, k, sampleMod)
-    def labelPropagationWeighted(src: String, dst: String, weight: String,
-                                 iters: Int): DataFrame =
-      Graph.labelPropagationWeighted(df, src, dst, weight, iters)
-    def communityCard(src: String, dst: String, weight: String,
-                      labels: DataFrame, node: String,
-                      label: String): DataFrame =
-      Graph.communityCard(df, src, dst, weight, labels, node, label)
     def modularityWeighted(src: String, dst: String, weight: String,
                            labels: DataFrame, node: String,
                            community: String): DataFrame =
@@ -720,12 +687,6 @@ object syntax {
     def seasonalDecompose(key: String, idx: String, value: String,
                           period: Int, half: Int): DataFrame =
       CoreOps.seasonalDecompose(df, key, idx, value, period, half)
-    def harmonicCentrality(src: String, dst: String, seeds: DataFrame,
-                           rounds: Int): DataFrame =
-      Graph.harmonicCentrality(df, src, dst, seeds, rounds)
-    def betweennessSampled(src: String, dst: String, seeds: DataFrame,
-                           rounds: Int): DataFrame =
-      Graph.betweennessSampled(df, src, dst, seeds, rounds)
     def chiSquareResiduals(a: String, b: String): DataFrame =
       CoreOps.chiSquareResiduals(df, a, b)
     def hardNegatives(queries: DataFrame, id: String, vec: String,

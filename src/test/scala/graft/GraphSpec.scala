@@ -1,19 +1,44 @@
 package graft
 
 import graft.operators.Graph
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Graph/association tier: integer fixed-point PageRank and basket lift on
   * hand-computed frames — every expectation derived by doing the same
-  * integer arithmetic by hand. */
+  * integer arithmetic by hand. Every algorithm is reached through its one
+  * public form: a layout builder plus the `…On` / `…From` operator. */
 class GraphSpec extends SparkSpec {
   import spark.implicits._
 
   private val Scale = 1000000000000L
 
+  /** Fixed-iteration integer PageRank: the rank element of the
+    * (ranks, residual) pair. */
+  private def pagerank(edges: DataFrame, src: String, dst: String,
+                       iters: Int, scale: Long = Scale): DataFrame =
+    Graph.pagerankWithResidualOn(Graph.pagerankLayout(edges, src, dst),
+      iters, scale)._1
+
+  /** The L1 residual row of the same fixpoint. */
+  private def pagerankResidual(edges: DataFrame, iters: Int): DataFrame =
+    Graph.pagerankWithResidualOn(Graph.pagerankLayout(edges, "s", "d"),
+      iters, Scale)._2
+
+  private def hits(edges: DataFrame, src: String, dst: String,
+                   iters: Int): DataFrame =
+    Graph.hitsWithResidualOn(Graph.hitsLayout(edges, src, dst), iters)._1
+
+  private def labelPropagation(edges: DataFrame, iters: Int): DataFrame =
+    Graph.labelPropagationWithMovementOn(
+      Graph.lpaLayout(edges, "s", "d2"), iters)._1
+
+  private def und(edges: DataFrame): Graph.UndLayout =
+    Graph.undirectedLayout(edges, "s", "d2")
+
   test("pagerankFixed: a 2-cycle is a fixed point at scale/2 per node") {
     val edges = Seq(("a", "b"), ("b", "a")).toDF("s", "d")
-    val got = Graph.pagerankFixed(edges, "s", "d", 5, Scale)
+    val got = pagerank(edges, "s", "d", 5)
       .as[(String, Long, Double)].collect().toMap2
     // init scale/2 each; every round: base (scale/2*15) div 100 plus damped
     // (scale/2*85) div 100 = scale/2 again — exact fixed point
@@ -23,7 +48,7 @@ class GraphSpec extends SparkSpec {
   test("pagerankFixed: sinks leak, hub keeps only its base share") {
     // a -> b, a -> c; b and c are sinks (outdeg 0)
     val edges = Seq(("a", "b"), ("a", "c")).toDF("s", "d")
-    val got = Graph.pagerankFixed(edges, "s", "d", 1, Scale)
+    val got = pagerank(edges, "s", "d", 1)
       .select("node", "pr_scaled").as[(String, Long)].collect().toMap
     val init = Scale / 3              // 333333333333
     val base = (init * 15) / 100      // 49999999999
@@ -35,7 +60,7 @@ class GraphSpec extends SparkSpec {
   test("pagerankFixed: total mass is bounded by scale and ranks stay positive") {
     val edges = (1 to 60).map(i => (s"n${i % 10}", s"n${(i * 7) % 10}"))
       .toDF("s", "d")
-    val rs = Graph.pagerankFixed(edges, "s", "d", 8, Scale)
+    val rs = pagerank(edges, "s", "d", 8)
       .select("pr_scaled").as[Long].collect()
     assert(rs.sum <= Scale && rs.forall(_ > 0))
   }
@@ -44,9 +69,9 @@ class GraphSpec extends SparkSpec {
     val base = Seq(("a", "b"), ("b", "c"), ("c", "a"), ("a", "c"))
     val e1 = base.toDF("s", "d")
     val e2 = (base ++ base).toDF("s", "d").repartition(7) // dup edges + reshuffle
-    val r1 = Graph.pagerankFixed(e1, "s", "d", 4, Scale)
+    val r1 = pagerank(e1, "s", "d", 4)
       .as[(String, Long, Double)].collect().toSet
-    val r2 = Graph.pagerankFixed(e2, "s", "d", 4, Scale)
+    val r2 = pagerank(e2, "s", "d", 4)
       .as[(String, Long, Double)].collect().toSet
     assert(r1 == r2)
   }
@@ -54,17 +79,15 @@ class GraphSpec extends SparkSpec {
   test("pagerankFixed drops NULL endpoints and guards its parameters") {
     val edges = Seq((Option("a"), Option("b")), (Option.empty[String], Option("x")),
       (Option("y"), Option.empty[String])).toDF("s", "d")
-    val nodes = Graph.pagerankFixed(edges, "s", "d", 1, Scale)
+    val nodes = pagerank(edges, "s", "d", 1)
       .select("node").as[String].collect().toSet
     assert(nodes == Set("a", "b")) // x/y rode in on NULL-endpoint edges only
+    assertThrows[IllegalArgumentException](pagerank(edges, "s", "d", 0))
+    assertThrows[IllegalArgumentException](pagerank(edges, "s", "d", 51))
     assertThrows[IllegalArgumentException](
-      Graph.pagerankFixed(edges, "s", "d", 0, Scale))
+      pagerank(edges, "s", "d", 5, 1000L))
     assertThrows[IllegalArgumentException](
-      Graph.pagerankFixed(edges, "s", "d", 51, Scale))
-    assertThrows[IllegalArgumentException](
-      Graph.pagerankFixed(edges, "s", "d", 5, 1000L))
-    assertThrows[IllegalArgumentException](
-      Graph.pagerankFixed(edges.withColumnRenamed("s", "node"), "node", "d", 5))
+      pagerank(edges.withColumnRenamed("s", "node"), "node", "d", 5))
   }
 
   test("triangleStats counts K4 exactly; dups, self-loops, NULLs drop") {
@@ -121,41 +144,27 @@ class GraphSpec extends SparkSpec {
   test("pagerankResidual: a 2-cycle fixed point has zero residual; a " +
       "non-symmetric graph's residual shrinks as iters grow") {
     val cyc = Seq(("a", "b"), ("b", "a")).toDF("s", "d")
-    val r0 = Graph.pagerankResidual(cyc, "s", "d", 3, Scale)
-      .as[(Long, Long, Double)].head()
+    val r0 = pagerankResidual(cyc, 3).as[(Long, Long, Double)].head()
     assert(r0 == ((2L, 0L, 0.0))) // exact fixed point from round 0
     val edges = Seq(("a", "b"), ("a", "c"), ("b", "c"), ("c", "a"))
       .toDF("s", "d")
-    def l1(iters: Int): Long = Graph.pagerankResidual(edges, "s", "d",
-      iters, Scale).as[(Long, Long, Double)].head()._2
+    def l1(iters: Int): Long =
+      pagerankResidual(edges, iters).as[(Long, Long, Double)].head()._2
     assert(l1(12) < l1(2)) // damping contracts the iteration
-    // the gauge's last round must agree with pagerankFixed: residual
+    // the gauge's last round must agree with the ranks: residual
     // recomputed by hand from the two fixed runs
-    val p1 = Graph.pagerankFixed(edges, "s", "d", 3, Scale)
+    val p1 = pagerank(edges, "s", "d", 3)
       .select("node", "pr_scaled").as[(String, Long)].collect().toMap
-    val p2 = Graph.pagerankFixed(edges, "s", "d", 4, Scale)
+    val p2 = pagerank(edges, "s", "d", 4)
       .select("node", "pr_scaled").as[(String, Long)].collect().toMap
     val want = p1.keys.map(k => math.abs(p2(k) - p1(k))).sum
     assert(l1(4) == want)
   }
 
-  test("pagerankWithResidual == (pagerankFixed, pagerankResidual) on the " +
-      "shared prefix — one fixpoint, identical outputs") {
-    val edges = Seq(("a", "b"), ("a", "c"), ("b", "c"), ("c", "a"))
-      .toDF("s", "d")
-    val (ranks, residual) = Graph.pagerankWithResidual(edges, "s", "d", 4, Scale)
-    val fixed = Graph.pagerankFixed(edges, "s", "d", 4, Scale)
-      .as[(String, Long, Double)].collect().toSet
-    assert(ranks.as[(String, Long, Double)].collect().toSet == fixed)
-    val solo = Graph.pagerankResidual(edges, "s", "d", 4, Scale)
-      .as[(Long, Long, Double)].head()
-    assert(residual.as[(Long, Long, Double)].head() == solo)
-  }
-
   test("pagerankResidual: empty graph emits the (0, 0, 0.0) row") {
     val empty = Seq.empty[(String, String)].toDF("s", "d")
-    assert(Graph.pagerankResidual(empty, "s", "d", 3, Scale)
-      .as[(Long, Long, Double)].head() == ((0L, 0L, 0.0)))
+    assert(pagerankResidual(empty, 3).as[(Long, Long, Double)].head() ==
+      ((0L, 0L, 0.0)))
   }
 
   private implicit class Map2[A, B, C](rows: Array[(A, B, C)]) {
@@ -187,7 +196,7 @@ class GraphSpec extends SparkSpec {
     val edges = Set((1L, 10L), (1L, 11L), (2L, 10L), (3L, 11L), (3L, 12L),
       (10L, 2L)) // 10 also points back at 2: mixed hub/authority
     val df = edges.toSeq.toDF("s", "d").repartition(3)
-    val got = Graph.hitsFixed(df, "s", "d", 3)
+    val got = hits(df, "s", "d", 3)
       .select("node", "hub_scaled", "auth_scaled")
       .as[(Long, Long, Long)].collect().toMap2
     assert(got == bruteHits(edges, 3, 1000000L))
@@ -198,7 +207,7 @@ class GraphSpec extends SparkSpec {
   test("hitsFixed: parallel edges collapse and NULL endpoints drop") {
     val df = Seq((Some(1L), Some(10L)), (Some(1L), Some(10L)),
       (Some(1L), None), (None, Some(10L))).toDF("s", "d")
-    val got = Graph.hitsFixed(df, "s", "d", 2)
+    val got = hits(df, "s", "d", 2)
       .select("node", "hub_scaled", "auth_scaled")
       .as[(Long, Long, Long)].collect().toMap2
     assert(got == bruteHits(Set((1L, 10L)), 2, 1000000L))
@@ -209,7 +218,8 @@ class GraphSpec extends SparkSpec {
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (5L, 6L))
       .toDF("s", "d")
     val seeds = Seq(1L, 99L).toDF("node") // 99 is not in the graph
-    val got = Graph.bfsDistances(edges, "s", "d", seeds, 4)
+    val got = Graph.bfsDistancesOn(Graph.pagerankLayout(edges, "s", "d"),
+        seeds, 4)
       .as[(Long, Long)].collect().toMap
     assert(got == Map(1L -> 0L, 2L -> 1L, 3L -> 2L, 4L -> 3L, 5L -> 4L,
       99L -> 0L)) // 6 is 5 hops out — absent under the cap
@@ -220,7 +230,8 @@ class GraphSpec extends SparkSpec {
     val edges = Seq(("a", "b"), ("b", "c"), ("c", "a"), ("c", "d"))
       .toDF("s", "d")
     val seeds = Seq("a", "zz").toDF("node") // zz is outside the edge set
-    val got = Graph.pagerankPersonalized(edges, "s", "d", seeds, 3, Scale)
+    val got = Graph.pagerankPersonalizedOn(
+        Graph.pagerankLayout(edges, "s", "d"), seeds, 3, Scale)
       .select("node", "pr_scaled").as[(String, Long)].collect().toMap
     // brute force: S = 1 survivor (a); same integer ops
     val es = Set(("a", "b"), ("b", "c"), ("c", "a"), ("c", "d"))
@@ -241,8 +252,9 @@ class GraphSpec extends SparkSpec {
 
   test("pagerankPersonalized: no surviving seeds emits all-zero ranks") {
     val edges = Seq(("a", "b")).toDF("s", "d")
-    val got = Graph.pagerankPersonalized(edges, "s", "d",
-      Seq("nope").toDF("node"), 2, Scale)
+    val got = Graph.pagerankPersonalizedOn(
+        Graph.pagerankLayout(edges, "s", "d"), Seq("nope").toDF("node"), 2,
+        Scale)
       .select("node", "pr_scaled").as[(String, Long)].collect().toMap
     assert(got == Map("a" -> 0L, "b" -> 0L))
   }
@@ -250,7 +262,7 @@ class GraphSpec extends SparkSpec {
   test("bfsDistances: multi-source takes the MIN over seeds and relaxes " +
     "through cycles without double-counting") {
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (4L, 3L)).toDF("s", "d")
-    val got = Graph.bfsDistances(edges, "s", "d",
+    val got = Graph.bfsDistancesOn(Graph.pagerankLayout(edges, "s", "d"),
       Seq(1L, 4L).toDF("node"), 3).as[(Long, Long)].collect().toMap
     assert(got == Map(1L -> 0L, 4L -> 0L, 2L -> 1L, 3L -> 1L))
   }
@@ -293,14 +305,14 @@ class GraphSpec extends SparkSpec {
     // peels e (deg 1 after f left); the K4 plus d's full degree remain.
     val edges = Seq(("a", "b"), ("a", "c"), ("a", "d"), ("b", "c"),
       ("b", "d"), ("c", "d"), ("d", "e"), ("e", "f")).toDF("s", "d2")
-    val r1 = Graph.kcoreSurvivors(edges, "s", "d2", 2, 1)
+    val r1 = Graph.kcoreSurvivorsOn(und(edges), 2, 1)
       .as[(String, Long)].collect().toMap
     assert(r1 == Map("a" -> 3L, "b" -> 3L, "c" -> 3L, "d" -> 4L, "e" -> 1L))
-    val r2 = Graph.kcoreSurvivors(edges, "s", "d2", 2, 2)
+    val r2 = Graph.kcoreSurvivorsOn(und(edges), 2, 2)
       .as[(String, Long)].collect().toMap
     assert(r2 == Map("a" -> 3L, "b" -> 3L, "c" -> 3L, "d" -> 3L))
     // converged: a third round changes nothing
-    val r3 = Graph.kcoreSurvivors(edges, "s", "d2", 2, 3)
+    val r3 = Graph.kcoreSurvivorsOn(und(edges), 2, 3)
       .as[(String, Long)].collect().toMap
     assert(r3 == r2)
   }
@@ -312,13 +324,15 @@ class GraphSpec extends SparkSpec {
     // neighbor: only (1,4), common middles {2, 3} (both deg 3).
     val edges = Seq(("1", "2"), ("2", "3"), ("1", "3"), ("3", "4"),
       ("2", "4")).toDF("s", "d2")
-    val got = Graph.adamicAdar(edges, "s", "d2", 64, 10)
+    def aa(cap: Int) = Graph.adamicAdarFrom(
+      Graph.commonNeighborStatsOn(und(edges), cap), 10)
+    val got = aa(64)
       .as[(String, String, Long, Long)].collect().toSeq
     val qlog3 = math.floor(math.log(3.0) * 1e6).toLong
     assert(got == Seq(("1", "4", 2L, 2L * (1000000000000L / qlog3))))
     // cap 2 keeps only deg-2 middles (nodes 1 and 4), whose wedge pairs
     // (2,3) are adjacent — nothing survives the anti join
-    assert(Graph.adamicAdar(edges, "s", "d2", 2, 10).isEmpty)
+    assert(aa(2).isEmpty)
   }
 
   test("neighborJaccard: exact union-normalized scores on the same hand " +
@@ -327,7 +341,9 @@ class GraphSpec extends SparkSpec {
     // is (1,4) — common {2,3}, deg 1 = 2, deg 4 = 2, union = 2+2−2 = 2
     val edges = Seq(("1", "2"), ("2", "3"), ("1", "3"), ("3", "4"),
       ("2", "4")).toDF("s", "d2")
-    val got = Graph.neighborJaccard(edges, "s", "d2", 64, 10)
+    def jac(e: DataFrame) = Graph.neighborJaccardFrom(
+      Graph.commonNeighborStatsOn(und(e), 64), 10)
+    val got = jac(edges)
       .as[(String, String, Long, Long, Long, Long, Double)]
       .collect().toSeq
     assert(got == Seq(("1", "4", 2L, 2L, 2L, 1000000L, 1.0)))
@@ -335,7 +351,7 @@ class GraphSpec extends SparkSpec {
     // through middle 3 — union = 2+1−1 = 2 → 0.5 each
     val tri = Seq(("1", "2"), ("2", "3"), ("1", "3"), ("3", "4"))
       .toDF("s", "d2")
-    val got2 = Graph.neighborJaccard(tri, "s", "d2", 64, 10)
+    val got2 = jac(tri)
       .as[(String, String, Long, Long, Long, Long, Double)]
       .collect().toSeq
     assert(got2 == Seq(("1", "4", 1L, 2L, 1L, 500000L, 0.5),
@@ -370,7 +386,7 @@ class GraphSpec extends SparkSpec {
     // triangle {a,b,c} + bridge c—d
     val edges = Seq(("a", "b"), ("a", "c"), ("b", "c"), ("c", "d"))
       .toDF("s", "d2")
-    val got = Graph.localClustering(edges, "s", "d2")
+    val got = Graph.localClusteringOn(und(edges))
       .collect().map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2),
         if (r.isNullAt(3)) null else r.getDouble(3)))).toMap
     assert(got("a") == ((2L, 1L, 1.0)))
@@ -381,7 +397,7 @@ class GraphSpec extends SparkSpec {
     // matching 3× triangleStats' global count
     val sq = Seq(("1", "2"), ("2", "3"), ("1", "3"), ("3", "4"),
       ("2", "4")).toDF("s", "d2")
-    val per = Graph.localClustering(sq, "s", "d2").collect()
+    val per = Graph.localClusteringOn(und(sq)).collect()
     assert(per.map(_.getLong(2)).sum == 3L *
       Graph.triangleStats(sq, "s", "d2").head().getLong(3))
   }
@@ -393,7 +409,7 @@ class GraphSpec extends SparkSpec {
     val edges = Seq((1L, 2L), (2L, 1L), (1L, 3L), (2L, 3L), (3L, 10L),
       (10L, 11L), (10L, 12L), (11L, 12L), (11L, 11L)).toDF("s", "d2")
     def labels(i: Int): Map[Long, Long] =
-      Graph.labelPropagation(edges, "s", "d2", i)
+      labelPropagation(edges, i)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     // round 1: every node takes its min neighbor id (all counts are 1)
     assert(labels(1) == Map(1L -> 2L, 2L -> 1L, 3L -> 1L,
@@ -404,28 +420,23 @@ class GraphSpec extends SparkSpec {
       10L -> 3L, 11L -> 3L, 12L -> 3L))
     // composed with modularity: both communities' labels are consistent
     val q = Graph.modularity(edges, "s", "d2",
-      Graph.labelPropagation(edges, "s", "d2", 4), "node", "label").head()
+      labelPropagation(edges, 4), "node", "label").head()
     assert(q.getLong(0) == 7L && q.getLong(1) == 2L) // 7 edges, 2 comms
     // iters out of range fails loud
     val e = intercept[IllegalArgumentException] {
-      Graph.labelPropagation(edges, "s", "d2", 0)
+      labelPropagation(edges, 0)
     }
     assert(e.getMessage.contains("iters"))
     // the movement gauge off the same walk: l1 vs l2 differ at nodes
     // 1, 10, 11, 12 (hand walk); by round 4 the partition is a fixed
     // point, so the last round moved nothing
-    val m2 = Graph.labelPropagationWithMovement(edges, "s", "d2", 2)
-      ._2.head()
+    val layout = Graph.lpaLayout(edges, "s", "d2")
+    val m2 = Graph.labelPropagationWithMovementOn(layout, 2)._2.head()
     assert((m2.getLong(0), m2.getLong(1)) == ((6L, 4L)))
     assert(m2.getDouble(2) == math.floor(4d / 6d * 1e6) / 1e6)
-    val m4 = Graph.labelPropagationWithMovement(edges, "s", "d2", 4)
-      ._2.head()
+    val m4 = Graph.labelPropagationWithMovementOn(layout, 4)._2.head()
     assert((m4.getLong(0), m4.getLong(1), m4.getDouble(2)) ==
       ((6L, 0L, 0.0)))
-    // the pair's labels element is labelPropagation verbatim
-    assert(Graph.labelPropagationWithMovement(edges, "s", "d2", 4)
-      ._1.collect().toSet == labels(4).map { case (n, l) =>
-        org.apache.spark.sql.Row(n, l) }.toSet)
   }
 
   test("labelPropagationWeighted: multiplicity out-votes the min-label " +
@@ -436,16 +447,18 @@ class GraphSpec extends SparkSpec {
     // orientations (2+3) to pin the collapse-by-sum rule.
     val edges = Seq((1L, 2L, 1L), (2L, 3L, 2L), (3L, 2L, 3L))
       .toDF("s", "d2", "w")
-    val weighted = Graph.labelPropagationWeighted(edges, "s", "d2", "w", 1)
+    val weighted = Graph.labelPropagationWeightedOn(
+        Graph.lpaWeightedLayout(edges, "s", "d2", "w"), 1)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(weighted == Map(1L -> 2L, 2L -> 3L, 3L -> 2L))
-    val unweighted = Graph.labelPropagation(edges, "s", "d2", 1)
+    val unweighted = labelPropagation(edges, 1)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(unweighted(2L) == 1L) // the tie the weights flip
     // non-positive weight fails loud
     val bad = Seq((1L, 2L, 0L)).toDF("s", "d2", "w")
     val e = intercept[Exception] {
-      Graph.labelPropagationWeighted(bad, "s", "d2", "w", 1).collect()
+      Graph.labelPropagationWeightedOn(
+        Graph.lpaWeightedLayout(bad, "s", "d2", "w"), 1).collect()
     }
     assert(e.getMessage.contains("non-positive weight"))
   }
@@ -456,22 +469,23 @@ class GraphSpec extends SparkSpec {
       .toDF("n", "lbl")
     val edges = Seq((1L, 2L, 4L), (3L, 4L, 2L), (2L, 3L, 1L))
       .toDF("s", "d2", "w")
-    val card = Graph.communityCard(edges, "s", "d2", "w", labels, "n", "lbl")
+    def card(e: DataFrame) = Graph.communityCardFrom(
+      Graph.weightedUndirected(e, "s", "d2", "w"), labels, "n", "lbl")
+    val got = card(edges)
       .collect().map(r => r.getLong(0) ->
         (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4),
           if (r.isNullAt(5)) null else r.getDouble(5))).toMap
     // c1: intra (1,2) w4, cut (2,3) w1 -> 1/(2*4+1); c3: 1/(2*2+1)
-    assert(card(1L) == ((2L, 1L, 4L, 1L,
+    assert(got(1L) == ((2L, 1L, 4L, 1L,
       math.floor(1d / 9d * 1e6) / 1e6)))
-    assert(card(3L) == ((2L, 1L, 2L, 1L,
+    assert(got(3L) == ((2L, 1L, 2L, 1L,
       math.floor(1d / 5d * 1e6) / 1e6)))
-    assert(card(7L) == ((1L, 0L, 0L, 0L, null))) // island, 0/0 undefined
+    assert(got(7L) == ((1L, 0L, 0L, 0L, null))) // island, 0/0 undefined
     // an edge to a node the partition never labeled must throw, not
     // silently drop (a dropped edge understates the cut)
     val dangling = edges.union(Seq((4L, 5L, 1L)).toDF("s", "d2", "w"))
     val e = intercept[Exception] {
-      Graph.communityCard(dangling, "s", "d2", "w", labels, "n", "lbl")
-        .collect()
+      card(dangling).collect()
     }
     assert(e.getMessage.contains("unlabeled endpoint"))
   }
@@ -502,11 +516,10 @@ class GraphSpec extends SparkSpec {
       "bipartite fixed point has zero residual") {
     val edges = Seq((1L, 101L), (1L, 102L), (2L, 102L), (3L, 103L))
       .toDF("s", "d2")
-    val (ranks, residual) = Graph.hitsWithResidual(edges, "s", "d2", 3)
-    assert(ranks.collect().map(_.toSeq).toSet ==
-      Graph.hitsFixed(edges, "s", "d2", 3).collect().map(_.toSeq).toSet)
+    val layout = Graph.hitsLayout(edges, "s", "d2")
+    val residual = Graph.hitsWithResidualOn(layout, 3)._2
     def scores(i: Int): Map[Long, (Long, Long)] =
-      Graph.hitsFixed(edges, "s", "d2", i).collect()
+      Graph.hitsWithResidualOn(layout, i)._1.collect()
         .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
     val (s3, s2) = (scores(3), scores(2))
     val r = residual.head()
@@ -518,11 +531,12 @@ class GraphSpec extends SparkSpec {
     // star hub: one hub, one authority — normalized scores stabilize
     // after round 1, so the round-2 residual is exactly zero
     val star = Seq((1L, 2L), (1L, 3L)).toDF("s", "d2")
-    val rs = Graph.hitsWithResidual(star, "s", "d2", 2)._2.head()
+    val starLayout = Graph.hitsLayout(star, "s", "d2")
+    val rs = Graph.hitsWithResidualOn(starLayout, 2)._2.head()
     assert((rs.getLong(1), rs.getLong(2)) == ((0L, 0L)))
     assert(rs.getDouble(3) == 0.0 && rs.getDouble(4) == 0.0)
     val e = intercept[IllegalArgumentException] {
-      Graph.hitsWithResidual(star, "s", "d2", 1)
+      Graph.hitsWithResidualOn(starLayout, 1)
     }
     assert(e.getMessage.contains("iters"))
   }
@@ -533,11 +547,12 @@ class GraphSpec extends SparkSpec {
     // path 1—2—3 (both directions), seeds {1, 3}, cap 3
     val edges = Seq((1L, 2L), (2L, 1L), (2L, 3L), (3L, 2L)).toDF("s", "d")
     val seeds = Seq(1L, 3L).toDF("node")
-    val perSeed = Graph.bfsDistancesPerSeed(edges, "s", "d", seeds, 3)
-      .as[(Long, Long, Long)].collect().toSet
+    val dist = Graph.bfsDistancesPerSeedOn(
+      Graph.pagerankLayout(edges, "s", "d"), seeds, 3)
+    val perSeed = dist.as[(Long, Long, Long)].collect().toSet
     assert(perSeed == Set((1L, 1L, 0L), (1L, 2L, 1L), (1L, 3L, 2L),
       (3L, 3L, 0L), (3L, 2L, 1L), (3L, 1L, 2L)))
-    val got = Graph.harmonicCentrality(edges, "s", "d", seeds, 3)
+    val got = Graph.harmonicCentralityFrom(dist)
       .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2))))
       .toMap
     assert(got == Map(
@@ -548,24 +563,26 @@ class GraphSpec extends SparkSpec {
 
   test("betweennessSampled: hand Brandes on a diamond — two equal paths " +
       "split the dependency, endpoints score zero, seed runs sum") {
+    def betweenness(edges: DataFrame, seeds: DataFrame): DataFrame = {
+      val l = Graph.pagerankLayout(edges, "s", "d")
+      Graph.betweennessSampledFromOn(
+        Graph.bfsDistancesPerSeedOn(l, seeds, 3).localCheckpoint(true), l, 3)
+    }
     // diamond 1—2—4, 1—3—4 (bidirected)
     val und = Seq((1L, 2L), (1L, 3L), (2L, 4L), (3L, 4L))
     val edges = (und ++ und.map(_.swap)).toDF("s", "d")
     // one seed: σ(4) = 2, so 2 and 3 each carry half a dependency
-    val one = Graph.betweennessSampled(edges, "s", "d",
-        Seq(1L).toDF("node"), 3)
+    val one = betweenness(edges, Seq(1L).toDF("node"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(one == Map(2L -> 500000L, 3L -> 500000L, 4L -> 0L))
     // both ends as seeds: the symmetric runs sum; endpoints stay 0
-    val both = Graph.betweennessSampled(edges, "s", "d",
-        Seq(1L, 4L).toDF("node"), 3)
+    val both = betweenness(edges, Seq(1L, 4L).toDF("node"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(both == Map(1L -> 0L, 2L -> 1000000L, 3L -> 1000000L, 4L -> 0L))
     // a funnel: path 1—2—3 plus 2—5; node 2 brokers EVERY path from 1
     val p = Seq((1L, 2L), (2L, 3L), (2L, 5L))
     val pe = (p ++ p.map(_.swap)).toDF("s", "d")
-    val fun = Graph.betweennessSampled(pe, "s", "d",
-        Seq(1L).toDF("node"), 3)
+    val fun = betweenness(pe, Seq(1L).toDF("node"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(fun == Map(2L -> 2000000L, 3L -> 0L, 5L -> 0L))
   }

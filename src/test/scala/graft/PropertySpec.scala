@@ -312,39 +312,6 @@ class PropertySpec extends SparkSpec {
     })
   }
 
-  test("property: fuzzyPairs equals brute-force levenshtein all-pairs " +
-      "(exact recall of the prefix filter) on a narrow alphabet") {
-    def lev(a: String, b: String): Int = {
-      val d = Array.tabulate(a.length + 1, b.length + 1) { (i, j) =>
-        if (i == 0) j else if (j == 0) i else 0
-      }
-      for (i <- 1 to a.length; j <- 1 to b.length)
-        d(i)(j) = math.min(math.min(d(i - 1)(j) + 1, d(i)(j - 1) + 1),
-          d(i - 1)(j - 1) + (if (a(i - 1) == b(j - 1)) 0 else 1))
-      d(a.length)(b.length)
-    }
-    // narrow alphabet + short strings → dense near-collisions, repeated
-    // grams, and hot tokens: the adversarial regime for prefix filtering
-    val gen = for {
-      n <- Gen.choose(2, 24)
-      strs <- Gen.listOfN(n, for {
-        len <- Gen.choose(9, 14) // ≥ (maxDist+1)*k = 9
-        cs <- Gen.listOfN(len, Gen.oneOf('a', 'b', 'c'))
-      } yield cs.mkString)
-      parts <- Gen.choose(1, 4)
-    } yield (strs.zipWithIndex.map { case (t, i) => (i.toLong, t) }, parts)
-    check(Prop.forAll(gen) { case (rows, parts) =>
-      val df = rows.toDF("id", "st").repartition(parts)
-      val got = graft.operators.Dedup.fuzzyPairs(df, "id", "st", 3, 2)
-        .as[(Long, Long, Long)].collect().toSet
-      val expected = (for {
-        (ia, sa) <- rows; (ib, sb) <- rows if ia < ib
-        d = lev(sa, sb) if d <= 2
-      } yield (ia, ib, d.toLong)).toSet
-      got == expected
-    })
-  }
-
   test("property: concatPack equals the sequential concat-then-chunk fold, " +
       "any partitioning") {
     val gen = for {
@@ -787,14 +754,14 @@ class PropertySpec extends SparkSpec {
 
   test("property: adamicAdar is invariant under edge orientation flips " +
       "and duplicate edges (canonical distinct)") {
+    import graft.operators.Graph
+    def aa(es: List[(Long, Long)]) = Graph.adamicAdarFrom(
+        Graph.commonNeighborStatsOn(
+          Graph.undirectedLayout(es.toDF("s", "d"), "s", "d"), 64), 1000)
+      .collect().map(_.toSeq).toSeq
     check(Prop.forAll(edgeGen) { es =>
-      val a = graft.operators.Graph.adamicAdar(
-        es.toDF("s", "d"), "s", "d", 64, 1000).collect().map(_.toSeq).toSeq
       val flipped = es.map(_.swap) ++ es // all reversed + originals again
-      val b = graft.operators.Graph.adamicAdar(
-        flipped.toDF("s", "d"), "s", "d", 64, 1000)
-        .collect().map(_.toSeq).toSeq
-      a == b
+      aa(es) == aa(flipped)
     })
   }
 
@@ -832,14 +799,14 @@ class PropertySpec extends SparkSpec {
     // and every min-label tie resolves to the same winner before and
     // after; the partition must map through f exactly
     def f(n: Long) = 3 * n + 7
+    import graft.operators.Graph
+    def labels(es: List[(Long, Long)], iters: Int): Map[Long, Long] =
+      Graph.labelPropagationWithMovementOn(
+          Graph.lpaLayout(es.toDF("s", "d"), "s", "d"), iters)._1
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     check(Prop.forAll(edgeGen, Gen.choose(1, 5)) { (es, iters) =>
-      val base = graft.operators.Graph.labelPropagation(
-          es.toDF("s", "d"), "s", "d", iters)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val mapped = graft.operators.Graph.labelPropagation(
-          es.map { case (a, b) => (f(a), f(b)) }.toDF("s", "d"),
-          "s", "d", iters)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val base = labels(es, iters)
+      val mapped = labels(es.map { case (a, b) => (f(a), f(b)) }, iters)
       base.isEmpty == mapped.isEmpty &&
         base.forall { case (n, l) => mapped.get(f(n)).contains(f(l)) }
     })

@@ -81,29 +81,12 @@ class SyntaxSpec extends SparkSpec {
     assert(cats.hellingerDrift("c", col("p")).head().toSeq ==
       graft.operators.InfoTheory.hellingerDrift(cats, "c", col("p"))
         .head().toSeq)
-    val edges = Seq(("1", "2"), ("2", "3"), ("1", "3"), ("3", "4"),
-      ("2", "4")).toDF("s", "d")
-    assert(edges.adamicAdar("s", "d", 64, 10).collect().toSeq ==
-      graft.operators.Graph.adamicAdar(edges, "s", "d", 64, 10)
-        .collect().toSeq)
-    assert(edges.commonNeighborStats("s", "d", 64).collect().toSet ==
-      graft.operators.Graph.commonNeighborStats(edges, "s", "d", 64)
-        .collect().toSet)
     val pts = Seq((0L, 0L), (1L, 2L), (2L, 4L)).toDF("x", "y")
     assert(pts.theilSen("x", "y").head().toSeq ==
       graft.operators.CoreOps.theilSen(pts, "x", "y").head().toSeq)
   }
 
   test("the round-9 facade methods delegate to their operators") {
-    val edges = Seq((1L, 2L), (1L, 3L), (2L, 3L), (3L, 10L), (10L, 11L),
-      (10L, 12L), (11L, 12L)).toDF("s", "d")
-    assert(edges.labelPropagation("s", "d", 3).collect().toSet ==
-      graft.operators.Graph.labelPropagation(edges, "s", "d", 3)
-        .collect().toSet)
-    val (hr, rr) = edges.hitsWithResidual("s", "d", 2)
-    val (hg, rg) = graft.operators.Graph.hitsWithResidual(edges, "s", "d", 2)
-    assert(hr.collect().toSet == hg.collect().toSet)
-    assert(rr.head().toSeq == rg.head().toSeq)
     val docs = Seq((1L, "alpha beta gamma delta"),
       (2L, "alpha beta gamma delta"), (3L, "something else wholly"))
       .toDF("doc_id", "text")
@@ -191,11 +174,6 @@ class SyntaxSpec extends SparkSpec {
     assert(ratings.krippendorffAlpha("it", "cat").head().toSeq ==
       graft.operators.Eval.krippendorffAlpha(ratings, "it", "cat")
         .head().toSeq)
-    val edges = Seq((1L, 2L, 3L), (2L, 3L, 1L)).toDF("s", "d", "w")
-    assert(edges.labelPropagationWeighted("s", "d", "w", 2)
-        .collect().toSet ==
-      graft.operators.Graph.labelPropagationWeighted(edges, "s", "d",
-        "w", 2).collect().toSet)
     val files = Seq(("a/x", 100L), ("b/y", 250L)).toDF("p", "b")
     assert(files.compactionPlan("p", "b", 200L).collect().toSet ==
       graft.sources.CorpusLayout.compactionPlan(files, "p", "b", 200L)

@@ -361,60 +361,6 @@ class TextAndDedupSpec extends SparkSpec {
       docs.withColumn("_rn", lit(1)), "doc_id", clusters, length(col("text"))))
   }
 
-  test("fuzzyPairs finds exactly the pairs within maxDist edits: identity, " +
-      "substitutions, repeated-gram strings, over-threshold excluded, " +
-      "short strings fail loud") {
-    val docs = Seq(
-      (1L, "weekly report 2024"),
-      (2L, "weekly report 2025"),   // 1 sub of doc 1
-      (3L, "weekly reports 2025"),  // 1 insert of doc 2, 2 edits from doc 1
-      (4L, "quarterly digest 9"),   // far from everything
-      (5L, "aaaaaaaaaa"),           // repeated grams: occurrence numbering
-      (6L, "aaaabaaaaa")            // 1 sub of doc 5
-    ).toDF("doc_id", "head")
-    val got = Dedup.fuzzyPairs(docs, "doc_id", "head", 3, 2)
-      .as[(Long, Long, Long)].collect().toSet
-    assert(got == Set((1L, 2L, 1L), (2L, 3L, 1L), (1L, 3L, 2L), (5L, 6L, 1L)))
-    // a string below (maxDist+1)*k chars voids the recall bound → loud
-    val short = Seq((1L, "tiny")).toDF("doc_id", "head")
-    val err = intercept[Exception] {
-      Dedup.fuzzyPairs(short, "doc_id", "head", 3, 2).collect()
-    }
-    assert((err.getMessage + Option(err.getCause).map(_.getMessage).getOrElse(""))
-      .contains("guarantee recall"))
-    assertThrows[IllegalArgumentException](
-      Dedup.fuzzyPairs(docs, "doc_id", "head", 0, 2))
-  }
-
-  test("fuzzyJoin resolves left against right across frames: exact hits at " +
-      "dist 0, union-frequency order, per-side guard") {
-    val left = Seq(
-      (1L, "weekly report 2024"),
-      (2L, "weekly report 2025"),
-      (3L, "quarterly digest 9")).toDF("doc_id", "head")
-    val registry = Seq(
-      (100L, "weekly report 2024"),  // exact hit for 1, 1 edit from 2
-      (101L, "monthly summary 77")).toDF("rid", "name")
-    val got = Dedup.fuzzyJoin(left, registry, "doc_id", "head", "rid", "name",
-        3, 2).as[(Long, Long, Long)].collect().toSet
-    assert(got == Set((1L, 100L, 0L), (2L, 100L, 1L)))
-    // brute-force cross-check on a narrow-alphabet clash set (hot tokens on
-    // one side only — exercises the UNION frequency order)
-    val l2 = Seq((1L, "aaaabaaaa"), (2L, "ccccccccc")).toDF("id", "st")
-    val r2 = Seq((10L, "aaaaaaaaa"), (11L, "aaaacaaaa"), (12L, "bbbbbbbbb"))
-      .toDF("id", "st")
-    val got2 = Dedup.fuzzyJoin(l2, r2, "id", "st", "id", "st", 3, 2)
-      .as[(Long, Long, Long)].collect().toSet
-    assert(got2 == Set((1L, 10L, 1L), (1L, 11L, 1L)))
-    val short = Seq((1L, "tiny")).toDF("rid", "name")
-    val err = intercept[Exception] {
-      Dedup.fuzzyJoin(left, short, "doc_id", "head", "rid", "name", 3, 2)
-        .collect()
-    }
-    assert((err.getMessage + Option(err.getCause).map(_.getMessage).getOrElse(""))
-      .contains("fuzzyJoin(right)"))
-  }
-
   test("segmentPairs equals brute force on a seeded random corpus with " +
       "varied lengths; short index strings fail loud") {
     def lev(a: String, b: String): Int = {
@@ -607,41 +553,6 @@ class TextAndDedupSpec extends SparkSpec {
     val capped = pairs(4)
     assert(capped.subsetOf(uncapped)) // the cap only removes candidates
     assert(capped.nonEmpty)
-  }
-
-  test("fuzzyPairs maxBucket: a pathological corpus (one shared prefix " +
-      "token across many strings) is a diagnostic, not a quadratic bucket") {
-    // 30 identical strings: every prefix token's bucket holds all 30
-    val docs = (1L to 30L).map(i => (i, "abcdefgh")).toDF("doc_id", "head")
-    val err = intercept[Exception] {
-      Dedup.fuzzyPairs(docs, "doc_id", "head", 2, 1, maxBucket = 8).collect()
-    }
-    def msg(e: Throwable): String =
-      (Option(e.getMessage) ++ Option(e.getCause).map(msg)).mkString(" ")
-    assert(msg(err).contains("prefix-token bucket"))
-    // under the cap the same corpus runs exact: 30 identical strings
-    // → C(30,2) = 435 dist-0 pairs
-    val ok = Dedup.fuzzyPairs(docs, "doc_id", "head", 2, 1, maxBucket = 30)
-    assert(ok.count() == 435L)
-    assertThrows[IllegalArgumentException](
-      Dedup.fuzzyPairs(docs, "doc_id", "head", 2, 1, maxBucket = 1))
-  }
-
-  test("fuzzyJoin maxBucket: per-side bucket cap fails loud with the " +
-      "offending side named") {
-    val left = (1L to 20L).map(i => (i, "abcdefgh")).toDF("doc_id", "head")
-    val registry = Seq((100L, "abcdefgh")).toDF("rid", "name")
-    val err = intercept[Exception] {
-      Dedup.fuzzyJoin(left, registry, "doc_id", "head", "rid", "name",
-        2, 1, maxBucket = 5).collect()
-    }
-    def msg(e: Throwable): String =
-      (Option(e.getMessage) ++ Option(e.getCause).map(msg)).mkString(" ")
-    assert(msg(err).contains("fuzzyJoin(left)"))
-    // under the cap: every left row resolves at dist 0
-    val ok = Dedup.fuzzyJoin(left, registry, "doc_id", "head", "rid", "name",
-      2, 1, maxBucket = 20)
-    assert(ok.count() == 20L)
   }
 
   test("vocabGrowth: cumulative docs/tokens/vocab at checkpoints; docs " +
