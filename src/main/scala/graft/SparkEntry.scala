@@ -2751,9 +2751,8 @@ object SparkEntry {
           unix_millis(col("ts")).as("ms"), col("event_type"), col("value")),
         Seq("user_id"), Seq("ms", "event_id"))),
     // Morton codes for the multi-dim clustered layout: pure integer bit
-    // interleaving the oracle rebuilds term for term (writeZOrdered
-    // range-partitions on this value; CorpusLayoutSpec measures the
-    // per-dimension file pruning it buys)
+    // interleaving the oracle rebuilds term for term (q_layout_depth
+    // measures the per-dimension file pruning a z-curve tiling buys)
     "q_zorder" -> ((s, dir) =>
       Tables.events(s, dir).select(col("event_id"),
         graft.sources.CorpusLayout.zValue(
@@ -3763,7 +3762,7 @@ object SparkEntry {
     // sketch twin, fully oracle-checked (the q_outliers_approx pattern):
     // the exact qn_value plus a rank-space verdict on the
     // approx_percentile-grid estimate — the estimate never leaves the
-    // engine; quantileNormalizeApprox alone is the 100 TB path (SCALE.md)
+    // engine
     "q_quantile_norm_approx" -> ((s, dir) =>
       CoreOps.quantileNormalizeChecked(
         Tables.events(s, dir).withColumn("cents",

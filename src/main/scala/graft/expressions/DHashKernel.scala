@@ -29,7 +29,7 @@ object DHashKernel {
     * the same unsigned values through hex text; its make-divisible
     * division is exact, so both sides compute the same pⱼ). len < 2
     * hashes to 0 (no gradient exists). */
-  def dHashRange(b: Array[Byte], from: Int, len: Int): Long = {
+  private def dHashRange(b: Array[Byte], from: Int, len: Int): Long = {
     if (len < 2) return 0L
     var acc = 0L
     // positions are monotone in j: sample(j) of step j equals sample(j+1)

@@ -69,23 +69,31 @@ object CoreOps {
                                          n: Int): Option[Column] = {
     val bounds = df.agg(min(longCol).as("lo"), max(longCol).as("hi")).head()
     if (bounds.isNullAt(0)) None
-    else {
-      val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
-      val width = math.max((hi - lo) / n + 1, 1L)
-      Some(when(longCol.isNull, lit(0))
-        .otherwise(least(floor((longCol - lit(lo)) / lit(width)), lit(n - 1)))
-        .cast("int"))
-    }
+    else Some(rangeBucket(longCol, bounds.getLong(0), bounds.getLong(1), n))
+  }
+
+  /** The bucket of `longCol` among `n` equal-width ranges over [lo, hi]. */
+  private def rangeBucket(longCol: Column, lo: Long, hi: Long,
+                          n: Int): Column = {
+    val width = math.max((hi - lo) / n + 1, 1L)
+    when(longCol.isNull, lit(0))
+      .otherwise(least(floor((longCol - lit(lo)) / lit(width)), lit(n - 1)))
+      .cast("int")
   }
 
   /** Eager cut of `d` (PlanProbe.cut) plus a timeRangeBucket over the CUT
-    * frame, bucket 0 everywhere when the column has no non-null value. The
-    * bounds aggregate reads the materialized rows, so the upstream runs
-    * once instead of once for the bounds and again for the checkpoint. */
+    * frame. The bounds aggregate reads the materialized rows, so the
+    * upstream runs once instead of once for the bounds and again for the
+    * checkpoint. When the column has no non-null value (an empty frame,
+    * or all NULL) any bounds put every row in bucket 0; the bucket is
+    * still an expression over the column, not a literal, because Spark
+    * folds a literal partition key out of the callers' bucket windows and
+    * runs them unpartitioned ("No Partition Defined" in WindowExec). */
   private[operators] def cutWithRangeBucket(d: DataFrame, longCol: Column,
                                             n: Int): (DataFrame, Column) = {
     val cut = PlanProbe.cut(d)
-    (cut, timeRangeBucket(cut, longCol, n).getOrElse(lit(0)))
+    (cut, timeRangeBucket(cut, longCol, n)
+      .getOrElse(rangeBucket(longCol, 0L, 0L, n)))
   }
 
   // ─── §2.5 aggregations ────────────────────────────────────────────────────
@@ -153,30 +161,13 @@ object CoreOps {
     * oracle interpolate at rank (n-1)·p over the sorted values; outputs are
     * floor-truncated to 6 decimals so the interpolated doubles hash-match
     * across engines. For 100 TB telemetry where distinct-value maps get
-    * large, swap in approx_percentile (fixed-size sketch) the same way
-    * dedupProfileApprox twins dedupProfile. */
+    * large, approx_percentile's fixed-size sketch merges map-side instead;
+    * quantileProfileChecked verifies its rank bound. */
   def quantileProfile(df: DataFrame, group: String, value: String,
                       ps: Seq[Double]): DataFrame = {
     val qs = ps.map { p =>
       (floor(percentile(col(value), lit(p)) * 1e6) / 1e6)
         .as(s"p${math.round(p * 100)}")
-    }
-    df.groupBy(col(group))
-      .agg(count(lit(1)).as("n"), qs: _*)
-  }
-
-  /** The 100 TB twin of quantileProfile: approx_percentile's fixed-size
-    * KLL-style sketch merges map-side, so only O(groups) sketches cross the
-    * shuffle regardless of distinct-value count — the same exact-vs-sketch
-    * pairing as dedupProfile/dedupProfileApprox. Rank error is bounded by
-    * n/accuracy; estimates are engine-specific, so the registered query is
-    * the `quantileProfileChecked` bound form and the error bound is also
-    * pinned by a spec against the exact profile. */
-  def quantileProfileApprox(df: DataFrame, group: String, value: String,
-                            ps: Seq[Double], accuracy: Int = 10000): DataFrame = {
-    val qs = ps.map { p =>
-      approx_percentile(col(value), lit(p), lit(accuracy))
-        .as(s"p${math.round(p * 100)}_approx")
     }
     df.groupBy(col(group))
       .agg(count(lit(1)).as("n"), qs: _*)
@@ -413,7 +404,7 @@ object CoreOps {
   /** Share of all rows held by the hottest key — the number the salt-or-not
     * decision reads. One partial-agg pass (keyProfile(1)) plus an O(1) total;
     * 0.0 on empty input. */
-  def topKeyShare(df: DataFrame, key: String): Double = {
+  private[graft] def topKeyShare(df: DataFrame, key: String): Double = {
     val prof = df.groupBy(col(key)).agg(count(lit(1)).as("n_events"))
       .agg(max(col("n_events")).as("top"), sum(col("n_events")).as("total"))
       .head()
@@ -1592,9 +1583,9 @@ object CoreOps {
     * A zero MAD (≥ half the group at the median) yields NULL z and never
     * flags — the standard convention, stated rather than implied. Exact
     * `percentile` buffers a count-map per group; for value domains too
-    * large for that (unbounded doubles at corpus scale), use
-    * robustOutliersApprox below — same join/map shape, fixed-size
-    * sketches, with robustOutliersChecked as its bound form. Cross-engine
+    * large for that (unbounded doubles at corpus scale), the same
+    * join/map shape runs on approx_percentile's fixed-size sketches, whose
+    * rank bound robustOutliersChecked verifies. Cross-engine
     * reproducibility note: percentile INTERPOLATION formulas may differ by
     * an ulp between engines on fractional inputs; feeding integer-valued
     * measures (q_outliers scales money to cents) makes every interpolation
@@ -1612,37 +1603,6 @@ object CoreOps {
     val withMed = df.join(med, Seq(group))
     val mad = withMed.groupBy(col(group))
       .agg(percentile(abs(col(value) - col("_med")), lit(0.5)).as("_mad"))
-    val z = lit(0.6745) * (col(value) - col("_med")) / col("_mad")
-    withMed.join(mad, Seq(group))
-      .withColumn("robust_z",
-        when(col("_mad") > 0, floor(z * 1000000d) / 1000000d))
-      .withColumn("is_outlier",
-        coalesce(abs(col("robust_z")) > cutoff, lit(false)))
-      .drop("_med", "_mad")
-  }
-
-  /** The 100 TB twin of robustOutliers: median and MAD come from
-    * approx_percentile's fixed-size KLL-style sketch, which merges
-    * map-side — O(groups) sketches cross each shuffle no matter how many
-    * DISTINCT values the column holds, where exact `percentile` buffers a
-    * per-group count-map (fine for cents-scaled money, unbounded for raw
-    * double telemetry). Join/map shape is identical to robustOutliers.
-    * Sketch estimates are engine-specific, so the registered query is the
-    * `robustOutliersChecked` bound form — this per-row twin is the
-    * production operator. */
-  def robustOutliersApprox(df: DataFrame, group: String, value: String,
-                           cutoff: Double, accuracy: Int = 10000): DataFrame = {
-    val internal = Seq("_med", "_mad", "robust_z", "is_outlier")
-    val clash = df.columns.intersect(internal)
-    require(clash.isEmpty,
-      s"robustOutliersApprox uses ${internal.mkString(", ")}; " +
-        s"rename the input's ${clash.mkString(", ")} first")
-    val med = df.groupBy(col(group))
-      .agg(approx_percentile(col(value), lit(0.5), lit(accuracy)).as("_med"))
-    val withMed = df.join(med, Seq(group))
-    val mad = withMed.groupBy(col(group))
-      .agg(approx_percentile(abs(col(value) - col("_med")), lit(0.5),
-        lit(accuracy)).as("_mad"))
     val z = lit(0.6745) * (col(value) - col("_med")) / col("_mad")
     withMed.join(mad, Seq(group))
       .withColumn("robust_z",
@@ -2072,9 +2032,11 @@ object CoreOps {
     * NULL values pass the running total through. `nullsLast` orders NULL
     * `ord` rows after non-NULLs (DuckDB's ASC default) instead of before
     * (Spark's); key NULLs are a group of their own on either setting. */
-  def orderedPrefixSumKeyed(df: DataFrame, key: Column, ord: Column,
-                            tiebreak: String, value: String, out: String,
-                            nullsLast: Boolean = false): DataFrame =
+  private[graft] def orderedPrefixSumKeyed(df: DataFrame, key: Column,
+                                           ord: Column, tiebreak: String,
+                                           value: String, out: String,
+                                           nullsLast: Boolean = false)
+      : DataFrame =
     orderedPrefixSumsKeyed(df, key, ord, tiebreak, Seq(value -> out),
       nullsLast)
 
@@ -2100,11 +2062,10 @@ object CoreOps {
     * q_weighted_median / q_quantile_norm_approx). `totals` maps value
     * columns (each must also appear in `sums`) to total output names;
     * values/types match joinGroupTotals' plain `sum` exactly. */
-  def orderedPrefixSumsKeyedWithTotals(df: DataFrame, key: Column,
-                                       ord: Column, tiebreak: String,
-                                       sums: Seq[(String, String)],
-                                       totals: Seq[(String, String)],
-                                       nullsLast: Boolean = false): DataFrame = {
+  private[graft] def orderedPrefixSumsKeyedWithTotals(
+      df: DataFrame, key: Column, ord: Column, tiebreak: String,
+      sums: Seq[(String, String)], totals: Seq[(String, String)],
+      nullsLast: Boolean = false): DataFrame = {
     require(sums.nonEmpty, "orderedPrefixSumsKeyed needs >= 1 (value, out)")
     require((sums.map(_._2) ++ totals.map(_._2)).distinct.size ==
       sums.size + totals.size,
@@ -4505,42 +4466,16 @@ object CoreOps {
         col("_v").as("qn_value"))
   }
 
-  /** Sketch twin of quantileNormalize — the 100 TB fast path: instead of
-    * the exact distinct-value grid + rank-cell join, the global
-    * distribution collapses to ONE approx_percentile sketch row of
-    * `gridQuantiles`+1 values (one partial-agg'd aggregate to a single
-    * row, broadcast back), and each row maps to the sketch value at its
-    * group quantile rounded to the 1/gridQuantiles grid — a map-only
-    * lookup into a plan-literal-sized array, zero extra shuffle beyond
-    * the one group-keyed rank window the exact form also pays. Accuracy:
-    * the emitted value's GLOBAL rank is within
-    * N·(1/accuracy + 1/gridQuantiles) + O(1) of the exact target rank
-    * ⌈r·N/n⌉ (sketch rank error + quantile-grid quantization) — feature
-    * alignment quality, not oracle-exact placement. The estimate is an
-    * ACTUAL data value (the sketch stores observed values). For the
-    * oracle-checkable form see quantileNormalizeChecked; this is the
-    * production path (SCALE.md). `value` must be integral (cents grid).
-    * NULL values drop. Emits (group, tiebreak, value, qn_approx). */
-  def quantileNormalizeApprox(df: DataFrame, group: String, value: String,
-                              tiebreak: String, gridQuantiles: Int = 1000,
-                              accuracy: Int = 10000): DataFrame = {
-    require(gridQuantiles > 0,
-      s"gridQuantiles must be positive, got $gridQuantiles")
-    require(accuracy > 0, s"accuracy must be positive, got $accuracy")
-    require(integralTypes.contains(df.schema(value).dataType),
-      s"quantileNormalizeApprox ranks '$value' on an exact integer grid; " +
-        s"got ${df.schema(value).dataType} — scale to cents/int64 first")
-    val emitted = Seq("qn_approx", "_r", "_n", "_qs", "_idx", "_o1")
-    require(!emitted.exists(df.columns.contains),
-      s"quantileNormalizeApprox emits/uses ${emitted.mkString(", ")}; " +
-        "rename inputs")
-    // same fused keyed-prefix rank/size re-plan as the exact form
-    val base = qnRankedBase(df, group, value, tiebreak)
-    qnApproxFrom(base, df, group, value, tiebreak, gridQuantiles, accuracy)
-  }
-
-  /** The sketch-lookup tail of quantileNormalizeApprox from a precomputed
-    * base — shared with quantileNormalizeChecked. */
+  /** The sketch side of quantileNormalizeChecked, from its precomputed
+    * base: the global distribution collapses to ONE approx_percentile
+    * sketch row of `gridQuantiles`+1 values (one partial-agg'd aggregate
+    * to a single row, broadcast back), and each row maps to the sketch
+    * value at its group quantile rounded to the 1/gridQuantiles grid — a
+    * map-only lookup into a plan-literal-sized array. The emitted value
+    * is an ACTUAL data value (the sketch stores observed values) whose
+    * global rank is within N·(1/accuracy + 1/gridQuantiles) + O(1) of the
+    * exact target rank ⌈r·N/n⌉. Emits (group, tiebreak, value,
+    * qn_approx). */
   private def qnApproxFrom(base: DataFrame, df: DataFrame, group: String,
                            value: String, tiebreak: String,
                            gridQuantiles: Int, accuracy: Int): DataFrame = {
@@ -4575,8 +4510,7 @@ object CoreOps {
     * grid prefix shared (checkpointed) across the exact map, the sketch
     * lookup, and the verdict join — where the pre-fusion form re-derived
     * the base three times and the grid twice (the r12 bench line item) —
-    * plus the approx-onto-grid equi-join; the TEST harness shape,
-    * production runs quantileNormalizeApprox alone. */
+    * plus the approx-onto-grid equi-join. */
   def quantileNormalizeChecked(df: DataFrame, group: String, value: String,
                                tiebreak: String, gridQuantiles: Int = 1000,
                                accuracy: Int = 10000): DataFrame = {

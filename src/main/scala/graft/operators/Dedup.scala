@@ -49,26 +49,13 @@ object Dedup {
       .groupBy(dims.map(col): _*)
       .agg(count(lit(1)).as("n_docs"), count_distinct(col("fp")).as("n_distinct"))
 
-  /** The 100 TB form of dedupProfile: HyperLogLog++ approximate cardinality.
-    * The sketch is fixed-size per group and merges associatively, so the
-    * whole profile is one map-side-combined shuffle of O(groups) sketches —
-    * no per-fingerprint row ever crosses the network. `rsd` is the target
-    * relative standard deviation (Spark default 0.05). Sketch estimates are
-    * engine-specific, so the registered query is the `dedupProfileChecked`
-    * bound form below; the error bound vs the exact profile is also pinned
-    * by TextAndDedupSpec. */
-  def dedupProfileApprox(docs: DataFrame, text: String, dims: Seq[String],
-                         rsd: Double = 0.05): DataFrame =
-    docs.select(dims.map(col) :+ TextOps.fingerprint(col(text)).as("fp"): _*)
-      .groupBy(dims.map(col): _*)
-      .agg(count(lit(1)).as("n_docs"),
-        approx_count_distinct(col("fp"), rsd).as("n_distinct_approx"))
-
-  /** Oracle-checkable form of the sketch profile: exact n_distinct
+  /** Oracle-checkable sketch profile: exact n_distinct
     * (engine-independent) plus a boolean attesting the HLL++ estimate lies
     * within `tol` relative error of it. The estimate itself never leaves the
     * engine — only exact values and the verdict do — so a SQL oracle that
-    * computes the exact side hash-matches the whole row. Both aggregates run
+    * computes the exact side hash-matches the whole row. HyperLogLog++ is
+    * fixed-size per group and merges associatively; `rsd` is its target
+    * relative standard deviation (Spark default 0.05). Both aggregates run
     * in ONE groupBy (sketch and distinct-set merge map-side). `tol` defaults
     * to 3×rsd (three standard deviations) with an absolute floor of 16,
     * where HLL++'s sparse/linear-counting regime is effectively exact: rsd
@@ -85,7 +72,7 @@ object Dedup {
           .as("within_bound"))
 
   /** Word k-shingles of the normalized text: the standard MinHash input unit. */
-  def shingles(text: Column, k: Int): Column = {
+  private[graft] def shingles(text: Column, k: Int): Column = {
     val norm = TextOps.normalized(text)
     val toks = split(norm, " ")
     // shingle starts 0..size-k (1-based slice below), size-k+1 shingles total
@@ -653,11 +640,6 @@ object Dedup {
     bits.reduce((a, b) => a.bitwiseOR(b))
   }
 
-  /** One-shot convenience form (hash + vote in a single expression) — for
-    * small inputs/tests; pipelines should stage via tokenHashes. Near-dup
-    * docs differ in few bits (Hamming distance). Pure map. */
-  def simhash(text: Column): Column = simhashFromHashes(tokenHashes(text))
-
   /** n-gram Jaccard similarity of two already-tokenized arrays of any
     * element type. The int64 verification paths below use the one-pass
     * native kernel `jaccardHashes` instead — this generic Column form
@@ -674,13 +656,13 @@ object Dedup {
     * one probe pass per pair, |∪| = |a|+|b|−|∩|. Inputs must be
     * element-distinct (array_distinct upstream) — exactly what every
     * caller here produces. */
-  def jaccardHashes(a: Column, b: Column): Column =
+  private[graft] def jaccardHashes(a: Column, b: Column): Column =
     graft.expressions.HashKernelExpressions.jaccardDistinct(a, b)
 
   /** Containment |a∩b| / |b| over distinct shingle-hash arrays (native
     * kernel) — the decontamination metric: a short benchmark item fully
     * embedded in a long document scores 1.0 where Jaccard stays near 0. */
-  def containmentHashes(a: Column, b: Column): Column =
+  private[graft] def containmentHashes(a: Column, b: Column): Column =
     graft.expressions.HashKernelExpressions.containmentDistinct(a, b)
 
   /** Interpreted Column form of containmentHashes — HashKernelSpec oracle. */
@@ -884,34 +866,20 @@ object Dedup {
     *   reduction_ratio = 1 − |candidates| / C(n,2)
     *     (how much of the quadratic pair space the blocker prunes).
     *
-    * Truth comes from jaccardAllPairs — provable recall, so the audit
-    * never grades the blocker against itself (a MinHash-derived "truth"
-    * would hide exactly the pairs the blocker loses). Candidates are the
-    * RAW banding collisions (minhashPairs at minJaccard 0 — before any
+    * `truth0` is the exact pair frame (doc_a, doc_b) from jaccardAllPairs
+    * — provable recall, so the audit never grades the blocker against
+    * itself (a MinHash-derived "truth" would hide exactly the pairs the
+    * blocker loses). The caller owns its materialization: this reads it
+    * twice (n_true + the caught join). Candidates are the RAW banding
+    * collisions (minhashPairs at minJaccard 0 — before any
     * signature-estimate filter, because that filter is part of the
     * blocker being audited). Counts are exact int64; the two ratios are
     * trunc6'd single divisions; n_possible_pairs = n·(n−1) div 2 exact.
     * Groups with zero true pairs emit NULL completeness rather than a
     * fake 1.0. ONE summary row; all totals ride 1-row broadcast
     * crossJoins — zero driver traffic. At scale the all-pairs truth is
-    * the expensive side (that is inherent to a recall audit — candidate
-    * generation is still prefix-bounded, never quadratic); audit a
-    * hash-sampled slice if even that is too dear. */
-  def blockingQuality(docs: DataFrame, id: String, text: String, k: Int,
-                      bands: Int, rowsPerBand: Int, tNum: Int, tDen: Int,
-                      maxBucket: Int = 10000): DataFrame =
-    blockingQualityFrom(
-      jaccardAllPairs(docs, id, text, k, tNum, tDen, maxBucket)
-        .select(col("doc_a"), col("doc_b"))
-        .localCheckpoint(true), // two consumers: n_true and the caught join
-      docs, id, text, k, bands, rowsPerBand)
-
-  /** blockingQuality over a CALLER-SUPPLIED exact-truth pair frame
-    * (doc_a, doc_b — jaccardAllPairs' output, possibly shared/persisted by
-    * the caller): identical audit row, minus recomputing the expensive
-    * all-pairs truth side when another consumer already holds it (guide
-    * §2.4 share-the-work). The caller owns the truth frame's
-    * materialization (this reads it twice: n_true + the caught join). */
+    * the expensive side; blockingQualitySampledFrom audits a hash-sampled
+    * slice instead. */
   def blockingQualityFrom(truth0: DataFrame, docs: DataFrame, id: String,
                           text: String, k: Int, bands: Int,
                           rowsPerBand: Int): DataFrame = {
@@ -941,39 +909,21 @@ object Dedup {
             / col("n_true_pairs").cast("double") * 1000000d) / 1000000d))
   }
 
-  /** blockingQuality over a DETERMINISTIC hash sample — the 100 TB audit
-    * path its docstring promises: the exact all-pairs truth side is
-    * inherent to a recall audit and unrunnable on the full corpus at
-    * scale, so the deployable form grades the blocker on the
-    * md5(id) % sampleMod == 0 slice (the q_doc_sample idiom:
-    * reproducible, partitioning-independent, engine-identical — never
-    * Spark's RNG sample()). Both the truth AND the banding candidates
-    * are computed over the SAME slice, so pairs_completeness remains an
-    * unbiased recall estimate of the banding parameters (a pair is
-    * caught on the slice iff it would be caught on the corpus — both
-    * sides of the audit see identical shingle sets), while
-    * reduction_ratio is the slice's own pruning figure. Same output row
-    * as blockingQuality plus `sample_den` (the kept fraction's
-    * denominator) so a dashboard can annotate the audit's coverage;
-    * sampleMod 1 degenerates to the exact audit. All-pairs cost shrinks
-    * by ~sampleMod², which is the point. */
-  def blockingQualitySampled(docs: DataFrame, id: String, text: String,
-                             k: Int, bands: Int, rowsPerBand: Int,
-                             tNum: Int, tDen: Int, sampleMod: Int,
-                             maxBucket: Int = 10000): DataFrame = {
-    require(sampleMod >= 1, s"sampleMod must be >= 1, got $sampleMod")
-    val slice = docs.filter(
-      pmod(md5Int(col(id).cast("string")), lit(sampleMod.toLong)) === 0L)
-    blockingQuality(slice, id, text, k, bands, rowsPerBand, tNum, tDen,
-        maxBucket)
-      .withColumn("sample_den", lit(sampleMod.toLong))
-  }
-
-  /** blockingQualitySampled over a caller-supplied truth frame (the
-    * jaccardAllPairsSampled output for the SAME sampleMod — the caller's
-    * contract): same audit row; the slice is re-derived here from the
-    * identical md5 filter so the candidate side and n_docs see exactly
-    * the docs the truth side graded. */
+  /** blockingQualityFrom over a DETERMINISTIC hash sample — the audit
+    * that runs at scale: the exact all-pairs truth side is inherent to a
+    * recall audit and unrunnable on the full corpus, so this grades the
+    * blocker on the md5(id) % sampleMod == 0 slice (the q_doc_sample
+    * idiom: reproducible, partitioning-independent, engine-identical —
+    * never Spark's RNG sample()). `truth` must be the
+    * jaccardAllPairsSampled output for the SAME sampleMod (the caller's
+    * contract); the slice is re-derived here from the identical md5
+    * filter, so the candidate side and n_docs see exactly the docs the
+    * truth side graded and pairs_completeness remains an unbiased recall
+    * estimate of the banding parameters, while reduction_ratio is the
+    * slice's own pruning figure. Same output row as blockingQualityFrom
+    * plus `sample_den` (the kept fraction's denominator); sampleMod 1
+    * degenerates to the exact audit. All-pairs cost shrinks by
+    * ~sampleMod². */
   def blockingQualitySampledFrom(truth: DataFrame, docs: DataFrame,
                                  id: String, text: String, k: Int,
                                  bands: Int, rowsPerBand: Int,
@@ -1221,7 +1171,7 @@ object Dedup {
   }
 
   /** jaccardAllPairs over a DETERMINISTIC hash sample — the 100 TB form
-    * of the exact-truth audit (the blockingQualitySampled idiom): the
+    * of the exact-truth audit (the blockingQualitySampledFrom idiom): the
     * AllPairs prefix filter is provably-complete but still super-linear
     * in cluster density, so the deployable corpus-scale estimate runs on
     * the md5(id) % sampleMod == 0 slice, shrinking the candidate volume

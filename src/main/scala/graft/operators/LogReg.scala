@@ -50,7 +50,7 @@ object LogReg {
     * pinned (10⁶ / (1 + exp(−z/10⁶)), NOT σ·10⁶) and mirrored verbatim
     * in the oracle SQL. exp overflow to ±Infinity is IEEE-defined and
     * engine-identical: very negative z → s = 0, very positive → 10⁶. */
-  def sigmoidPpm(zPpm: Column): Column =
+  private def sigmoidPpm(zPpm: Column): Column =
     floor(lit(1000000.0) /
       (lit(1.0) + exp(-zPpm.cast("double") / lit(1000000.0)))).cast("long")
 
@@ -146,12 +146,6 @@ object LogReg {
     spark.createDataFrame(
       spark.sparkContext.parallelize(rows, 1), schema)
   }
-
-  /** One-call convenience: fit then emit the trajectory frame. */
-  def history(df: DataFrame, label: String, features: Seq[String],
-              rounds: Int, lrPpm: Long): DataFrame =
-    historyFrame(df.sparkSession,
-      fit(df, label, features, rounds, lrPpm)._1)
 
   /** Corpus-wide scoring under frozen weights — one map-only pass, no
     * shuffle: score_ppm = quantized σ of the margin, pred at the 0.5

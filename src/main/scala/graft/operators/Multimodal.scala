@@ -28,7 +28,7 @@ object Multimodal {
       md5(concat(text, lit("x"))).substr(lit(1), ((idCol % 3) * 8).cast("int"))))
 
   /** Payload size in bytes (Spark length() on binary = octet count). */
-  def byteLength(bin: Column): Column = length(bin).cast("long")
+  private[graft] def byteLength(bin: Column): Column = length(bin).cast("long")
 
   /** Container-format sniff from the leading byte. On real data the same
     * shape dispatches on true magic numbers (0x89"PNG", 0xFFD8FF JPEG,
@@ -42,7 +42,7 @@ object Multimodal {
 
   /** Big-endian unsigned 16-bit field at `byteOffset` — the primitive for
     * header reads (e.g. PNG width/height live at fixed offsets). */
-  def beUint16(bin: Column, byteOffset: Int): Column =
+  private def beUint16(bin: Column, byteOffset: Int): Column =
     conv(substring(hex(bin), byteOffset * 2 + 1, 4), 16, 10).cast("long")
 
   /** Typed metadata record per payload: size, sniffed format, and
@@ -96,7 +96,7 @@ object Multimodal {
     * ≤ 2¹⁷ exact multiple of 60, so the double division is exact — and
     * DuckDB replays every step on the same hex text (substr/'0x' cast/
     * list_reduce). Payloads of < 2 bytes hash to 0 (no gradient exists). */
-  def dHash(bin: Column): Column = {
+  private[graft] def dHash(bin: Column): Column = {
     val h = upper(hex(bin))
     val nb = length(bin).cast("long")
     def byteAt(p: Column): Column =
@@ -242,54 +242,6 @@ object Multimodal {
       .filter(col("hamming") <= maxHamming)
   }
 
-  /** Cross-corpus image near-dup JOIN — the ingest-gate twin of
-    * imageDupPairs (the lshJaccardJoin shape on the binary column): every
-    * LEFT payload probes its 3 Hamming bands against a bucket INDEX built
-    * from the RIGHT corpus, candidates verified by the exact signature
-    * Hamming. No within-side pairs, no shared state across sides — the
-    * shape a streaming batch-vs-standing-index near-dup gate needs
-    * (call it in foreachBatch with the micro-batch as `left`). The index is
-    * BROADCAST: the right side is the bounded reference corpus (its
-    * buckets fail-loud capped at maxBucket), so each probe batch joins
-    * map-side with zero shuffle of the stream. Emits (left_id, right_id,
-    * hamming), each cross pair once. */
-  def imageDupJoin(left: DataFrame, right: DataFrame, idL: String,
-                   binL: String, idR: String, binR: String,
-                   maxHamming: Int, maxBucket: Int = 10000): DataFrame = {
-    require(maxHamming >= 0 && maxHamming <= 2,
-      s"maxHamming must be in [0,2] (the 3-band pigeonhole recall " +
-        s"guarantee), got $maxHamming")
-    require(maxBucket >= 2, s"maxBucket must be >= 2, got $maxBucket")
-    def banded(df: DataFrame, id: String, bin: String) =
-      df.select(col(id).as("doc"), dHash(col(bin)).as("_sig"))
-        .select(col("doc"), col("_sig"),
-          explode(array((0 until 3).map { b =>
-            concat(lit(s"${b}_"),
-              shiftright(col("_sig"), b * 20).bitwiseAND(lit(1048575L))
-                .cast("string"))
-          }: _*)).as("_bk"))
-    val capGuard = assert_true(size(col("ms")) <= maxBucket,
-      concat(lit("imageDupJoin: index band '"), col("_bk"),
-        lit("' holds "), size(col("ms")).cast("string"),
-        lit(s" docs (> maxBucket=$maxBucket) — every probe hitting it " +
-          "would fan out quadratically. Raise maxBucket deliberately or " +
-          "pre-split the near-constant payloads; dropping the band would " +
-          "lose the pigeonhole recall guarantee, so this operator " +
-          "refuses instead.")))
-    val index = banded(right, idR, binR).groupBy(col("_bk"))
-      .agg(collect_list(struct(col("doc"), col("_sig"))).as("ms"))
-      .filter(capGuard.isNull)
-    banded(left, idL, binL)
-      .select(col("_bk"), col("doc").as("left_id"), col("_sig").as("_ls"))
-      .join(broadcast(index), Seq("_bk"))
-      .select(col("left_id"), col("_ls"), explode(col("ms")).as("r"))
-      .select(col("left_id"), col("r.doc").as("right_id"),
-        bit_count(col("_ls").bitwiseXOR(col("r._sig"))).cast("long")
-          .as("hamming"))
-      .filter(col("hamming") <= maxHamming)
-      .distinct() // pairs sharing several bands count once
-  }
-
   /** 60-bit audio fingerprint over an ORDERED per-payload energy array —
     * the sign-of-energy-difference signature (the Haitsma-Kalker 2002
     * robust-hash idea, reduced to the engine's integer energy frames):
@@ -298,7 +250,7 @@ object Multimodal {
     * clips with the same loudness contour collide even when raw bytes
     * differ. Exact integer comparisons; single-frame payloads fold to 0
     * (no contour to compare). */
-  def energySig(energies: Column): Column = {
+  private[graft] def energySig(energies: Column): Column = {
     val n = size(energies).cast("long")
     def idiv60(x: Column): Column =
       ((x - pmod(x, lit(60L))) / 60L).cast("long")

@@ -21,10 +21,4 @@ object PlanProbe {
     capture.foreach(_(df))
     df.localCheckpoint(true)
   }
-
-  /** Run `body` with `f` installed as the capture (tests only). */
-  private[graft] def withCapture[T](f: DataFrame => Unit)(body: => T): T = {
-    capture = Some(f)
-    try body finally capture = None
-  }
 }

@@ -37,7 +37,7 @@ object Similarity {
 
   def norm(a: Column): Column = sqrt(dot(a, a))
 
-  def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
+  private[graft] def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
 
   /** Fail-loud size contract for a query side about to be BROADCAST: probe
     * at most cap+1 rows (`limit` bounds the scan — the check costs O(cap)
@@ -593,8 +593,8 @@ object Similarity {
     * scalar quantization. One partial-aggregated pass over the scan (2·dims
     * agg expressions); O(dims) doubles reach the driver. min/max are
     * order-insensitive, so the bounds are engine- and partitioning-exact. */
-  def sqBounds(corpus: DataFrame, vec: String,
-               dims: Int): (Seq[Double], Seq[Double]) = {
+  private[graft] def sqBounds(corpus: DataFrame, vec: String,
+                              dims: Int): (Seq[Double], Seq[Double]) = {
     val aggs = (0 until dims).flatMap { i =>
       Seq(min(element_at(col(vec), i + 1).cast("double")).as(s"_mn$i"),
         max(element_at(col(vec), i + 1).cast("double")).as(s"_mx$i"))
@@ -613,7 +613,7 @@ object Similarity {
     * caller-supplied bounds; degenerate dimensions (mx = mn) code as −128.
     * All arithmetic is IEEE double with explicit parenthesization, so every
     * engine produces the identical byte. */
-  def sqEncode(vec: Column, mins: Seq[Double], maxs: Seq[Double]): Column = {
+  private[graft] def sqEncode(vec: Column, mins: Seq[Double], maxs: Seq[Double]): Column = {
     val mn = typedlit(mins); val mx = typedlit(maxs)
     transform(sequence(lit(0), lit(mins.size - 1)), i => {
       val v = element_at(vec, i + 1).cast("double")
@@ -628,7 +628,7 @@ object Similarity {
   /** Dequantized reconstruction: mn + (code + 128) · (span/255) per
     * dimension — the decode side of sqEncode, again parenthesized for
     * engine-identical doubles. */
-  def sqDequant(code: Column, mins: Seq[Double], maxs: Seq[Double]): Column = {
+  private[graft] def sqDequant(code: Column, mins: Seq[Double], maxs: Seq[Double]): Column = {
     val mn = typedlit(mins); val mx = typedlit(maxs)
     transform(sequence(lit(0), lit(mins.size - 1)), i => {
       val lo = element_at(mn, i + 1)
@@ -645,7 +645,7 @@ object Similarity {
     * computed and consumed once, with arithmetic IDENTICAL to the
     * sqEncode/sqDequant pair (same clamp, same TINYINT cast, same factor
     * order), so the oracle and the storage-facing pair stay in sync. */
-  def sqReconstruct(vec: Column, mins: Seq[Double], maxs: Seq[Double]): Column = {
+  private[graft] def sqReconstruct(vec: Column, mins: Seq[Double], maxs: Seq[Double]): Column = {
     val mn = typedlit(mins); val mx = typedlit(maxs)
     transform(sequence(lit(0), lit(mins.size - 1)), i => {
       val v = element_at(vec, i + 1).cast("double")
@@ -768,8 +768,8 @@ object Similarity {
     * centroids in ascending cell-id order (a cell can lose all members).
     * O(m · k · dims/m) doubles to the driver — the codebooks are the
     * point: m bytes per vector replace dims floats downstream. */
-  def pqCodebooks(emb: DataFrame, id: String, vec: String, dims: Int,
-                  m: Int, k: Int, iters: Int): Seq[Seq[Seq[Double]]] = {
+  private[graft] def pqCodebooks(emb: DataFrame, id: String, vec: String,
+                                 dims: Int, m: Int, k: Int, iters: Int): Seq[Seq[Seq[Double]]] = {
     require(m >= 1 && dims % m == 0, s"m=$m must divide dims=$dims")
     val sub = dims / m
     // Round-15 (the dup_clusters_all tagged-union trick applied to

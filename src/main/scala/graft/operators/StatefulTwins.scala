@@ -124,14 +124,4 @@ object StatefulTwins {
         col("_prev_max").isNotNull && ms(col(ts)) < col("_prev_max") - latenessMs)
       .select(df.columns.map(col) :+ col("is_late"): _*)
   }
-
-  /** Event-time windowed count excluding late rows — the E6 pipeline
-    * (chapter4/EventTimeOperations.java:136-149): watermarked 1s tumbling count
-    * where rows older than the watermark are diverted (here: dropped; the late
-    * side output is `withLateFlag(...).filter(col("is_late"))`). */
-  def eventTimeCount(df: DataFrame, ts: String, arrivalCol: String, tiebreak: String,
-                     latenessMs: Long, duration: String): DataFrame =
-    CoreOps.tumblingCount(
-      withLateFlag(df, ts, arrivalCol, tiebreak, latenessMs).filter(!col("is_late")),
-      ts, duration)
 }

@@ -1016,7 +1016,7 @@ object TextOps {
     * merge; the merges ride as a reference object so the generated code
     * is table-independent). Inference cost is linear in the table
     * length per word, independent of corpus size beyond the one
-    * word-count pass. Emits the bpeSegments shape
+    * word-count pass. Emits bpeLearn's segmentation shape
     * (word, freq, n_pieces, pieces). */
   def bpeEncode(docs: DataFrame, text: String, merges: DataFrame,
                 maxWordLen: Int = 32): DataFrame = {
@@ -1041,52 +1041,30 @@ object TextOps {
           .as("syms")))
   }
 
-  /** The learned BPE merge table alone (one training run). */
-  def bpeMerges(docs: DataFrame, text: String, iters: Int,
-                maxWordLen: Int = 32): DataFrame =
-    bpeLearn(docs, text, iters, maxWordLen)._1
-
-  /** Segmentation of the corpus vocabulary under the learned BPE vocab —
-    * the apply half, parity-shaped with wordPieces: one row per distinct
-    * word with its corpus frequency, piece count, and the space-joined
-    * pieces after `iters` merges. A doc-level tokenization is this table
-    * joined back on the word key (vocab-sized — never re-runs the loop
-    * per document). */
-  def bpeSegments(docs: DataFrame, text: String, iters: Int,
-                  maxWordLen: Int = 32): DataFrame =
-    bpeLearn(docs, text, iters, maxWordLen)._2
-
-  /** Tokenizer-lifecycle closure: fertility of the LEARNED BPE vocab on
-    * the corpus it was trained on, per group (the q_fertility gauge with
-    * the external piece formula swapped for the engine's own training
-    * run — "we trained a tokenizer; how many pieces per word does it
-    * cost each language?"). Every corpus word is in the learned
-    * segmentation by construction (same extraction), so the join is
+  /** Tokenizer-lifecycle closure: fertility of a BPE vocab on a corpus,
+    * per group (the q_fertility gauge with the external piece formula
+    * swapped for the engine's own segmentation — "we trained a
+    * tokenizer; how many pieces per word does it cost each language?"),
+    * from a PRECOMPUTED segments frame (bpeLearn's second artifact, or
+    * bpeEncode's / Unigram.segmented's output), so one training loop
+    * feeds merges, apply and fertility without re-running. Every corpus
+    * word must be in the segmentation (same extraction), so the join is
     * total — fail-loud if not (a dropped word would silently understate
-    * fertility). Shape: ONE extra corpus pass for (group, word) counts +
-    * one vocab-sized join onto bpeSegments' output; the loop itself runs
-    * once. Emits (group, n_words, n_pieces, fertility). */
-  def bpeFertility(docs: DataFrame, text: String, group: String, iters: Int,
-                   maxWordLen: Int = 32): DataFrame =
-    bpeFertilityFrom(docs, text, group,
-      bpeSegments(docs, text, iters, maxWordLen), maxWordLen)
-
-  /** bpeFertility over a PRECOMPUTED segments frame (bpeSegments output)
-    * — the shared-run form: one training loop can feed merges, apply,
-    * and fertility without re-running. */
+    * fertility). Shape: ONE corpus pass for (group, word) counts + one
+    * vocab-sized join. Emits (group, n_words, n_pieces, fertility). */
   def bpeFertilityFrom(docs: DataFrame, text: String, group: String,
                        segments: DataFrame,
                        maxWordLen: Int = 32): DataFrame = {
     val emitted = Seq("n_words", "n_pieces", "fertility", "word", "_n", "_g")
     require(!emitted.contains(group),
-      s"bpeFertility emits/uses ${emitted.mkString(", ")}; rename inputs")
+      s"bpeFertilityFrom emits/uses ${emitted.mkString(", ")}; rename inputs")
     val seg = segments.select(col("word"), col("n_pieces"))
     val words = docs.select(col(group).as("_g"),
         explode(filter(split(lower(col(text)), "[^a-z]+"),
           w => w =!= "" && length(w) <= maxWordLen)).as("word"))
       .groupBy(col("_g"), col("word")).agg(count(lit(1)).as("_n"))
     val guard = assert_true(col("n_pieces").isNotNull,
-      concat(lit("bpeFertility: corpus word '"), col("word"),
+      concat(lit("bpeFertilityFrom: corpus word '"), col("word"),
         lit("' missing from the learned segmentation — the extraction " +
           "conventions diverged (an understated fertility would be " +
           "silent, so this operator refuses instead)")))

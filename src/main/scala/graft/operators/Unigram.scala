@@ -65,7 +65,7 @@ object Unigram {
 
   /** Seed inventory: every single char + top-seedK multi-char
     * substrings by (cnt DESC, piece ASC). */
-  def seedVocab(cands: DataFrame, seedK: Int): DataFrame =
+  private[graft] def seedVocab(cands: DataFrame, seedK: Int): DataFrame =
     cands.filter(length(col("piece")) === 1)
       .unionByName(cands.filter(length(col("piece")) >= 2)
         .orderBy(col("cnt").desc, col("piece")).limit(seedK))
@@ -238,8 +238,8 @@ object Unigram {
     (vocab, lls.result())
   }
 
-  /** Segmentation view under a frozen inventory — the bpeSegments shape
-    * (word, freq, n_pieces, pieces as a space-joined string). */
+  /** Segmentation view under a frozen inventory — bpeLearn's segmentation
+    * shape (word, freq, n_pieces, pieces as a space-joined string). */
   def segmented(wordsDf: DataFrame, vocab: DataFrame,
                 maxWordLen: Int, maxPieceLen: Int): DataFrame =
     viterbi(wordsDf, vocab, zOf(vocab), maxWordLen, maxPieceLen)

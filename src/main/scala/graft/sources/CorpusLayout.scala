@@ -77,31 +77,6 @@ object CorpusLayout {
       .reduce(_ + _) // disjoint bit positions: + is OR, and SUM mirrors in SQL
   }
 
-  /** Write `df` as parquet files tiling the z-curve: range-partition on
-    * the z-value of `zDims` (so each file owns a contiguous z-range = a
-    * bounded box in every dimension), sort within files by it (tight
-    * row-group stats), drop the helper column. Point/range predicates on
-    * ANY of the z dimensions then prune most files via parquet footer
-    * min/max — CorpusLayoutSpec measures exactly that. `numFiles` sizes
-    * the tiling; at scale pick data-size/file-band like
-    * writePartitioned's guidance. */
-  def writeZOrdered(df: DataFrame, path: String, zDims: Seq[String],
-                    bits: Int, numFiles: Int,
-                    maxRecordsPerFile: Long = 0L): Unit = {
-    require(numFiles > 0, s"numFiles must be positive, got $numFiles")
-    require(!df.columns.contains("_z"),
-      "writeZOrdered uses '_z' internally; rename the input column")
-    val laid = df.withColumn("_z", zValue(zDims.map(col), bits))
-      .repartitionByRange(numFiles, col("_z"))
-      .sortWithinPartitions(col("_z"))
-      .drop("_z")
-    val writer = laid.write.mode("overwrite")
-    (if (maxRecordsPerFile > 0L)
-       writer.option("maxRecordsPerFile", maxRecordsPerFile)
-     else writer)
-      .parquet(path)
-  }
-
   /** Small-file COMPACTION plan — the operational answer to the classic
     * 100 TB layout failure the writePartitioned scaladoc warns about,
     * after it has already happened: given a file listing (path, bytes),

@@ -28,12 +28,12 @@ object Generators {
   private def q(fields: Seq[Any]): String = fields.map(f => s""""$f"""").mkString(",")
 
   /** One audit record as the quoted-CSV line the reference writes. */
-  def auditRecord(rnd: Random, id: Int, tsMs: Long): String =
+  private def auditRecord(rnd: Random, id: Int, tsMs: Long): String =
     q(Seq(id, users(rnd.nextInt(users.size)), entities(rnd.nextInt(entities.size)),
       operations(rnd.nextInt(operations.size)), tsMs,
       1 + rnd.nextInt(10), 1 + rnd.nextInt(4)))
 
-  def browserRecord(rnd: Random, id: Int, tsMs: Long): String =
+  private def browserRecord(rnd: Random, id: Int, tsMs: Long): String =
     q(Seq(id, users(rnd.nextInt(users.size)), actions(rnd.nextInt(actions.size)), tsMs))
 
   /** n one-record CSV files (audit_trail_<i>.csv), each 1..1000 ms after the
@@ -78,11 +78,11 @@ object Generators {
 
   /** Map a monotonically-increasing row-index column `value` onto the audit
     * record domains — every field an md5-derived function of the index, so
-    * the stream form and the bounded batch twin below produce IDENTICAL
-    * records for the same index range (the property the rate-parity tests
-    * lean on). */
-  def auditColumns(df: org.apache.spark.sql.DataFrame,
-                   baseTsMs: Long): org.apache.spark.sql.DataFrame = {
+    * the stream form below and a bounded `spark.range` batch produce
+    * IDENTICAL records for the same index range (the property the
+    * rate-parity tests lean on). */
+  private[graft] def auditColumns(df: org.apache.spark.sql.DataFrame,
+                                  baseTsMs: Long): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.Column
     import org.apache.spark.sql.functions._
     def pick(domain: Vector[String], h: Column): Column =
@@ -111,10 +111,4 @@ object Generators {
       spark.readStream.format("rate-micro-batch")
         .option("rowsPerBatch", rowsPerBatch).load(),
       baseTsMs)
-
-  /** Bounded batch twin of auditRateStream: the identical records for row
-    * indices [0, n). */
-  def auditBatch(spark: org.apache.spark.sql.SparkSession, n: Int,
-                 baseTsMs: Long = 1700000000000L): org.apache.spark.sql.DataFrame =
-    auditColumns(spark.range(n).toDF("value"), baseTsMs)
 }

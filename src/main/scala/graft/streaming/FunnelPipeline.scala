@@ -30,8 +30,8 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
   * guarded a state value of tens of MB and 10⁵ verifies per arrival —
   * an order of magnitude past where banding has already degenerated.)
   * A corpus with genuinely larger duplicate clusters should raise it
-  * DELIBERATELY via `maxBucketFor` — the machine fails loud naming the
-  * hot bucket, never silently.
+  * DELIBERATELY (4× its largest expected cluster) — the machine fails
+  * loud naming the hot bucket, never silently.
   *
   * `compactEvery` > 0 folds the durable stage store and GCs superseded
   * offsets every that many batches, ONLINE (0 disables — compactStores
@@ -68,7 +68,7 @@ object FunnelConfig {
     * is `maxDupCluster` docs: 4× headroom over the cluster (chance
     * collisions are negligible at mhRows ≥ 2 — see the case-class
     * scaladoc), floored at the machine's own minimum of 2. */
-  def maxBucketFor(maxDupCluster: Int): Int = {
+  private def maxBucketFor(maxDupCluster: Int): Int = {
     require(maxDupCluster >= 1,
       s"maxDupCluster must be >= 1, got $maxDupCluster")
     math.max(2, 4 * maxDupCluster)
@@ -335,8 +335,8 @@ object FunnelPipeline {
     * them — they cannot verify under minJaccard > 0); a bucket past
     * `cfg.maxBucket` fails loudly HERE, before any state is installed.
     * The gram sets seed the doc-keyed store separately (gramSeeds). */
-  def bandSeeds(docs: DataFrame,
-                cfg: FunnelConfig): Dataset[BandBucketSeed] = {
+  private def bandSeeds(docs: DataFrame,
+                        cfg: FunnelConfig): Dataset[BandBucketSeed] = {
     val guard = assert_true(size(col("ids")) <= cfg.maxBucket,
       concat(lit("bandSeeds: bucket '"), col("bucket"),
         lit(s"' holds more than maxBucket=${cfg.maxBucket} members — " +
@@ -595,7 +595,8 @@ object FunnelPipeline {
     * recorded UPTO, so every crash window reads a complete, duplicate-
     * free view, and re-running heals (heal() below rolls an interrupted
     * swap back or forward before starting a new one). */
-  def compactStores(spark: SparkSession, dir: String, upToBid: Long): Unit = {
+  private[graft] def compactStores(spark: SparkSession, dir: String,
+                                   upToBid: Long): Unit = {
     heal(dir)
     // ── offsets GC: ids < upToBid − 1 are never read again ──
     listDeltas(s"$dir/offsets").filter(_ < upToBid - 1)
@@ -744,45 +745,6 @@ object FunnelPipeline {
       .select(col("doc_id"), col("shard"), col("pos"), col("n_tokens"),
         col("pack_first"), col("pack_last"), col("offset_in_pack"))
 
-  /** Decode topic/file VALUE lines `doc_id,lang,text` into the funnel's
-    * input contract — the reference's positional CSV parse
-    * (chapter2/AuditTrail.java:14-30) with text allowed to contain commas
-    * (split at the first two separators only). Lines with fewer than
-    * three fields decode to NULL text and are dropped by the funnel's
-    * not-ingested filter — the same fate the reference's parser hands a
-    * short line; a non-numeric id decodes to NULL doc_id (try_cast —
-    * ANSI's plain cast would kill the stream on one bad record), which
-    * the pipeline's non-nullable key encoder then surfaces loudly rather
-    * than silently re-keying. */
-  def docLines(lines: DataFrame): DataFrame =
-    lines.select(split(col("value"), ",", 3).as("_f"))
-      .select(
-        expr("try_cast(try_element_at(_f, 1) AS LONG)").as("doc_id"),
-        try_element_at(col("_f"), lit(2)).as("lang"),
-        try_element_at(col("_f"), lit(3)).as("text"))
-
-  /** The production funnel over the reference's OTHER ingest shape — a
-    * Kafka topic (chapter3/WindowOperations.java:46-69 consumes; the
-    * funnel is E8's composition over that feed): KafkaIO.source's
-    * value-decoded records parse through `docLines` and start the same
-    * five-gate pipeline. Capability-checked like every Kafka path here
-    * (fails fast without the spark-sql-kafka connector). Delivery
-    * semantics compose safely with the gates: the topic is at-least-once
-    * (SURVEY §7.3's accepted delta), and a redelivered record is an
-    * exact duplicate BY CONSTRUCTION — gate 1's keyed state drops it, so
-    * the export stays exactly-once; only the `ingested` stage row counts
-    * arrivals rather than unique records. */
-  def startFromKafka(spark: SparkSession, kafka: KafkaSourceConfig,
-                     dir: String, bench: DataFrame, vocab: DataFrame,
-                     cfg: FunnelConfig,
-                     trigger: Option[org.apache.spark.sql.streaming.Trigger]
-                       = None): StreamingQuery =
-    start(spark, docLines(KafkaIO.source(spark, kafka)), dir, bench, vocab,
-      cfg, trigger = trigger)
-    // catch-up parity with the file path: pass Trigger.AvailableNow here
-    // and bound each trigger with maxOffsetsPerTrigger in the Kafka
-    // source options (KafkaSourceConfig.extra) — a restart behind a
-    // large topic backlog then drains in bounded batches and stops
 
   /** Drive the funnel from the FILE-MONITOR source over a deterministic
     * id-ascending slicing of a static corpus — the reference's actual

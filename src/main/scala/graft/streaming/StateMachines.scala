@@ -156,22 +156,6 @@ case class TimedHashedDoc(th: String, doc_id: Long, lang: String,
 case class TimedGatedDoc(doc_id: Long, lang: String, text: String,
                          tsMs: Long, is_first: Boolean)
 
-/** bandKeepFirstEventTime's probe row — BandProbe with an event-time
-  * position instead of the funnel payload (join columns back by doc_id). */
-case class TimedBandProbe(bucket: String, doc_id: Long, tsMs: Long,
-                          carrier: Boolean, sh: Array[Long])
-/** bandKeepFirstEventTime's output: one carrier row per doc plus slim
-  * dup rows; per-doc verdict = max(near_dup) grouped by doc_id. */
-case class TimedBandVerdict(doc_id: Long, tsMs: Long, near_dup: Boolean,
-                            carrier: Boolean)
-/** One band bucket's members under an event-time horizon: ids, each
-  * member's event time (the horizon anchor), and its gram set —
-  * parallel arrays. Unlike BandBucketState this stores grams ×bands;
-  * the horizon bounds the window the duplication multiplies (see
-  * bandKeepFirstEventTime's scaladoc). */
-case class TimedBucketState(ids: Array[Long], tss: Array[Long],
-                            shs: Array[Array[Long]])
-
 /** Page-Hinkley walk state per key: event count, value sum, the PH
   * statistic m, and its running minimum. */
 case class PhState(n: Long, s: Long, m: Long, mn: Long)
@@ -449,8 +433,8 @@ object StateMachines {
     * a dup arriving later than the horizon is re-admitted as first — the
     * standard TTL trade, the knob an ENDLESS ingest sets; the funnel
     * itself stays NoTimeout because its oracle contract is exact) and
-    * StreamOps.dedupStream's dropDuplicatesWithinWatermark
-    * (watermark-bounded rather than wall-clock-bounded). Every arrival of
+    * keepFirstEventTime (event-time-bounded rather than
+    * wall-clock-bounded). Every arrival of
     * a fingerprint re-arms its TTL — an actively-duplicated key stays
     * remembered; only true idleness forgets. */
   def keepFirst(docs: Dataset[HashedDoc],
@@ -779,12 +763,6 @@ object StateMachines {
     Encoders.product[TimedHashedDoc]
   implicit val timedGatedDocEnc: Encoder[TimedGatedDoc] =
     Encoders.product[TimedGatedDoc]
-  implicit val timedBandProbeEnc: Encoder[TimedBandProbe] =
-    Encoders.product[TimedBandProbe]
-  implicit val timedBandVerdictEnc: Encoder[TimedBandVerdict] =
-    Encoders.product[TimedBandVerdict]
-  private implicit val timedBucketStateEnc: Encoder[TimedBucketState] =
-    Encoders.product[TimedBucketState]
 
   /** Exact dedup bounded by an EVENT-TIME horizon — the
     * replay-deterministic form of keepFirst's `stateTtlMs`. The
@@ -851,115 +829,6 @@ object StateMachines {
     if (wm != Long.MinValue)
       state.setTimeoutTimestamp(math.max(targetMs, wm + 1))
   }
-
-  /** Near-dup keep-first bounded by an EVENT-TIME horizon —
-    * keepFirstEventTime's twin for the band gate, as ONE bucket-keyed
-    * machine (not bandKeepFirst's two-machine split): a second
-    * watermark-anchored stateful stage downstream of the first trips
-    * Spark's global-watermark correctness check — under delay > 0 the
-    * bucket stage can emit a row the gram stage's later watermark would
-    * discard as late — so the horizon variant stores each member's gram
-    * set in its buckets directly. That re-pays the ×bands gram
-    * duplication the unbounded bandKeepFirst eliminated, but here the
-    * duplication multiplies a HORIZON-BOUNDED window (expired members
-    * prune), not the corpus, and verification regains the first-hit
-    * short-circuit the split had to give up.
-    *
-    * The horizon is decided IN THE WALK (replay-deterministic, the
-    * keepFirstEventTime contract): a stored member is a candidate for an
-    * arriving doc iff its id is lower AND the two event times lie within
-    * `horizonMs` of each other (|Δts| — the lower-id member may carry
-    * the later timestamp under out-of-order arrival). Members the
-    * watermark has passed (ts + horizon + delay) prune lazily when their
-    * bucket is next touched — by the keepFirstEventTime GC argument no
-    * future arrival can pair with them, so pruning cannot change a
-    * verdict; idle buckets drop whole by their GC timer. Payload is
-    * (doc_id, tsMs) only — a horizon deployment joins its columns back
-    * by doc_id; the un-bounded funnel path keeps the payload-carrying
-    * bandKeepFirst. */
-  def bandKeepFirstEventTime(probes: Dataset[TimedBandProbe],
-                             minJaccard: Double, maxBucket: Int,
-                             horizonMs: Long, delayMs: Long)
-      : Dataset[TimedBandVerdict] = {
-    require(minJaccard > 0,
-      s"bandKeepFirstEventTime needs minJaccard > 0; got $minJaccard")
-    require(maxBucket >= 2, s"maxBucket must be >= 2, got $maxBucket")
-    require(horizonMs > 0, s"horizonMs must be > 0, got $horizonMs")
-    require(delayMs >= 0, s"delayMs must be >= 0, got $delayMs")
-    probes.toDF()
-      .withColumn("_ets", timestamp_millis(col("tsMs")))
-      .withWatermark("_ets", s"$delayMs milliseconds")
-      .as[TimedBandProbe]
-      .groupByKey(_.bucket).flatMapGroupsWithState(
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
-        timedBucketWalk(minJaccard, maxBucket, horizonMs, delayMs))
-  }
-
-  private def timedBucketWalk(minJaccard: Double, maxBucket: Int,
-                              horizonMs: Long, delayMs: Long)
-      : (String, Iterator[TimedBandProbe], GroupState[TimedBucketState]) =>
-        Iterator[TimedBandVerdict] =
-    (bucket: String, it: Iterator[TimedBandProbe],
-     state: GroupState[TimedBucketState]) =>
-      if (state.hasTimedOut) { state.remove(); Iterator.empty[TimedBandVerdict] }
-      else {
-        val rows = it.toArray.sortBy(r => (r.doc_id, r.tsMs))
-        val st = state.getOption.getOrElse(
-          TimedBucketState(Array.emptyLongArray, Array.emptyLongArray,
-            Array.empty))
-        // lazy prune: members no future arrival can pair with (watermark
-        // already past ts + horizon + delay) go now
-        val wm = watermarkOrMin(state)
-        val keep = st.ids.indices.filter(i =>
-          wm == Long.MinValue || st.tss(i) + horizonMs + delayMs >= wm)
-        val pruned = keep.length != st.ids.length
-        val ids = ArrayBuffer.empty[Long]
-        val tss = ArrayBuffer.empty[Long]
-        val shs = ArrayBuffer.empty[
-          org.apache.spark.sql.catalyst.util.GenericArrayData]
-        keep.foreach { i =>
-          ids += st.ids(i); tss += st.tss(i)
-          shs += new org.apache.spark.sql.catalyst.util.GenericArrayData(
-            st.shs(i))
-        }
-        var stored = false
-        val out = ArrayBuffer.empty[TimedBandVerdict]
-        rows.foreach { r =>
-          var dup = false
-          if (r.sh.nonEmpty) {
-            val rsh =
-              new org.apache.spark.sql.catalyst.util.GenericArrayData(r.sh)
-            var i = 0
-            while (!dup && i < ids.length) {
-              if (ids(i) < r.doc_id &&
-                  math.abs(r.tsMs - tss(i)) <= horizonMs &&
-                  graft.expressions.HashKernels.jaccardDistinct(
-                    shs(i), rsh) >= minJaccard) dup = true
-              i += 1
-            }
-            ids += r.doc_id; tss += r.tsMs; shs += rsh
-            stored = true
-          }
-          if (r.carrier)
-            out += TimedBandVerdict(r.doc_id, r.tsMs, near_dup = dup,
-              carrier = true)
-          else if (dup)
-            out += TimedBandVerdict(r.doc_id, r.tsMs, near_dup = true,
-              carrier = false)
-        }
-        if (ids.length > maxBucket) throw new IllegalStateException(
-          s"band bucket '$bucket' holds ${ids.length} members (> " +
-            s"maxBucket=$maxBucket) — re-band or raise maxBucket " +
-            "deliberately.")
-        if (ids.isEmpty) { if (state.exists) state.remove() }
-        else {
-          if (stored || pruned)
-            state.update(TimedBucketState(ids.toArray, tss.toArray,
-              shs.map(_.toLongArray()).toArray))
-          armEventGc(state, tss.max + horizonMs + delayMs + 1)
-        }
-        out.iterator
-      }
 
   /** Streaming form of CoreOps.transitionMatrix's pair extraction: per key,
     * remember the last event's kind in state; each new event emits the

@@ -32,7 +32,8 @@ object StreamObs {
       rows_dropped_by_watermark: Long, watermark: Option[String])
 
   /** Flatten one query's retained progress under a caller-chosen name. */
-  def progressRows(name: String, q: StreamingQuery): Seq[ProgressRow] =
+  private def progressRows(name: String,
+                           q: StreamingQuery): Seq[ProgressRow] =
     q.recentProgress.toSeq.map { p =>
       ProgressRow(
         query_name = name,

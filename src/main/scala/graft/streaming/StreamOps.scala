@@ -45,19 +45,6 @@ object StreamOps {
                      gap: String): DataFrame =
     CoreOps.sessionSummary(df.withWatermark(ts, lateness), key, ts, gap)
 
-  /** Streaming exact dedup — the continuous twin of Dedup.exactDedup's
-    * fingerprint groupBy: emits the FIRST occurrence of each key, drops
-    * later duplicates. dropDuplicatesWithinWatermark expires a key's state
-    * once the watermark passes its event time, so state stays bounded by the
-    * lateness horizon — the property that matters on an unbounded 100 TB
-    * stream, where plain dropDuplicates would grow state forever. The trade:
-    * a duplicate arriving after its key's state expired is re-emitted
-    * (exact-once dedup within the horizon, at-least-once beyond it); a
-    * downstream batch Dedup.exactDedup pass compacts those if needed. */
-  def dedupStream(df: DataFrame, keys: Seq[String], ts: String,
-                  lateness: String): DataFrame =
-    df.withWatermark(ts, lateness).dropDuplicatesWithinWatermark(keys)
-
   /** E5: windowed stream-stream equi-join (chapter3/WindowJoin.java:119-158).
     * Within a (key, window) bucket the output is the cartesian of matches —
     * identical to the batch twin (CoreOps.windowJoin). Both sides carry a
@@ -75,30 +62,10 @@ object StreamOps {
       left.withWatermark(ts, lateness),
       right.withWatermark(ts, lateness), key, ts, duration, leftProj, rightProj)
 
-  /** Continuous windowed distinct-key estimate — the streaming form of
-    * q_window_users: per event-time window, an event count and an HLL++
-    * distinct estimate under a watermark. The sketch is the point at
-    * scale: exact count_distinct keeps the full key set per OPEN window in
-    * the state store, while approx_count_distinct keeps one fixed-size
-    * sketch per window regardless of key cardinality — the same
-    * fixed-state argument as the CMS aggregate. Append mode emits each
-    * window once, when the watermark closes it. At small per-window
-    * cardinalities HLL++'s sparse mode is exact, which is what the parity
-    * test pins against the batch distinct. */
-  def windowedUsersApprox(df: DataFrame, key: String, ts: String,
-                          lateness: String, duration: String,
-                          rsd: Double = 0.05): DataFrame =
-    df.withWatermark(ts, lateness)
-      .groupBy(window(col(ts), duration))
-      .agg(count(lit(1)).as("n_events"),
-        approx_count_distinct(col(key), rsd).as("n_keys_approx"))
-      .select(CoreOps.ms(col("window.start")).as("window_start_ms"),
-        col("n_events"), col("n_keys_approx"))
-
   /** Continuous windowed heavy hitters — CoreOps.heavyHittersCms composed
     * per event-time window under a watermark: ONE Count-Min table (d·w
-    * longs) of state per open window regardless of key cardinality — the
-    * same fixed-state argument as windowedUsersApprox — probed for a
+    * longs) of state per open window regardless of key cardinality, where
+    * an exact count keeps every key of every open window — probed for a
     * bounded `candidates` list as the window closes. Candidates are an
     * explicit argument for exactly the reason the batch operator grew its
     * external-candidates overload: deriving them per window with a
@@ -131,10 +98,10 @@ object StreamOps {
         col("_hh._est").as("est_count"))
   }
 
-  /** Continuous windowed quantile profile — the streaming form of
-    * CoreOps.quantileProfileApprox per event-time window: per window, an
+  /** Continuous windowed quantile profile — the sketch form of
+    * CoreOps.quantileProfile per event-time window: per window, an
     * event count plus approx_percentile sketch estimates at `ps`. The
-    * sketch is the point at scale (the windowedUsersApprox argument): an
+    * sketch is the point at scale: an
     * exact per-window percentile would buffer every value of every OPEN
     * window in the state store, while the KLL-style sketch keeps one
     * fixed-size buffer per window regardless of row count, merging
@@ -143,8 +110,7 @@ object StreamOps {
     * target — the bound quantileProfileChecked machine-checks on the
     * batch twin, and StreamingParitySpec pins finalized windows against
     * the identical batch sketch). Append mode emits each window once on
-    * watermark close. Column naming mirrors quantileProfileApprox
-    * (`p50_approx`, ...). */
+    * watermark close. Columns are named `p50_approx`, .... */
   def windowedQuantileProfile(df: DataFrame, value: String, ts: String,
                               lateness: String, duration: String,
                               ps: Seq[Double],
@@ -457,171 +423,4 @@ object StreamOps {
       write(graft.operators.LogReg.scoreUnlabeled(batch, features, weights,
         keep), batchId)
     }
-
-  /** The COMPOSED five-gate ingest pipeline — the reference's E8 move
-    * ("compose the whole chapter into one program",
-    * chapter6_exercise/AnalyzeBrowserEvents.java:28) applied to the
-    * curation tier: ONE foreachBatch chains exact-dedup keep-first →
-    * near-dup keep-first → benchmark decontamination → the trained score
-    * gate → the perplexity gate over a doc_id-ascending MemoryStream
-    * replay of the corpus, and the per-stage survivor/token masses
-    * accumulate across micro-batches into exactly q_curation_funnel's
-    * six-row data card — checked against the SAME DuckDB oracle, so the
-    * composition is proven, not assumed.
-    *
-    * Frozen-artifact discipline: the classifier's ppm weights, the
-    * unigram inventory + its normalizer, and the per-language perplexity
-    * boundary (cutNppByLang: lang → (npp, doc_id) of the LAST head/middle
-    * doc) arrive as parameters — the way a production gate ships
-    * calibration-corpus artifacts. Boundary membership IS tercile
-    * membership: the kept docs are a prefix of each language's total
-    * (npp, doc_id) order, so one lexicographic comparison per row
-    * reproduces the batch ntile split exactly.
-    *
-    * Cross-batch state is the accumulated raw corpus (doc_id, text),
-    * localCheckpointed once per trigger: the exact gate recomputes
-    * canonical ids over it (keep-first ≡ min-id canonical under the
-    * ascending replay) and the near-dup gate LSH-probes it (band
-    * collision is a deterministic function of each pair's texts, so the
-    * verified pair set equals the batch all-pairs run's). Gates 3–5 are
-    * per-row against static artifacts. Driver traffic: ONE 1-row agg per
-    * trigger (the rules compose as flags over one checkpointed frame, so
-    * all six stage counts fold in a single aggregate) plus the replay
-    * itself (this is a HARNESS for proving the composition at test scale
-    * — production ingest reads files/Kafka, not a driver-collected
-    * replay). */
-  def curationFunnelStream(spark: org.apache.spark.sql.SparkSession,
-      docs: DataFrame, bench: DataFrame, weights: Array[Long],
-      vocab: DataFrame, zQ: Long, cutNppByLang: Map[String, (Long, Long)],
-      mhK: Int, mhBands: Int, mhRows: Int, minJaccard: Double,
-      winnowW: Int, minContainment: Double, tokCap: Long,
-      uniW: Int, uniL: Int, numBatches: Int): DataFrame = {
-    require(numBatches >= 1, s"need numBatches >= 1, got $numBatches")
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    import graft.operators.{Dedup, LogReg, TextOps, Unigram}
-    // fail-loud replay cap: this harness collects the corpus to the driver
-    // and recomputes the dedup gates over ALL accumulated docs per trigger
-    // (O(n²) total) — correct only at parity-test scale. An accidental
-    // large-sf invocation must error, not OOM the driver; the production
-    // ingest form is FunnelPipeline (state-store gate 1, standing band
-    // index, per-batch stores).
-    val nCorpus = docs.count()
-    require(nCorpus <= 100000L,
-      s"curationFunnelStream is the TEST-SCALE parity harness (driver " +
-        s"replay + per-trigger full-corpus dedup); got $nCorpus docs > " +
-        "100000 — run FunnelPipeline for production-scale ingest")
-    // driver-bounded: require(nCorpus <= 100000) above caps this collect
-    val replay = docs
-      .select(col("doc_id").cast("long"), col("lang"), col("text"))
-      .orderBy(col("doc_id"))
-      .as[(Long, String, String)].collect()
-    val groups: Seq[Seq[(Long, String, String)]] =
-      if (replay.isEmpty) Seq(Seq.empty)
-      else replay.grouped(math.max(1, math.ceil(
-        replay.length.toDouble / numBatches).toInt)).map(_.toSeq).toSeq
-    val stages = Seq("ingested", "exact_dedup", "near_dedup",
-      "decontaminated", "quality_kept", "ppl_head")
-    val nDocs = Array.fill(stages.size)(0L)
-    val nToks = Array.fill(stages.size)(0L)
-    val cuts = cutNppByLang.toSeq.map { case (l, (n, d)) => (l, n, d) }
-      .toDF("lang", "_cut_npp", "_cut_id")
-    var seen = Seq.empty[(Long, String)].toDF("doc_id", "text")
-    val benchS = bench.localCheckpoint(true) // static across triggers
-    val input = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[(Long, String, String)]
-    // each trigger computes the five rules as INDEPENDENT keep/drop sets
-    // over the ingested slice and composes them as flags — stage k is the
-    // intersection of rules 1..k (exactly the batch funnel's semi/anti
-    // chain), so all six stage counts come from ONE aggregate per trigger
-    // instead of six chained frames with six collects
-    val q = input.toDF().toDF("doc_id", "lang", "text")
-      .writeStream.outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val b = batch.localCheckpoint(true)
-        val all = seen.unionByName(b.select(col("doc_id"), col("text")))
-          .localCheckpoint(true) // the cross-batch corpus state
-        val s0 = b.filter(col("text").isNotNull)
-          .withColumn("_nt",
-            size(TextOps.tokens(lower(col("text")))).cast("long"))
-          .filter(col("_nt") > 0L)
-          .localCheckpoint(true)
-        val canon = Dedup.exactDedup(all, "doc_id", "text")
-          .select(col("canonical_id").as("doc_id"))
-          .withColumn("_k1", lit(true))
-        val nearDrop = Dedup.lshJaccardJoin(s0, all, "doc_id", "text",
-            "doc_id", "text", mhK, mhBands, mhRows, minJaccard)
-          .filter(col("right_id") < col("left_id"))
-          .select(col("left_id").as("doc_id")).distinct()
-          .withColumn("_d2", lit(true))
-        val cont = Dedup.contaminationPairs(s0, benchS, "doc_id", "text",
-            mhK, winnowW, minContainment)
-          .filter(col("doc_id") =!= col("bench_id"))
-          .select(col("doc_id")).distinct()
-          .withColumn("_d3", lit(true))
-        val feats = s0
-          .withColumn("_toks", TextOps.tokens(lower(col("text"))))
-          .withColumn("_ntk", size(col("_toks")).cast("long"))
-          .withColumn("_ndk", size(array_distinct(col("_toks"))).cast("long"))
-          .withColumn("x_len", least(col("_ntk"), lit(tokCap)))
-          .withColumn("x_div", expr("(_ndk * 100) div _ntk"))
-        val scored = LogReg.scoreUnlabeled(feats, Seq("x_len", "x_div"),
-            weights, Seq("doc_id"))
-          .filter(col("pred")).select(col("doc_id"))
-          .withColumn("_k4", lit(true))
-        val flagged = s0
-          .join(canon, Seq("doc_id"), "left")
-          .join(nearDrop, Seq("doc_id"), "left")
-          .join(cont, Seq("doc_id"), "left")
-          .join(scored, Seq("doc_id"), "left")
-          .withColumn("_s1", coalesce(col("_k1"), lit(false)))
-          .withColumn("_s2", col("_s1") && col("_d2").isNull)
-          .withColumn("_s3", col("_s2") && col("_d3").isNull)
-          .withColumn("_s4", col("_s3") && coalesce(col("_k4"), lit(false)))
-          .localCheckpoint(true) // feeds the ppl candidates AND the agg
-        // the expensive gate (batch-vocab Viterbi) runs only on the docs
-        // still alive after gates 1-4 — identical membership, less DP
-        val cand = flagged.filter(col("_s4"))
-          .select(col("doc_id"), col("lang"), col("text"))
-        val seg = Unigram.viterbi(Unigram.words(cand, "text", uniW), vocab,
-            zQ, uniW, uniL)
-          .select(col("word"), col("n_pieces"), col("best_qll"))
-        val pplKeep = cand.select(col("doc_id"), col("lang"),
-            explode(filter(split(lower(col("text")), "[^a-z]+"),
-              w => w =!= "" && length(w) <= uniW)).as("word"))
-          .groupBy(col("doc_id"), col("lang"), col("word"))
-          .agg(count(lit(1)).as("_n"))
-          .join(seg, Seq("word"))
-          .groupBy(col("doc_id"), col("lang"))
-          .agg(expr("(-sum(_n * best_qll)) div sum(_n * n_pieces)")
-            .as("_npp"))
-          .join(broadcast(cuts), Seq("lang"), "left")
-          .filter(col("_cut_npp").isNotNull &&
-            (col("_npp") < col("_cut_npp") ||
-              (col("_npp") === col("_cut_npp") &&
-                col("doc_id") <= col("_cut_id"))))
-          .select(col("doc_id")).withColumn("_k5", lit(true))
-        def cnt(flag: org.apache.spark.sql.Column) =
-          (count(when(flag, lit(1))), sum(when(flag, col("_nt"))))
-        val aggs = Seq(lit(true), col("_s1"), col("_s2"), col("_s3"),
-          col("_s4"), col("_s4") && coalesce(col("_k5"), lit(false)))
-          .flatMap { f => val (c, t) = cnt(f); Seq(c, t) }
-        val r = flagged.join(pplKeep, Seq("doc_id"), "left")
-          .agg(aggs.head, aggs.tail: _*).head()
-        stages.indices.foreach { i =>
-          nDocs(i) += r.getLong(2 * i)
-          if (!r.isNullAt(2 * i + 1)) nToks(i) += r.getLong(2 * i + 1)
-        }
-        seen = all
-      }
-      .start()
-    try {
-      groups.foreach { g => input.addData(g); q.processAllAvailable() }
-    } finally q.stop()
-    stages.zipWithIndex.map { case (name, i) =>
-      // an empty stage's token mass is NULL (SQL sum-over-nothing), not 0
-      (i.toLong, name, nDocs(i),
-        if (nDocs(i) == 0L) None else Some(nToks(i)))
-    }.toDF("stage_idx", "stage", "n_docs", "n_tokens")
-  }
 }

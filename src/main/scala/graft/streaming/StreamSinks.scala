@@ -36,10 +36,6 @@ object StreamSinks {
         finally { cached.unpersist(); () }
     }.start()
 
-  /** In-memory sink for tests and interactive inspection. */
-  def memory(df: DataFrame, name: String, mode: String = "append"): StreamingQuery =
-    df.writeStream.outputMode(mode).format("memory").queryName(name).start()
-
   /** Side-effecting record-count observer ≙ the reference's pretty-printing
     * map stages (common/MapCountPrinter.java:26-32 and friends). Spark-native
     * form: `observe` attaches a named aggregate evaluated per micro-batch and

@@ -76,9 +76,6 @@ object syntax {
       CoreOps.rankNormalize(df, group, value, out)
     def robustOutliers(group: String, value: String, cutoff: Double): DataFrame =
       CoreOps.robustOutliers(df, group, value, cutoff)
-    def robustOutliersApprox(group: String, value: String, cutoff: Double,
-                             accuracy: Int = 10000): DataFrame =
-      CoreOps.robustOutliersApprox(df, group, value, cutoff, accuracy)
     def robustOutliersChecked(group: String, value: String,
                               accuracy: Int = 10000): DataFrame =
       CoreOps.robustOutliersChecked(df, group, value, accuracy)
@@ -118,9 +115,6 @@ object syntax {
       Dedup.exactDedup(df, id, text)
     def dedupProfile(text: String, dims: Seq[String]): DataFrame =
       Dedup.dedupProfile(df, text, dims)
-    def dedupProfileApprox(text: String, dims: Seq[String],
-                           rsd: Double = 0.05): DataFrame =
-      Dedup.dedupProfileApprox(df, text, dims, rsd)
     def dedupProfileChecked(text: String, dims: Seq[String], rsd: Double = 0.05,
                             tol: Double = 0.15): DataFrame =
       Dedup.dedupProfileChecked(df, text, dims, rsd, tol)
@@ -180,11 +174,6 @@ object syntax {
     def batchByLength(id: String, tokensCol: String, boundaries: Seq[Long],
                       batchSize: Int): DataFrame =
       Curation.batchByLength(df, id, tokensCol, boundaries, batchSize)
-    def orderedPrefixSumKeyed(key: Column, ord: Column, tiebreak: String,
-                              value: String, out: String,
-                              nullsLast: Boolean = false): DataFrame =
-      CoreOps.orderedPrefixSumKeyed(df, key, ord, tiebreak, value, out,
-        nullsLast)
     def orderedPrefixSumsKeyed(key: Column, ord: Column, tiebreak: String,
                                sums: Seq[(String, String)],
                                nullsLast: Boolean = false): DataFrame =
@@ -243,10 +232,6 @@ object syntax {
     def kfoldAssign(id: String, k: Int, out: String = "fold",
                     salt: String = ""): DataFrame =
       Sampling.kfoldAssign(df, id, k, out, salt)
-    def writeZOrdered(path: String, zDims: Seq[String], bits: Int,
-                      numFiles: Int, maxRecordsPerFile: Long = 0L): Unit =
-      graft.sources.CorpusLayout.writeZOrdered(df, path, zDims, bits,
-        numFiles, maxRecordsPerFile)
     def languageId(id: String, text: String,
                    profiles: Map[String, Seq[String]]): DataFrame =
       TextOps.languageId(df, id, text, profiles)
@@ -476,12 +461,6 @@ object syntax {
     def brierScore(score: String, outcome: Column, lo: Long,
                    hi: Long): DataFrame =
       Eval.brierScore(df, score, outcome, lo, hi)
-    def blockingQualitySampled(id: String, text: String, k: Int, bands: Int,
-                               rowsPerBand: Int, tNum: Int, tDen: Int,
-                               sampleMod: Int,
-                               maxBucket: Int = 10000): DataFrame =
-      Dedup.blockingQualitySampled(df, id, text, k, bands, rowsPerBand,
-        tNum, tDen, sampleMod, maxBucket)
     def imageDupPairs(id: String, bin: String, maxHamming: Int,
                       maxBucket: Int = 10000): DataFrame =
       Multimodal.imageDupPairs(df, id, bin, maxHamming, maxBucket)
@@ -583,9 +562,6 @@ object syntax {
     def bpeEncode(text: String, merges: DataFrame,
                   maxWordLen: Int = 32): DataFrame =
       TextOps.bpeEncode(df, text, merges, maxWordLen)
-    def bpeFertility(text: String, group: String, iters: Int,
-                     maxWordLen: Int = 32): DataFrame =
-      TextOps.bpeFertility(df, text, group, iters, maxWordLen)
     def dupSpans(id: String, text: String, k: Int,
                  minOccurrences: Int = 2): DataFrame =
       Dedup.dupSpans(df, id, text, k, minOccurrences)
@@ -629,11 +605,6 @@ object syntax {
     def audioDupPairs(id: String, maxHamming: Int,
                       maxBucket: Int = 10000): DataFrame =
       Multimodal.audioDupPairs(df, id, maxHamming, maxBucket)
-    def imageDupJoin(right: DataFrame, idL: String, binL: String,
-                     idR: String, binR: String, maxHamming: Int,
-                     maxBucket: Int = 10000): DataFrame =
-      Multimodal.imageDupJoin(df, right, idL, binL, idR, binR, maxHamming,
-        maxBucket)
 
     // ── round-10 fourth..ninth waves ─────────────────────────────────────
     def kmvDistinct(group: String, text: String, k: Int): DataFrame =
@@ -724,9 +695,6 @@ object syntax {
     def logregFit(label: String, features: Seq[String], rounds: Int,
                   lrPpm: Long): (Seq[Array[Long]], Array[Long]) =
       LogReg.fit(df, label, features, rounds, lrPpm)
-    def logregHistory(label: String, features: Seq[String], rounds: Int,
-                      lrPpm: Long): DataFrame =
-      LogReg.history(df, label, features, rounds, lrPpm)
     def logregScore(label: String, features: Seq[String],
                     weights: Array[Long], keep: Seq[String]): DataFrame =
       LogReg.score(df, label, features, weights, keep)

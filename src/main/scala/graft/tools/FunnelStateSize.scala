@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.streaming.{FunnelConfig, FunnelPipeline}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
 
@@ -21,14 +20,8 @@ import java.nio.file.{Files, Paths}
 object FunnelStateSize {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Session.local(8)
     import spark.implicits._
-    spark.sparkContext.setLogLevel("ERROR")
     val docs = graft.Tables.documents(spark, sfDir)
       .select(col("doc_id").cast("long").as("doc_id"), col("lang"),
         col("text"))

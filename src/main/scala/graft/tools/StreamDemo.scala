@@ -2,7 +2,6 @@ package graft.tools
 
 import graft.sources.ReferenceData
 import graft.streaming.{StateMachines, StreamOps, StreamSinks}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
@@ -15,13 +14,7 @@ object StreamDemo {
   def main(args: Array[String]): Unit = {
     val srcDir = if (args.nonEmpty) args(0)
       else "src/test/resources/fixtures/raw_browser_events"
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local(4)
 
     val watched = Files.createTempDirectory("graft_stream_demo")
     val stream = ReferenceData.browserFileStream(spark, watched.toString, 1)

@@ -183,24 +183,6 @@ class CoreOpsSpec extends SparkSpec {
       5L -> false, 6L -> false))
   }
 
-  test("robustOutliersApprox matches the exact form when sizes are odd " +
-      "(element == interpolation), flags the same outlier") {
-    // odd group size AND odd deviation count: every exact median is an
-    // actual element, so the sketch (which returns elements) agrees exactly
-    val df = ev((1, 0, 1, "a", 1.0), (2, 0, 1, "a", 2.0), (3, 0, 1, "a", 3.0),
-      (4, 0, 1, "a", 4.0), (5, 0, 1, "a", 100.0)) // med=3, MAD=1, z(100)=65.4…
-    val exact = CoreOps.robustOutliers(df, "event_type", "value", 3.5)
-      .select("event_id", "robust_z", "is_outlier")
-      .as[(Long, Option[Double], Boolean)].collect()
-      .map(r => r._1 -> ((r._2, r._3))).toMap
-    val approx = CoreOps.robustOutliersApprox(df, "event_type", "value", 3.5)
-      .select("event_id", "robust_z", "is_outlier")
-      .as[(Long, Option[Double], Boolean)].collect()
-      .map(r => r._1 -> ((r._2, r._3))).toMap
-    assert(approx == exact)
-    assert(approx(5L)._2 === true)
-  }
-
   test("robustOutliersChecked: verdict uniformly true, exact side matches " +
       "a brute-force median/MAD, NULL-value groups survive") {
     val df = ev((1, 0, 1, "a", 1.0), (2, 0, 1, "a", 2.0), (3, 0, 1, "a", 3.0),
@@ -271,23 +253,6 @@ class CoreOpsSpec extends SparkSpec {
     val salted = res(CoreOps.runningSumSalted(df, "user_id", "ts", "event_id", "value", "run", 3))
     assert(plain == salted, s"plain=$plain salted=$salted")
     assert(plain(1L).isEmpty && plain(3L).contains(5.0) && plain(6L).isEmpty)
-  }
-
-  test("quantileProfileApprox stays within the sketch's rank-error bound") {
-    val events = Tables.events(spark, "/root/testdata/sf0.001")
-    // exact values at p ± 2% bracket the sketch estimate when the rank error
-    // n/accuracy (~60/10000) is far below 2%
-    val lo = CoreOps.quantileProfile(events, "event_type", "value", Seq(0.48, 0.93))
-      .as[(String, Long, Double, Double)].collect().map(r => r._1 -> (r._3, r._4)).toMap
-    val hi = CoreOps.quantileProfile(events, "event_type", "value", Seq(0.52, 0.97))
-      .as[(String, Long, Double, Double)].collect().map(r => r._1 -> (r._3, r._4)).toMap
-    val approx = CoreOps.quantileProfileApprox(events, "event_type", "value", Seq(0.5, 0.95))
-      .as[(String, Long, Double, Double)].collect()
-    assert(approx.nonEmpty)
-    approx.foreach { case (g, _, p50a, p95a) =>
-      assert(p50a >= lo(g)._1 && p50a <= hi(g)._1, s"$g p50 $p50a not in bracket")
-      assert(p95a >= lo(g)._2 && p95a <= hi(g)._2, s"$g p95 $p95a not in bracket")
-    }
   }
 
   test("quantileProfile interpolates at rank (n-1)·p like the SQL oracle") {
@@ -1474,16 +1439,12 @@ class CoreOpsSpec extends SparkSpec {
         "s", col("y"), 0L, 100L, 10))
   }
 
-  test("quantileNormalizeApprox emits actual global values; the checked " +
-      "twin's rank-space verdict holds on every row") {
+  test("quantileNormalizeChecked: the sketch's rank-space verdict holds on " +
+      "every row, the exact side equals quantileNormalize, and a " +
+      "non-integral value fails loud") {
     val df = (1L to 100L)
       .map(i => (if (i % 2 == 0) "a" else "b", i, i))
       .toDF("g", "tb", "v")
-    val approx = CoreOps.quantileNormalizeApprox(df, "g", "v", "tb")
-      .as[(String, Long, Long, Long)].collect()
-    assert(approx.length == 100)
-    val vals = (1L to 100L).toSet
-    assert(approx.forall(r => vals.contains(r._4))) // sketch returns data
     val checked = CoreOps.quantileNormalizeChecked(df, "g", "v", "tb")
     assert(checked.count() == 100L)
     assert(checked.filter(!col("within_bound")).count() == 0L)
@@ -1493,7 +1454,7 @@ class CoreOpsSpec extends SparkSpec {
     assert(checked.select("g", "tb", "v", "qn_value")
       .as[(String, Long, Long, Long)].collect().toSet == exact)
     assertThrows[IllegalArgumentException](
-      CoreOps.quantileNormalizeApprox(
+      CoreOps.quantileNormalizeChecked(
         df.withColumn("v", col("v").cast("double")), "g", "v", "tb"))
   }
 

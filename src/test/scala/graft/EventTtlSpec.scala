@@ -93,47 +93,6 @@ class EventTtlSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  // near-dups inside the horizon drop; the same pair stretched past it
-  // re-admits — doc 4 is near doc 2 in CONTENT (jaccard 0.8) but 2000 ms
-  // away in event time, and near doc 3 in both (0.6, 500 ms)
-  private val probes4 = Seq(
-    TimedBandProbe("0_x", 1, T0, carrier = true, Array(1L, 2L, 3L)),
-    TimedBandProbe("0_x", 2, T0 + 500L, carrier = true, Array(1L, 2L, 3L, 4L)),
-    TimedBandProbe("0_x", 3, T0 + 2000L, carrier = true, Array(1L, 2L, 3L)),
-    TimedBandProbe("0_x", 4, T0 + 2500L, carrier = true,
-      Array(1L, 2L, 3L, 4L, 5L)))
-  private val expected4 = Map(1L -> false, 2L -> true, 3L -> false,
-    4L -> true)
-
-  private def runBand(groups: Seq[Seq[TimedBandProbe]],
-                      name: String): Map[Long, Boolean] = {
-    val in = MemoryStream[TimedBandProbe]
-    val q = StateMachines.bandKeepFirstEventTime(in.toDS(), 0.5, 1000,
-        1000L, 0L)
-      .writeStream.outputMode("append").format("memory")
-      .queryName(name).start()
-    try {
-      groups.foreach { g => in.addData(g: _*); q.processAllAvailable() }
-      spark.table(name).as[TimedBandVerdict].collect()
-        .groupMapReduce(_.doc_id)(_.near_dup)(_ || _)
-    } finally q.stop()
-  }
-
-  test("bandKeepFirstEventTime: near-dup verdicts are batch-grouping-" +
-      "invariant — a content near-dup outside the event-time horizon " +
-      "re-admits, inside it drops, under any replay slicing") {
-    val oneBatch = runBand(Seq(probes4), "bttl_one")
-    val perEvent = runBand(probes4.map(Seq(_)), "bttl_each")
-    val split = runBand(Seq(probes4.take(2), probes4.drop(2)), "bttl_split")
-    val batchMode = StateMachines.bandKeepFirstEventTime(probes4.toDS(),
-        0.5, 1000, 1000L, 0L)
-      .collect().groupMapReduce(_.doc_id)(_.near_dup)(_ || _)
-    assert(oneBatch == expected4, s"one-batch: $oneBatch")
-    assert(perEvent == expected4, s"per-event: $perEvent")
-    assert(split == expected4, s"split: $split")
-    assert(batchMode == expected4, s"batch-mode: $batchMode")
-  }
-
   test("gram store fails LOUD when two DIFFERENT documents share a doc_id " +
       "in one batch (the id keys the store — a silent overwrite would " +
       "corrupt later verifies)") {

@@ -47,7 +47,8 @@ class LogRegSpec extends SparkSpec {
   }
 
   test("historyFrame emits (round, w0_ppm..wk_ppm) in round order") {
-    val got = LogReg.history(df, "y", Seq("x1", "x2"), 3, 100000L)
+    val got = LogReg.historyFrame(spark,
+        LogReg.fit(df, "y", Seq("x1", "x2"), 3, 100000L)._1)
       .orderBy("round").collect()
     val want = handFit(rows, 3, 100000L)
     assert(got.map(_.getLong(0)).toSeq === Seq(1L, 2L, 3L))

@@ -180,27 +180,6 @@ class MultimodalSpec extends SparkSpec {
     assert(pairs == Set((1L, 2L, 0L)))
   }
 
-  test("imageDupJoin: cross-side pairs only, exact payload twins at " +
-      "hamming 0, fail-loud index bucket cap") {
-    def withTexts(rows: Seq[(Long, String)]) = rows.toDF("doc_id", "text")
-      .withColumn("img", Multimodal.fakeImageBytes(col("text"), lit(0L)))
-    val left = withTexts(Seq((1L, "same text"), (2L, "same text"),
-      (3L, "fresh content")))
-    val right = withTexts(Seq((100L, "same text"), (101L, "other body")))
-    val joined = Multimodal.imageDupJoin(left, right, "doc_id", "img",
-        "doc_id", "img", 0)
-      .as[(Long, Long, Long)].collect().toSet
-    // both identical LEFT payloads match the index twin; the (1,2)
-    // within-side pair must NOT appear — this is a cross join gate
-    assert(joined == Set((1L, 100L, 0L), (2L, 100L, 0L)))
-    val floodIdx = withTexts((100L to 104L).map(i => (i, "same text")))
-    val e = intercept[Exception] {
-      Multimodal.imageDupJoin(left, floodIdx, "doc_id", "img",
-        "doc_id", "img", 2, maxBucket = 3).collect()
-    }
-    assert(e.getMessage.contains("maxBucket"))
-  }
-
   test("videoDupPairs: shared-frame-signature counting with distinct " +
       "per-video frame sets; minShared filters single-frame overlap; " +
       "bucket flood fails loud") {

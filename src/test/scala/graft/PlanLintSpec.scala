@@ -21,6 +21,12 @@ import org.apache.spark.sql.functions._
   * as a regression gate instead of a review convention. */
 class PlanLintSpec extends SparkSpec {
 
+  /** Run `body` with `f` installed as PlanProbe's pre-checkpoint capture. */
+  private def withCapture[T](f: DataFrame => Unit)(body: => T): T = {
+    graft.operators.PlanProbe.capture = Some(f)
+    try body finally graft.operators.PlanProbe.capture = None
+  }
+
   /** All nodes of the plan, looking through AQE wrappers and subqueries. */
   private def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
     case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
@@ -51,6 +57,25 @@ class PlanLintSpec extends SparkSpec {
     // guard against the walker going vacuous again: 57 real plans have
     // hundreds of nodes between them
     assert(scanned > 500, s"plan walker saw only $scanned nodes — unwrap broken?")
+  }
+
+  test("the bucketed prefix scans keep their bucket window partitioned " +
+      "on an empty input and on an all-NULL ordering column") {
+    import spark.implicits._
+    val empty = Seq.empty[(Long, Long)].toDF("k", "n")
+    val nullOrd = Seq((1L, 2L), (2L, 3L)).toDF("id", "n")
+      .withColumn("k", lit(null).cast("long"))
+    Seq(empty, nullOrd).foreach { df =>
+      val windows = Seq(
+          graft.operators.CoreOps.orderedPrefixSum(df, col("k"),
+            df.columns.head, "n", "cum"),
+          graft.operators.CoreOps.orderedPrefixSumKeyed(df, lit(1L),
+            col("k"), df.columns.head, "n", "cum"))
+        .flatMap(r => nodes(r.queryExecution.executedPlan))
+        .collect { case w: WindowExec => w }
+      assert(windows.nonEmpty && windows.forall(_.partitionSpec.nonEmpty),
+        s"unpartitioned bucket window: ${windows.map(_.partitionSpec)}")
+    }
   }
 
   test("every StateMachines walk groups by the key column: no per-row " +
@@ -264,7 +289,7 @@ class PlanLintSpec extends SparkSpec {
       "q_token_lift" -> Set("doc_id", "text"))
     expected.foreach { case (name, cols) =>
       val captured = scala.collection.mutable.ArrayBuffer.empty[SparkPlan]
-      val finalPlan = graft.operators.PlanProbe.withCapture(df =>
+      val finalPlan = withCapture(df =>
         captured += df.queryExecution.executedPlan) {
         SparkEntry.queries(name)(spark, dir).queryExecution.executedPlan
       }

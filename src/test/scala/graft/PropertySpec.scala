@@ -167,9 +167,8 @@ class PropertySpec extends SparkSpec {
 
   test("property: the split band gate (ids-only buckets + doc-keyed gram " +
       "store) equals the brute-force lower-id shared-bucket jaccard " +
-      "verdict, and the event-time variant under an effectively infinite " +
-      "horizon agrees") {
-    import graft.streaming.{BandProbe, StateMachines, TimedBandProbe}
+      "verdict") {
+    import graft.streaming.{BandProbe, StateMachines}
     // random small gram sets from a 12-element universe, two buckets per
     // doc from two 6-bucket pools — dense enough that shared buckets,
     // true near-dups, AND empty-gram docs all occur
@@ -204,14 +203,7 @@ class PropertySpec extends SparkSpec {
       }.toMap
       val got = StateMachines.bandKeepFirst(probes.toDS(), 0.5, 1000)
         .collect().groupMapReduce(_.doc_id)(_.near_dup)(_ || _)
-      // the event-time variant with every pair inside the horizon must
-      // make the identical verdicts (ts ascending with id)
-      val tgot = StateMachines.bandKeepFirstEventTime(
-          probes.map(p => TimedBandProbe(p.bucket, p.doc_id,
-            1000000L + p.doc_id, p.carrier, p.sh)).toDS(),
-          0.5, 1000, 1000000000L, 0L)
-        .collect().groupMapReduce(_.doc_id)(_.near_dup)(_ || _)
-      got == expected && tgot == expected
+      got == expected
     })
   }
 

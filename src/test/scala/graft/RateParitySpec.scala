@@ -20,6 +20,11 @@ class RateParitySpec extends SparkSpec {
   import spark.implicits._
   implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
 
+  /** The bounded batch twin of auditRateStream: the identical records for
+    * row indices [0, n). */
+  private def auditBatch(n: Int): org.apache.spark.sql.DataFrame =
+    Generators.auditColumns(spark.range(n).toDF("value"), 1700000000000L)
+
   test("rate-source records equal the bounded batch twin on the captured slice") {
     val q = Generators.auditRateStream(spark, rowsPerBatch = 40)
       .writeStream.outputMode("append").format("memory").queryName("rate_slice").start()
@@ -31,13 +36,13 @@ class RateParitySpec extends SparkSpec {
     val captured = spark.table("rate_slice").cache()
     val n = captured.agg(max("id")).as[Int].head() + 1
     assert(n >= 120 && captured.count() == n) // contiguous slice, no gaps
-    val twin = Generators.auditBatch(spark, n)
+    val twin = auditBatch(n)
     assert(captured.exceptAll(twin).isEmpty && twin.exceptAll(captured).isEmpty,
       "captured stream slice differs from the deterministic batch twin")
   }
 
   private def slice(n: Int): Seq[(Int, String, String, Long)] =
-    Generators.auditBatch(spark, n)
+    auditBatch(n)
       .select(col("id"), col("user"), col("operation"), col("timestamp"))
       .as[(Int, String, String, Long)].collect().toSeq
 
@@ -62,7 +67,7 @@ class RateParitySpec extends SparkSpec {
         .filter(col("user") =!= "zz_sentinel")
         .as[(String, Long, Long, Long)].collect().toSet
       val batch = CoreOps.sessionSummary(
-          Generators.auditBatch(spark, 300)
+          auditBatch(300)
             .withColumn("event_time", timestamp_millis(col("timestamp"))),
           "user", "event_time", "1 second")
         .as[(String, Long, Long, Long)].collect().toSet
@@ -92,7 +97,7 @@ class RateParitySpec extends SparkSpec {
       }
       val streamed = spark.table("rate_join")
         .as[(String, Long, Int, Int)].collect().toSet
-      val batchAudit = Generators.auditBatch(spark, 300)
+      val batchAudit = auditBatch(300)
         .withColumn("event_time", timestamp_millis(col("timestamp")))
       val batch = CoreOps.windowJoin(side(batchAudit, "Create"), side(batchAudit, "Delete"),
           "user", "event_time", "10 seconds",

@@ -57,14 +57,4 @@ class StatefulTwinsSpec extends SparkSpec {
       .withColumn("ts", timestamp_millis(col("ms")))
     assert(StatefulTwins.withLateFlag(df, "ts", "arr", "event_id", 1000).count() == 0)
   }
-
-  test("eventTimeCount excludes late rows from the windowed count") {
-    val df = Seq(
-      (1L, 1000L, 100L), (2L, 5000L, 200L), (3L, 1500L, 300L) // row 3 late (see above)
-    ).toDF("event_id", "ms", "arr")
-      .withColumn("ts", timestamp_millis(col("ms")))
-    val got = StatefulTwins.eventTimeCount(df, "ts", "arr", "event_id", 1000, "10 seconds")
-      .as[(Long, Long, Long, Long)].collect.toSeq
-    assert(got == Seq((0L, 2L, 1000L, 5000L)))
-  }
 }

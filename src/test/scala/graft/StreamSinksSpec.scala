@@ -96,8 +96,9 @@ class StreamSinksSpec extends SparkSpec {
 
   test("observed() surfaces per-batch record counts in query progress (print-observer twin)") {
     val input = MemoryStream[KeyedEvent]
-    val q = StreamSinks.memory(
-      StreamSinks.observed(input.toDF(), "parsed"), "obs_t")
+    val q = StreamSinks.observed(input.toDF(), "parsed")
+      .writeStream.outputMode("append").format("memory").queryName("obs_t")
+      .start()
     try {
       input.addData(KeyedEvent("1", 1, 1, "a"), KeyedEvent("2", 2, 2, "b"))
       q.processAllAvailable()

@@ -304,30 +304,6 @@ class StreamingParitySpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("windowedUsersApprox finalizes windows == batch distinct (sparse-exact)") {
-    val batch1 = Seq(
-      KeyedEvent("1", 1000, 1, "a"), KeyedEvent("2", 1500, 2, "a"),
-      KeyedEvent("1", 2500, 3, "a")) // window [0,3s): 2 distinct keys
-    val batch2 = Seq( // watermark past 3s finalizes the first window
-      KeyedEvent("3", 9000, 4, "a"), KeyedEvent("3", 9500, 5, "a"),
-      KeyedEvent("1", 20000, 6, "a")) // pushes watermark past [9,12s) too
-    val input = MemoryStream[KeyedEvent]
-    val stream = input.toDF().withColumn("ts", timestamp_millis(col("tsMs")))
-    val q = StreamOps.windowedUsersApprox(stream, "key", "ts", "1 second",
-        "3 seconds")
-      .writeStream.outputMode("append").format("memory")
-      .queryName("wu_par").start()
-    try {
-      input.addData(batch1); q.processAllAvailable()
-      input.addData(batch2); q.processAllAvailable()
-      val got = spark.table("wu_par")
-        .select("window_start_ms", "n_events", "n_keys_approx")
-        .as[(Long, Long, Long)].collect().toSet
-      // HLL sparse mode is exact at these cardinalities → exact parity
-      assert(got == Set((0L, 3L, 2L), (9000L, 2L, 1L)))
-    } finally q.stop()
-  }
-
   test("windowedDriftEachBatch finalizes windows == categoricalDriftByGroup " +
       "on the same slice") {
     val ref = Seq("a", "b").toDF("kind") // 50/50 baseline mix
@@ -755,28 +731,6 @@ class StreamingParitySpec extends SparkSpec {
       val windows = spark.table("wm_cnt").select("window_start_ms")
         .as[Long].collect().toSet
       assert(windows == Set(100000L)) // no window materialized for the late 5s row
-    } finally q.stop()
-  }
-
-  test("streaming exact dedup keeps first occurrences, expires state past the watermark") {
-    val input = MemoryStream[(String, Long)]
-    val df = input.toDF().toDF("fp", "ts_ms")
-      .withColumn("ts", timestamp_millis(col("ts_ms")))
-    val q = StreamOps.dedupStream(df, Seq("fp"), "ts", "10 seconds")
-      .writeStream.outputMode("append").format("memory").queryName("dedup_s").start()
-    try {
-      input.addData(("a", 1000L), ("a", 2000L), ("b", 1000L)); q.processAllAvailable()
-      input.addData(("a", 3000L)); q.processAllAvailable() // within horizon → dropped
-      // an unrelated far-future key pushes the watermark past a's state…
-      input.addData(("c", 100000L)); q.processAllAvailable()
-      // …so a post-expiry duplicate re-emits (the documented bounded-state trade)
-      input.addData(("a", 200000L)); q.processAllAvailable()
-      val rows = spark.table("dedup_s").select("fp", "ts_ms")
-        .as[(String, Long)].collect().toSeq
-      assert(rows.count(_._1 == "a") == 2, s"got $rows")
-      assert(rows.contains(("a", 1000L)) && rows.contains(("b", 1000L)) &&
-        rows.contains(("a", 200000L)))
-      assert(!rows.contains(("a", 2000L)) && !rows.contains(("a", 3000L)))
     } finally q.stop()
   }
 
@@ -1473,40 +1427,6 @@ class StreamingParitySpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("curationFunnelStream: stage counts are invariant to the micro-" +
-      "batch split, and the cross-batch dedup state catches an exact dup " +
-      "and a near-dup that arrive in a LATER batch than their originals") {
-    import graft.streaming.StreamOps
-    val base = "the quick brown fox jumps over the lazy dog again and again"
-    val docs = Seq(
-      (1L, "en", base),                                // kept
-      (2L, "en", base + " extra"),                     // near-dup of 1 -> drop
-      (3L, "en", "completely different words here body text"), // kept
-      (4L, "en", base),                                // exact dup of 1 -> drop
-      (5L, "en", "another unrelated document body entirely fresh"), // kept
-      (6L, "en", null.asInstanceOf[String])            // no text -> not ingested
-    ).toDF("doc_id", "lang", "text")
-    val bench = docs.filter(col("doc_id") < 0) // empty benchmark
-    // trivial frozen artifacts: zero weights score everything 500000
-    // (pred true); single-char inventory segments any word; a +inf
-    // boundary keeps every scored doc — so stages 3-5 pass everything
-    // through and the test isolates the two genuinely STATEFUL gates
-    val vocab = ('a' to 'z').map(c => (c.toString, 1L)).toDF("piece", "cnt")
-    val zQ = graft.operators.Unigram.zOf(vocab)
-    val cuts = Map("en" -> ((Long.MaxValue, Long.MaxValue)))
-    def run(nBatches: Int) =
-      StreamOps.curationFunnelStream(spark, docs, bench,
-        Array(0L, 0L, 0L), vocab, zQ, cuts, 3, 8, 2, 0.5, 4, 0.05, 127L,
-        12, 4, nBatches)
-        .as[(Long, String, Long, Option[Long])].collect().toSeq.sortBy(_._1)
-    val whole = run(1)
-    val split = run(3) // doc 4 (exact dup) and doc 2's batch boundaries move
-    assert(whole == split, s"split-variant funnel: $whole vs $split")
-    assert(whole.map(r => (r._2, r._3)) == Seq(
-      ("ingested", 5L), ("exact_dedup", 4L), ("near_dedup", 3L),
-      ("decontaminated", 3L), ("quality_kept", 3L), ("ppl_head", 3L)))
-  }
-
   // ── the PRODUCTION funnel (FunnelPipeline): state-store gate 1,
   // bucket-keyed band-index state machine gate 2, durable stage/export stores ──
 
@@ -1522,7 +1442,7 @@ class StreamingParitySpec extends SparkSpec {
     (7L, "en", fpBase + " with more tacked on")        // near-dup of 1, LATER slice
   )
   private def fpConfig = {
-    // trivial frozen artifacts (the harness test's): zero weights score
+    // trivial frozen artifacts: zero weights score
     // everything 500000 (pred true); single-char inventory segments any
     // word; a +inf boundary keeps every scored doc — gates 3-5 pass all,
     // isolating the two genuinely STATEFUL gates

@@ -90,10 +90,6 @@ class SyntaxSpec extends SparkSpec {
     val docs = Seq((1L, "alpha beta gamma delta"),
       (2L, "alpha beta gamma delta"), (3L, "something else wholly"))
       .toDF("doc_id", "text")
-    assert(docs.blockingQualitySampled("doc_id", "text", 3, 8, 2, 1, 2, 1)
-        .head().toSeq ==
-      graft.operators.Dedup.blockingQualitySampled(docs, "doc_id", "text",
-        3, 8, 2, 1, 2, 1).head().toSeq)
     val imgs = docs.withColumn("img",
       graft.operators.Multimodal.fakeImageBytes(col("text"), lit(0L)))
     assert(imgs.imageDupPairs("doc_id", "img", 0).collect().toSet ==
@@ -251,10 +247,6 @@ class SyntaxSpec extends SparkSpec {
     val (oh, ow) = graft.operators.LogReg.fit(train, "y", Seq("x1", "x2"),
       2, 100000L)
     assert(fh.map(_.toSeq) == oh.map(_.toSeq) && fw.toSeq == ow.toSeq)
-    assert(train.logregHistory("y", Seq("x1", "x2"), 2, 100000L)
-        .collect().toSet ==
-      graft.operators.LogReg.history(train, "y", Seq("x1", "x2"),
-        2, 100000L).collect().toSet)
     assert(train.logregScore("y", Seq("x1", "x2"), ow, Seq.empty)
         .collect().toSet ==
       graft.operators.LogReg.score(train, "y", Seq("x1", "x2"), ow,

@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.{Dedup, TextOps}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 class TextAndDedupSpec extends SparkSpec {
@@ -172,7 +173,8 @@ class TextAndDedupSpec extends SparkSpec {
 
   test("simhash: equal texts collide, disjoint-vocabulary texts differ") {
     val df = Seq("alpha beta gamma", "alpha beta gamma", "delta epsilon zeta").toDF("text")
-    val got = df.select(Dedup.simhash(col("text"))).as[Long].collect()
+    val got = df.select(Dedup.simhashFromHashes(Dedup.tokenHashes(col("text"))))
+      .as[Long].collect()
     assert(got(0) == got(1) && got(0) != got(2))
   }
 
@@ -263,31 +265,6 @@ class TextAndDedupSpec extends SparkSpec {
     assert(got.forall { case (ch, _) =>
       !ch.exists(c => Character.isSurrogate(c)) || ch.codePointCount(0, ch.length) == 1
     })
-  }
-
-  test("dedupProfileApprox tracks the exact profile within the HLL error bound") {
-    val docs = Tables.documents(spark, "/root/testdata/sf0.001")
-    val rsd = 0.05
-    val exact = Dedup.dedupProfile(docs, "text", Seq("source", "lang"))
-      .select(col("source"), col("lang"), col("n_docs"), col("n_distinct"))
-      .as[(String, String, Long, Long)].collect()
-      .map { case (s, l, d, n) => (s, l) -> (d, n) }.toMap
-    val approx = Dedup.dedupProfileApprox(docs, "text", Seq("source", "lang"), rsd)
-      .select(col("source"), col("lang"), col("n_docs"), col("n_distinct_approx"))
-      .as[(String, String, Long, Long)].collect()
-      .map { case (s, l, d, n) => (s, l) -> (d, n) }.toMap
-    assert(approx.keySet == exact.keySet)
-    approx.foreach { case (k, (nDocs, est)) =>
-      val (exactDocs, exactDistinct) = exact(k)
-      assert(nDocs == exactDocs) // plain counts are exact in both forms
-      // HLL++ is within ~3·rsd relative error with overwhelming probability;
-      // Spark's implementation is dense-only (no sparse exact mode), so tiny
-      // groups can additionally be off by a count or two absolute
-      val absErr = math.abs(est - exactDistinct)
-      val relErr = absErr.toDouble / exactDistinct
-      assert(relErr <= 3 * rsd || absErr <= 2,
-        s"group $k: approx $est vs exact $exactDistinct")
-    }
   }
 
   test("dedupProfileChecked: verdict uniformly true, exact side identical to dedupProfile") {
@@ -623,6 +600,20 @@ class TextAndDedupSpec extends SparkSpec {
     assert(msgs(e).exists(_.contains("jaccardAllPairs")))
   }
 
+  /** The blocker audit at k=3, 8 bands × 2 rows, truth at Jaccard ≥ 1/2. */
+  private def blockingQuality(docs: DataFrame): DataFrame =
+    Dedup.blockingQualityFrom(
+      Dedup.jaccardAllPairs(docs, "doc_id", "text", 3, 1, 2)
+        .select(col("doc_a"), col("doc_b")).localCheckpoint(true),
+      docs, "doc_id", "text", 3, 8, 2)
+
+  private def blockingQualitySampled(docs: DataFrame,
+                                     sampleMod: Int): DataFrame =
+    Dedup.blockingQualitySampledFrom(
+      Dedup.jaccardAllPairsSampled(docs, "doc_id", "text", 3, 1, 2,
+        sampleMod).localCheckpoint(true),
+      docs, "doc_id", "text", 3, 8, 2, sampleMod)
+
   test("blockingQuality grades banding against all-pairs truth: generous " +
       "bands catch the exact dup; counts and ratios are exact") {
     val docs = Seq(
@@ -631,8 +622,7 @@ class TextAndDedupSpec extends SparkSpec {
       (3L, "totally different words entirely here"),
       (4L, "yet another unrelated document body"))
       .toDF("doc_id", "text")
-    val r = Dedup.blockingQuality(docs, "doc_id", "text", 3, 8, 2, 1, 2)
-      .collect().head
+    val r = blockingQuality(docs).collect().head
     val (nDocs, nPossible, nCand, nTrue, nCaught) =
       (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))
     assert(nDocs == 4L && nPossible == 6L)
@@ -650,14 +640,11 @@ class TextAndDedupSpec extends SparkSpec {
       (3L, "totally different words entirely here"),
       (4L, "yet another unrelated document body"))
       .toDF("doc_id", "text")
-    val exact = Dedup.blockingQuality(docs, "doc_id", "text", 3, 8, 2, 1, 2)
-      .collect().head
-    val full = Dedup.blockingQualitySampled(docs, "doc_id", "text",
-      3, 8, 2, 1, 2, 1).collect().head
+    val exact = blockingQuality(docs).collect().head
+    val full = blockingQualitySampled(docs, 1).collect().head
     assert(full.toSeq.init == exact.toSeq) // same row, plus the denominator
     assert(full.getLong(7) == 1L)
-    val sliced = Dedup.blockingQualitySampled(docs, "doc_id", "text",
-      3, 8, 2, 1, 2, 3).collect().head
+    val sliced = blockingQualitySampled(docs, 3).collect().head
     assert(sliced.getLong(7) == 3L)
     assert(sliced.getLong(0) <= exact.getLong(0)) // audits a subset
     // the slice is the deterministic md5 decision, not a row sample
@@ -809,13 +796,13 @@ class TextAndDedupSpec extends SparkSpec {
     //            abab = [ab,ab]
     //   round 3: (aa,aa) 2 beats (ab,ab) 1 -> aaaa = [aaaa]
     val docs = Seq("aaaa abab", "AAAA!").toDF("text")
-    val m = TextOps.bpeMerges(docs, "text", 3)
-      .orderBy("merge_rank").collect()
+    val (merges, segments) = TextOps.bpeLearn(docs, "text", 3)
+    val m = merges.orderBy("merge_rank").collect()
     assert(m.map(r => (r.getLong(0), r.getString(1), r.getString(2),
       r.getString(3), r.getLong(4))).toSeq == Seq(
       (1L, "a", "a", "aa", 6L), (2L, "a", "b", "ab", 2L),
       (3L, "aa", "aa", "aaaa", 2L)))
-    val seg = TextOps.bpeSegments(docs, "text", 3).collect()
+    val seg = segments.collect()
       .map(r => r.getString(0) -> (r.getLong(2), r.getString(3))).toMap
     assert(seg == Map("aaaa" -> ((1L, "aaaa")), "abab" -> ((2L, "ab ab"))))
   }
@@ -824,7 +811,7 @@ class TextAndDedupSpec extends SparkSpec {
       "weighted token total as merge rounds deepen") {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     val totals = (1 to 4).map { iters =>
-      val seg = TextOps.bpeSegments(docs, "text", iters).collect()
+      val seg = TextOps.bpeLearn(docs, "text", iters)._2.collect()
       // every word is exactly its pieces re-concatenated
       seg.foreach { r =>
         assert(r.getString(3).replace(" ", "") == r.getString(0))
@@ -836,7 +823,7 @@ class TextAndDedupSpec extends SparkSpec {
     // pair space exhaustion fails loud, never silently under-merges
     val tiny = Seq("q w e").toDF("text")
     val e = intercept[IllegalArgumentException](
-      TextOps.bpeMerges(tiny, "text", 2).collect())
+      TextOps.bpeLearn(tiny, "text", 2)._1.collect())
     assert(e.getMessage.contains("pair space exhausted"))
   }
 
@@ -974,7 +961,8 @@ class TextAndDedupSpec extends SparkSpec {
     // zh: one aaaa = 1 word, 1 piece -> 1.0
     val docs = Seq(("aaaa abab", "en"), ("AAAA!", "zh"))
       .toDF("text", "lang")
-    val f = TextOps.bpeFertility(docs, "text", "lang", 3).collect()
+    val f = TextOps.bpeFertilityFrom(docs, "text", "lang",
+        TextOps.bpeLearn(docs, "text", 3)._2).collect()
       .map(r => r.getString(0) ->
         ((r.getLong(1), r.getLong(2), r.getDouble(3)))).toMap
     assert(f == Map("en" -> ((2L, 3L, 1.5)), "zh" -> ((1L, 1L, 1.0))))
