@@ -5168,7 +5168,8 @@ object SparkEntry {
       // count is sized for overhead, not volume (FunnelConfig's sizing
       // rule; the session's 32 CPU-oriented shuffle partitions would pay
       // 8x the per-store open/commit tax for no parallelism the tiny
-      // batches can use). Round-16 A/B at sf0.1/32 (FunnelProfile):
+      // batches can use). Round-16 A/B at sf0.1/32 (`BenchProfile
+      // _build:funnel_pipeline`):
       // 8 stores = 6.5+4.5s triggers, 4 = 6.0+4.2s (commit 1.7->0.6s),
       // 2 = 6.3+4.8s (update parallelism lost) — 4 is the measured
       // optimum for this state volume; a 100 TB deployment sizes UP from
@@ -6008,7 +6009,8 @@ uvoc$r AS MATERIALIZED (SELECT c.piece, coalesce(u.cnt, 0)::BIGINT AS cnt
   }
 
   /** MinHash signature pipeline (norm → tokens → shingles → hashes → sig) as
-    * DuckDB CTEs, mirroring Dedup.minhashSignature hash-for-hash. */
+    * DuckDB CTEs, mirroring Dedup.minhashFromHashes over
+    * Dedup.shingleHashes hash-for-hash. */
   private def sqlMinhashCtes: String = sqlMinhashCtesOver("documents")
 
   /** The MinHash CTE chain over a caller-chosen relation (the

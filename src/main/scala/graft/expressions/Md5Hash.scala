@@ -175,6 +175,10 @@ object Md5Expressions {
   /** Column wrappers (work everywhere, including inside HOF lambdas). */
   def md5Int(c: Column): Column =
     GraftColumnBridge.column(Md5Int(GraftColumnBridge.expression(c)))
+  /** 64-bit integer hash of any string column, derived from md5 (first 15
+    * hex chars → always non-negative, < 2^60). Cross-engine reproducible,
+    * unlike Spark's murmur3 `hash()` / DuckDB's `hash()`; bit-identical to
+    * conv(substring(md5(c),1,15),16,10) without the hex round trip. */
   def md5Long(c: Column): Column =
     GraftColumnBridge.column(Md5Long(GraftColumnBridge.expression(c)))
   def md5Words(c: Column): Column =

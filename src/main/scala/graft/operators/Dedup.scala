@@ -17,18 +17,11 @@ import org.apache.spark.sql.functions._
   */
 object Dedup {
 
-  /** 64-bit integer hash of any string column, derived from md5 (first 15 hex
-    * chars → always non-negative, < 2^60). Cross-engine reproducible, unlike
-    * Spark's murmur3 `hash()` / DuckDB's `hash()`. Backed by the native
-    * codegen'd expression (graft.expressions.Md5Long) — bit-identical to
-    * conv(substring(md5(c),1,15),16,10) without the hex round trip. */
-  def md5Long(c: Column): Column = graft.expressions.Md5Expressions.md5Long(c)
-
-  /** 32-bit variant (first 8 hex chars, < 2^32). Used wherever the hash is
-    * multiplied by another constant: the product stays < 2^48, so the same
-    * arithmetic is exact int64 in every engine (no silent Java wraparound,
-    * no DuckDB overflow error). Native expression, same value as
-    * conv(substring(md5(c),1,8),16,10). */
+  /** 32-bit variant of `Md5Expressions.md5Long` (first 8 hex chars,
+    * < 2^32). Used wherever the hash is multiplied by another constant: the
+    * product stays < 2^48, so the same arithmetic is exact int64 in every
+    * engine (no silent Java wraparound, no DuckDB overflow error). Native
+    * expression, same value as conv(substring(md5(c),1,8),16,10). */
   def md5Int(c: Column): Column = graft.expressions.Md5Expressions.md5Int(c)
 
   /** Exact dedup: group by the normalized-text fingerprint, keep the smallest
@@ -119,11 +112,6 @@ object Dedup {
     }
     array(sigs: _*)
   }
-
-  /** One-shot convenience form (hash + permute in a single expression) — for
-    * small inputs/tests; pipelines should stage via shingleHashes. */
-  def minhashSignature(text: Column, k: Int, numHashes: Int): Column =
-    minhashFromHashes(shingleHashes(text, k), numHashes)
 
   /** Winnowing document fingerprints (the MOSS rolling-hash scheme): one row
     * per selected k-gram hash, where selection takes each w-window's minimum
@@ -621,7 +609,8 @@ object Dedup {
 
   /** Interpreted Column form of tokenHashes — HashKernelSpec oracle. */
   private[graft] def tokenHashesColumnForm(text: Column): Column =
-    transform(TextOps.tokens(text), t => md5Long(t))
+    transform(TextOps.tokens(text),
+      t => graft.expressions.Md5Expressions.md5Long(t))
 
   /** SimHash from a materialized token-hash array: bit j of the output is
     * the sign of the sum over tokens of (+1 if bit j of the hash else -1).

@@ -26,7 +26,7 @@ object Similarity {
     * oracle-reproducible instead of ulp-flaky. Runs as a native codegen'd
     * kernel (graft.expressions.DotFold); the aggregate/zip_with Column form
     * evaluated interpreted, three tree-walks per cosine. */
-  def dot(a: Column, b: Column): Column =
+  private[graft] def dot(a: Column, b: Column): Column =
     graft.expressions.VectorKernelExpressions.dotFold(a, b)
 
   /** Interpreted Column form of dot — VectorKernelSpec's bit-parity oracle
@@ -35,7 +35,7 @@ object Similarity {
     aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
       lit(0.0d), (acc, v) => acc + v)
 
-  def norm(a: Column): Column = sqrt(dot(a, a))
+  private[graft] def norm(a: Column): Column = sqrt(dot(a, a))
 
   private[graft] def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
 
@@ -159,8 +159,8 @@ object Similarity {
     * sign — and therefore the bucket — is engine-independent. `planeOffset`
     * selects an independent plane family (offset plane indices), the
     * multi-table recall knob used by lshTopKMulti. */
-  def hyperplaneSig(vec: Column, dims: Int, planes: Int,
-                    planeOffset: Int = 0): Column =
+  private[graft] def hyperplaneSig(vec: Column, dims: Int, planes: Int,
+                                   planeOffset: Int = 0): Column =
     graft.expressions.VectorKernelExpressions.hyperplaneSig(vec,
       planeMatrix(planeOffset, planes, dims))
 

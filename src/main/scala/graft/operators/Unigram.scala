@@ -50,8 +50,8 @@ object Unigram {
 
   /** Freq-weighted substring counts with multiplicity, lengths
     * 1..maxPieceLen — the seed statistics. */
-  def candidates(wordsDf: DataFrame, maxWordLen: Int,
-                 maxPieceLen: Int): DataFrame =
+  private[graft] def candidates(wordsDf: DataFrame, maxWordLen: Int,
+                                maxPieceLen: Int): DataFrame =
     wordsDf
       .select(col("word"), col("freq"),
         explode(sequence(lit(0), lit(maxWordLen - 1))).as("s"))

@@ -46,8 +46,9 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
   * (Spark's own state-partitioning contract). Sizing: each stateful
   * operator opens one store per partition per trigger, and every store
   * pays a fixed open/commit overhead regardless of how few rows it
-  * touches (measured via tools/FunnelProfile: 3 operators × 32 stores at
-  * ~80 rows each were commit-overhead-bound). Pick the partition count
+  * touches (measured via `BenchProfile _build:funnel_pipeline`:
+  * 3 operators × 32 stores at ~80 rows each were
+  * commit-overhead-bound). Pick the partition count
   * from TARGET STATE SIZE (~0.5–2 GB of state per store is comfortable
   * for RocksDB), not from the session's CPU-oriented shuffle setting —
   * a 100 TB deployment wants hundreds of partitions, a bench-scale
@@ -266,11 +267,12 @@ object FunnelPipeline {
     // full SST set synchronously — snapshots move to the background
     // maintenance thread. With three stateful operators × the state
     // partition count, synchronous per-batch snapshots are the dominant
-    // commit cost (measured via tools/FunnelProfile: commitTimeMs was
-    // ~3× allUpdatesTimeMs per trigger); a changelog commit is O(batch
-    // changes), the scale-correct shape for corpus-sized state. Restart
-    // compatibility is Spark's own: the checkpoint records per-version
-    // format and replays changelogs over the last background snapshot.
+    // commit cost (measured via `BenchProfile _build:funnel_pipeline`:
+    // commitTimeMs was ~3× allUpdatesTimeMs per trigger); a changelog
+    // commit is O(batch changes), the scale-correct shape for
+    // corpus-sized state. Restart compatibility is Spark's own: the
+    // checkpoint records per-version format and replays changelogs over
+    // the last background snapshot.
     spark.conf.set(ChangelogKey, "true")
     try {
       val writer = verdicts.toDF()
@@ -355,8 +357,8 @@ object FunnelPipeline {
     * already-deduped corpus re-listed is fine); conflicting contents
     * under one id fail loud — the id keys the store, exactly the gram
     * machine's own contract. */
-  def gramSeeds(docs: DataFrame,
-                cfg: FunnelConfig): Dataset[graft.streaming.GramSeed] = {
+  private def gramSeeds(docs: DataFrame,
+                        cfg: FunnelConfig): Dataset[graft.streaming.GramSeed] = {
     val guard = assert_true(col("_nd") === 1,
       concat(lit("gramSeeds: doc_id "), col("gkey"),
         lit(" carries conflicting gram sets in the bootstrap corpus — " +

@@ -1,6 +1,7 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
+import org.apache.spark.sql.streaming.StreamingQueryListener
 
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
@@ -8,9 +9,17 @@ import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
   * Spark-side job/stage/task counts and summed task time, so a slow entry
   * can be attributed to "many small jobs" (fixed per-action overhead:
   * driver rounds, codegen, scheduling) vs "few heavy stages" (real
-  * compute/shuffle). Mirrors Bench's environment exactly (same master,
-  * shuffle partitions, memoized-build-first ordering) but runs ONE pass
-  * and never records; purely a diagnosis tool.
+  * compute/shuffle). Mirrors Bench's environment (same defaults, master,
+  * shuffle partitions, memoized-build-first ordering, each `_build:*`
+  * timed once from cold) but runs ONE pass and never records; purely a
+  * diagnosis tool.
+  *
+  * Streaming builds (`_build:funnel_pipeline`) also print one line per
+  * trigger with rows in: Spark's StreamingQueryProgress `durationMs`
+  * phases (addBatch = the whole foreachBatch body; the rest is source
+  * discovery, offset log and state commit) and each stateful operator's
+  * update/commit times and state size — which phase of a trigger the
+  * build's seconds go to.
   *
   * Usage: SPARK_GRAFT_SF_DIR=... SPARK_GRAFT_CPUS=... \
   *   sbt "runMain graft.tools.BenchProfile [entry,entry,...]"
@@ -18,10 +27,10 @@ import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
   */
 object BenchProfile {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val only = args.headOption.map(_.split(",").toSet)
     val spark = graft.Session.local(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt)
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     val jobs = new AtomicInteger(0)
     val stages = new AtomicInteger(0)
     val tasks = new AtomicInteger(0)
@@ -83,6 +92,26 @@ object BenchProfile {
         }
       }
     })
+    spark.streams.addListener(new StreamingQueryListener {
+      override def onQueryStarted(
+          e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+      override def onQueryTerminated(
+          e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+      override def onQueryProgress(
+          e: StreamingQueryListener.QueryProgressEvent): Unit = {
+        val p = e.progress
+        if (p.numInputRows > 0) {
+          println(f"TRIGGER batch=${p.batchId}%-2d rows=${p.numInputRows}%-6d " +
+            s"durationMs=${p.durationMs}")
+          p.stateOperators.zipWithIndex.foreach { case (so, i) =>
+            println(f"  state[$i] ${so.operatorName}%-28s " +
+              f"rowsUpd=${so.numRowsUpdated}%-6d updMs=${so.allUpdatesTimeMs}%-5d " +
+              f"commitMs=${so.commitTimeMs}%-5d keys=${so.numRowsTotal}%-6d " +
+              f"memUsed=${so.memoryUsedBytes}")
+          }
+        }
+      }
+    })
     def reset(): Unit = { jobs.set(0); stages.set(0); tasks.set(0)
       taskMs.set(0); shufW.set(0) }
     def report(name: String, wallS: Double): Unit = {
@@ -98,8 +127,6 @@ object BenchProfile {
       body
       report(name, (System.nanoTime() - t0) / 1e9)
     }
-    graft.SparkEntry.jvmWarmup(spark) // mirror Bench: untimed startup absorb
-    reset()
     graft.SparkEntry.builds
       .filter { case (n, _) => only.forall(_.contains(s"_build:$n")) }
       .foreach { case (name, fn) =>

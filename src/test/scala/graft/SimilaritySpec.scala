@@ -227,6 +227,20 @@ class SimilaritySpec extends SparkSpec {
     assert(lsh.forall { case (q, _, n) => q != n })
   }
 
+  test("multi-table LSH recall is a superset of single-table recall") {
+    val vecs = (0 until 40).map { i =>
+      (i.toLong, Seq.tabulate(8)(d => (math.sin(i * 37 + d) * 10).toFloat))
+    }.toDF("vec_id", "embedding")
+    def pairs(df: org.apache.spark.sql.DataFrame) =
+      df.select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
+    val single = pairs(Similarity.lshTopK(
+      vecs, vecs, "vec_id", "embedding", 8, 6, 40))
+    val multi = pairs(Similarity.lshTopKMulti(
+      vecs, vecs, "vec_id", "embedding", 8, 6, 40, 3))
+    assert(single.subsetOf(multi), "multi-table candidates must contain table 0's")
+    assert(multi.size >= single.size)
+  }
+
   test("ivfTopK searches only probed cells and finds the planted neighbor") {
     // cells are seeded by vecs 0 and 1 (orthogonal); vec 2 ≈ vec 0's cell,
     // vec 3 ≈ vec 1's cell — probing 1 cell must still find the same-cell

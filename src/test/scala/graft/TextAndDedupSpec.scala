@@ -141,7 +141,8 @@ class TextAndDedupSpec extends SparkSpec {
   test("minhash signatures: identical texts identical, length = numHashes, within field") {
     val df = Seq((1L, "spark flink join window agg"), (2L, "spark flink join window agg"),
       (3L, "completely different words here now")).toDF("doc_id", "text")
-    val sigs = df.select(Dedup.minhashSignature(col("text"), 3, 16)).as[Seq[Long]].collect()
+    val sigs = df.select(Dedup.minhashFromHashes(Dedup.shingleHashes(col("text"), 3), 16))
+      .as[Seq[Long]].collect()
     assert(sigs.forall(_.size == 16))
     assert(sigs.forall(_.forall(v => v >= 0 && v < 2147483647L)))
     assert(sigs(0) == sigs(1) && sigs(0) != sigs(2))
@@ -265,6 +266,21 @@ class TextAndDedupSpec extends SparkSpec {
     assert(got.forall { case (ch, _) =>
       !ch.exists(c => Character.isSurrogate(c)) || ch.codePointCount(0, ch.length) == 1
     })
+  }
+
+  test("tokenStats emits one row per document with exact token and char counts") {
+    val docs = Seq((1L, "the cat sat"), (2L, "the cat sat")).toDF("doc_id", "text")
+    val got = TextOps.tokenStats(docs, "doc_id", "text")
+    assert(got.count() == 2)
+    assert(got.as[(Long, Long, Long, Long)].collect().toSet ==
+      Set((1L, 3L, 11L, 9L), (2L, 3L, 11L, 9L)))
+  }
+
+  test("dedupProfile counts identical docs once within their dims group") {
+    val docs = Seq((1L, "the cat sat"), (2L, "the cat sat")).toDF("doc_id", "text")
+      .withColumn("source", lit("s")).withColumn("lang", lit("en"))
+    assert(Dedup.dedupProfile(docs, "text", Seq("source", "lang"))
+      .select("n_docs", "n_distinct").as[(Long, Long)].head() == ((2L, 1L)))
   }
 
   test("dedupProfileChecked: verdict uniformly true, exact side identical to dedupProfile") {
